@@ -105,22 +105,23 @@ def split_prefix(uri: str) -> tuple[str, str]:
 # Column-expression variant of split_prefix; usable in pure-SQL plans
 # (the Turtle writer and the predicate dictionary need it at scale).
 # '#' splits FIRST like the reference (argo.go:221-225) — a '/' after
-# the last '#' belongs to the local name.
+# the last '#' belongs to the local name. Plain string scans (instr,
+# substring_index) rather than backtracking regexes: the split runs for
+# every IRI a Turtle sink writes.
 
 
 def split_prefix_base(uri: Column) -> Column:
     """Base part of split_prefix as a column expression ('' if no # or /)."""
-    hash_base = F.regexp_extract(uri, r"^(.*#)", 1)
-    slash_base = F.regexp_extract(uri, r"^(.*/)", 1)
-    return F.when(hash_base != "", hash_base).otherwise(slash_base)
+    return uri.substr(F.lit(1), F.length(uri) - F.length(split_prefix_local(uri)))
 
 
 def split_prefix_local(uri: Column) -> Column:
     """Local part of split_prefix as a column expression."""
-    return F.when(
-        F.regexp_extract(uri, r"^(.*#)", 1) != "",
-        F.regexp_extract(uri, r"([^#]*)$", 1),
-    ).otherwise(F.regexp_extract(uri, r"([^/]*)$", 1))
+    return (
+        F.when(F.instr(uri, "#") > 0, F.substring_index(uri, "#", -1))
+        .when(F.instr(uri, "/") > 0, F.substring_index(uri, "/", -1))
+        .otherwise(uri)
+    )
 
 
 def prefixes_df(spark):

@@ -64,15 +64,23 @@ def _prefix_map_col(prefixes: dict[str, str]) -> Column:
     return F.create_map(*pairs)
 
 
+# A conservative subset of Turtle's PN_LOCAL that extract/turtle.py
+# lexes back as the same local name: ASCII word chars, inner '.' and
+# '-', no leading '.'/'-' and no trailing '.' (statement punctuation).
+_PN_LOCAL_SAFE = r"^([A-Za-z0-9_]([A-Za-z0-9_.-]*[A-Za-z0-9_-])?)?$"
+
+
 def _qname_or_iri(value: Column, pmap: Column) -> Column:
     """Turtle term encoding for IRIs: ``prefix:local`` when the
-    split_prefix base is bound, else ``<uri>``
-    (turtleserializer.go:18-27)."""
-    base = split_prefix_base(value)
+    split_prefix base is bound (turtleserializer.go:18-27) AND the
+    local is a safe PN_LOCAL, else ``<uri>``. The reference abbreviates
+    unconditionally, so ``dbp:London_(England)`` would not re-parse;
+    we diverge as the Squirtle writer does (_local_is_safe)."""
     local = split_prefix_local(value)
-    prefix = F.element_at(pmap, base)
+    prefix = F.element_at(pmap, split_prefix_base(value))
     return F.when(
-        prefix.isNotNull(), F.concat(prefix, F.lit(":"), local)
+        prefix.isNotNull() & local.rlike(_PN_LOCAL_SAFE),
+        F.concat(prefix, F.lit(":"), local),
     ).otherwise(F.concat(F.lit("<"), value, F.lit(">")))
 
 
@@ -149,21 +157,37 @@ def turtle_string(
     return turtle_header(prefixes) + "\n".join(sorted(r.block for r in rows))
 
 
+def _write_driver_file(spark, path: str, text: str) -> None:
+    """Write ``text`` as one UTF-8 file from the driver through the
+    Hadoop FileSystem API, so it lands on the same filesystem as the
+    part files (hdfs://, s3a://, file:…) without starting a Spark job.
+    Whatever is already at ``path`` is replaced, including a directory
+    (the sidecar layout of older writes), as ``mode="overwrite"`` would."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs.delete(hpath, True)
+    out = fs.create(hpath, False)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
 def write_turtle(
     df: DataFrame, path: str, prefixes: Optional[dict[str, str]] = None,
     mode: str = "overwrite",
 ) -> None:
     """Distributed Turtle: block rows as text (each row ends with the
     inter-block blank line once .text appends its newline); the prefix
-    header goes to ``<path>/_PREFIXES.ttl`` part."""
+    header goes to the ``<path>._prefixes`` sidecar file, since a
+    distributed write cannot say which part file comes first."""
     turtle_blocks(df, prefixes).select(F.col("block").alias("value")).write.mode(
         mode
     ).text(path)
-    # header as a sidecar written via the same FS the writer used
-    spark = df.sparkSession
-    spark.createDataFrame(
-        [(turtle_header(prefixes).rstrip("\n"),)], "value string"
-    ).coalesce(1).write.mode("overwrite").text(path.rstrip("/") + "._prefixes")
+    _write_driver_file(
+        df.sparkSession, path.rstrip("/") + "._prefixes",
+        turtle_header(prefixes).rstrip("\n") + "\n",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -244,10 +268,10 @@ def write_trig(
     trig_blocks(df, prefixes).select(F.col("block").alias("value")).write.mode(
         mode
     ).text(path)
-    spark = df.sparkSession
-    spark.createDataFrame(
-        [(turtle_header(prefixes).rstrip("\n"),)], "value string"
-    ).coalesce(1).write.mode("overwrite").text(path.rstrip("/") + "._prefixes")
+    _write_driver_file(
+        df.sparkSession, path.rstrip("/") + "._prefixes",
+        turtle_header(prefixes).rstrip("\n") + "\n",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -631,19 +655,7 @@ def write_select_tsv(bindings: DataFrame, path: str,
     """Distributed SPARQL-TSV export: data rows as text part files
     plus a driver-written ``_VARS`` sidecar holding the tab-joined
     ``?var`` header (the spec's first line; kept out of the part
-    files so parallel writes stay order-independent). The sidecar
-    goes through the Hadoop FileSystem API so it lands on the SAME
-    filesystem as the part files (hdfs://, s3a://, file:…) — a local
-    open() would silently write elsewhere for non-local URIs."""
+    files so parallel writes stay order-independent)."""
     header = "\t".join("?" + c for c in bindings.columns)
     select_tsv_lines(bindings).write.mode(mode).text(path)
-    spark = bindings.sparkSession
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path, "_VARS")
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray((header + "\n").encode("utf-8")))
-    finally:
-        out.close()
+    _write_driver_file(bindings.sparkSession, path.rstrip("/") + "/_VARS", header + "\n")

@@ -300,8 +300,12 @@ class _MemberGzipReader:
                 if not self._buf and not self._fill():
                     break  # clean EOF at a member boundary
                 self._dec = zlib.decompressobj(31)
+            # cap at what the caller still wants: read(n) returns at
+            # most n bytes (file-object contract); the rest stays in
+            # unconsumed_tail for the next call
+            limit = _STREAM_CHUNK if n < 0 else min(_STREAM_CHUNK, n - len(out))
             try:
-                chunk = self._dec.decompress(self._buf, _STREAM_CHUNK)
+                chunk = self._dec.decompress(self._buf, limit)
             except zlib.error as e:
                 self._error = OSError(f"invalid gzip data: {e}")
                 continue

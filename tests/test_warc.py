@@ -318,6 +318,40 @@ def test_streaming_parse_gzip_members():
     assert len(rows) == 9 and "gzip" in err.lower()
 
 
+def test_member_gzip_reader_read_n_is_capped():
+    """read(n) returns at most n bytes (it used to hand out a whole
+    decompressed chunk), and chunked reads concatenate to the full
+    multi-member payload."""
+    import io
+    import random
+
+    from argo_spark.sources.warc import _MemberGzipReader
+
+    rng = random.Random(5)
+    parts = [
+        b"warc " * 3000,
+        bytes(rng.randrange(256) for _ in range(8000)),
+        b"",
+        "caf\u00e9 ".encode() * 500,
+    ]
+    payload = b"".join(parts)
+    members = b"".join(gzip.compress(p) for p in parts)
+    for sizes in ([1, 10, 4096], [rng.randint(1, 3000) for _ in range(40)]):
+        reader = _MemberGzipReader(io.BytesIO(members))
+        got = bytearray()
+        i = 0
+        while True:
+            n = sizes[i % len(sizes)]
+            i += 1
+            chunk = reader.read(n)
+            assert len(chunk) <= n, (n, len(chunk))
+            if not chunk:
+                break
+            got += chunk
+        assert bytes(got) == payload
+    assert _MemberGzipReader(io.BytesIO(members)).read() == payload
+
+
 def test_wet_invalid_utf8_is_replaced_not_fatal(spark, tmp_path):
     """docs_from_wet must never crash on a dirty WET payload: invalid
     UTF-8 bytes decode with U+FFFD substitution (the extractors'

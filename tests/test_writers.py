@@ -97,10 +97,21 @@ def test_rdfxml_layout(spark):
     assert out.endswith("  </ex:Thing>\n</rdf:RDF>\n")
 
 
-def test_split_prefix_columns_match_python(spark):
+def _column_split(spark, uris):
     from pyspark.sql import functions as F
 
-    from argo_spark.namespaces import split_prefix, split_prefix_base, split_prefix_local
+    from argo_spark.namespaces import split_prefix_base, split_prefix_local
+
+    df = spark.createDataFrame([(u,) for u in uris], "uri string")
+    return df.select(
+        "uri",
+        split_prefix_base(F.col("uri")).alias("b"),
+        split_prefix_local(F.col("uri")).alias("l"),
+    ).collect()
+
+
+def test_split_prefix_columns_match_python(spark):
+    from argo_spark.namespaces import split_prefix
 
     uris = [
         "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
@@ -109,16 +120,116 @@ def test_split_prefix_columns_match_python(spark):
         "http://e/a#b/c",  # '/' after last '#': '#' wins (argo.go:221-225)
         "http://e/#",
         "http://e/a#b#c",
+        "http://e/a#b#c#d",
         "x/",
+        "",
+        "#",
+        "/",
+        "http://e/a#",
+        "http://e/caf\u00e9",
+        "http://e/\u00e9#\u4e2d\u6587",
+        "http://e/\U0001f600/x\U0001f600",
     ]
-    df = spark.createDataFrame([(u,) for u in uris], "uri string")
-    rows = df.select(
-        "uri",
-        split_prefix_base(F.col("uri")).alias("b"),
-        split_prefix_local(F.col("uri")).alias("l"),
-    ).collect()
+    rows = _column_split(spark, uris + [None])
     for r in rows:
-        assert (r.b, r.l) == split_prefix(r.uri), r.uri
+        if r.uri is None:
+            assert (r.b, r.l) == (None, None)
+        else:
+            assert (r.b, r.l) == split_prefix(r.uri), r.uri
+    assert len(rows) == len(uris) + 1
+
+
+def test_split_prefix_columns_property(spark):
+    """Column split == split_prefix for any text over an alphabet of
+    the separators, letters and non-ASCII (BMP and astral) chars."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from argo_spark.namespaces import split_prefix
+
+    @given(st.lists(st.text("#/:ab\u00e9\U0001f600", max_size=12), min_size=1, max_size=40))
+    @settings(max_examples=25, deadline=None)
+    def check(uris):
+        for r in _column_split(spark, uris):
+            assert (r.b, r.l) == split_prefix(r.uri), r.uri
+
+    check()
+
+
+def test_write_turtle_unsafe_locals_round_trip(spark, tmp_path):
+    """Locals outside the safe PN_LOCAL subset (parentheses, %-escapes,
+    a trailing or leading dot, non-ASCII) come out as <iri>, so every
+    part file re-parses to the input set. The reference would write
+    dbp:London_(England), which no Turtle parser accepts."""
+    from pyspark.sql import functions as F
+
+    from argo_spark.extract.turtle import parse_turtle_col
+    from argo_spark.sinks.writers import write_turtle
+    from argo_spark.terms import KIND_BLANK
+
+    dbp = "http://dbpedia.org/resource/"
+    prefixes = {"ex": "http://e/", "dbp": dbp}
+    triples = [
+        TripleT(iri(dbp + "London_(England)"), iri("http://e/p"), iri(dbp + "Paris_(France)")),
+        TripleT(iri("http://e/a%20b"), iri("http://e/p(1)"), literal("v", lang="en")),
+        TripleT(iri("http://e/ends."), iri("http://e/p"), iri("http://e/.starts")),
+        TripleT(iri("http://e/caf\u00e9"), iri("http://e/-dash"), literal("1", dt="http://e/dt")),
+        TripleT(iri("http://e/ok"), iri("http://e/p.q-r_s"), iri("http://e/1st")),
+        TripleT(blank("b"), iri("http://e/p"), iri("http://e/")),
+    ]
+    gr = TripleGraph.of(spark, triples)
+    path = str(tmp_path / "out.ttl")
+    write_turtle(gr.df, path, prefixes)
+    # each part file is one document under the ._prefixes header
+    with open(path + "._prefixes", encoding="utf-8") as f:
+        header = f.read()
+    parsed = parse_turtle_col(spark.read.text(path, wholetext=True).select(
+        F.concat(F.lit(header), F.col("value")).alias("value"),
+        F.input_file_name().alias("key"),
+    ))
+    assert parsed.where("error IS NOT NULL").count() == 0
+    cols = ["s_kind", "s_value", "p_value", "o_kind", "o_value", "o_lang", "o_dt"]
+    want = {tuple(r) for r in gr.df.select(*cols).collect()}
+    # blank labels are re-skolemized by the parser; compare IRI subjects
+    # exactly and the blank-subject triple by its predicate/object
+    got = {tuple(r) for r in parsed.select(*cols).collect()}
+    assert {t for t in got if t[0] != KIND_BLANK} == {t for t in want if t[0] != KIND_BLANK}
+    assert {t[2:] for t in got if t[0] == KIND_BLANK} == {t[2:] for t in want if t[0] == KIND_BLANK}
+    text = "".join(r.value for r in spark.read.text(path, wholetext=True).collect())
+    assert "<http://dbpedia.org/resource/London_(England)>" in text
+    assert "ex:ok\n" in text and "ex:p.q-r_s ex:1st ;" in text
+
+
+def test_prefix_sidecar_is_one_driver_written_file(spark, tmp_path):
+    """The ._prefixes sidecar of write_turtle / write_trig is a single
+    file holding the header byte for byte (a directory from an older
+    write is replaced), and writing it starts no Spark job."""
+    import os
+
+    from argo_spark.sinks.writers import turtle_blocks, turtle_header, write_trig, write_turtle
+
+    df = small_graph(spark).df
+    want = (turtle_header(PREFIXES).rstrip("\n") + "\n").encode("utf-8")
+    sc = spark.sparkContext
+    for writer in (write_turtle, write_trig):
+        path = str(tmp_path / f"{writer.__name__}.ttl")
+        os.makedirs(path + "._prefixes")  # the old directory layout
+        with open(os.path.join(path + "._prefixes", "part-00000.txt"), "w") as f:
+            f.write("stale\n")
+        writer(df, path, PREFIXES)
+        assert os.path.isfile(path + "._prefixes")
+        with open(path + "._prefixes", "rb") as f:
+            assert f.read() == want
+    sc.setJobGroup("sidecar-a", "write_turtle")
+    write_turtle(df, str(tmp_path / "a.ttl"), PREFIXES)
+    sc.setJobGroup("sidecar-b", "blocks only")
+    turtle_blocks(df, PREFIXES).select("block").write.text(str(tmp_path / "b.ttl"))
+    for prop in ("spark.jobGroup.id", "spark.job.description"):
+        sc.setLocalProperty(prop, None)
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup("sidecar-a")) == len(
+        tracker.getJobIdsForGroup("sidecar-b")
+    )
 
 
 def test_format_registry():
