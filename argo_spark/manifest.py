@@ -8,9 +8,9 @@ with dynamic partition overwrite (re-running a bucket is idempotent —
 overwrite, not append), and a bucket becomes visible ONLY when its row
 is appended to the manifest parquet after the data commit. A crash
 between data write and manifest append re-runs that bucket from
-scratch; downstream readers join through the manifest, so half-written
-buckets are never observed. With an Iceberg catalog the same layout
-maps 1:1 onto a partitioned table + snapshot metadata.
+scratch; readers read the manifest's bucket list and open only those
+buckets, so half-written ones are never observed. With an Iceberg
+catalog the same layout maps 1:1 onto a partitioned table + snapshots.
 """
 
 from __future__ import annotations
@@ -20,12 +20,17 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 MANIFEST_SCHEMA = (
     "bucket int, n_pages long, n_triples long, run_id string, "
     "committed_at double, min_url string, max_url string"
 )
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for driver-side file checks, no Spark job."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 class Manifest:
@@ -34,13 +39,14 @@ class Manifest:
         self.path = path.rstrip("/") + "/manifest"
 
     def read(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.path)
-        except AnalysisException:
+        """The lineage rows; an empty frame (no Spark job) before any commit."""
+        fs, hpath = hadoop_fs(self.spark, self.path)
+        if not fs.exists(hpath):
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def done_buckets(self) -> list[int]:
-        return [r.bucket for r in self.read().select("bucket").distinct().collect()]
+        return sorted({r.bucket for r in self.read().select("bucket").collect()})
 
     def record(self, stats: DataFrame, run_id: str) -> None:
         """Append per-bucket lineage rows. stats: (bucket, n_pages,

@@ -3,13 +3,15 @@
     pages ──bucket by url hash──▶ extract (one Arrow stage)
           ──▶ triples parquet, bucket-partitioned, manifest-committed
           ──▶ [materialize] entity-dedup rewrite ─▶ squish ─▶
-              N-Triples / Turtle / squished parquet
+              squished parquet ─▶ N-Triples
 
 Scale design:
 * the extract stage is embarrassingly parallel — no shuffle between
   the page scan and the triples write except the bucket repartition,
   which doubles as the resume unit and the join/bucketing layout of
   the output table;
+* readers read the manifest's bucket list and open only those
+  ``bucket=N`` directories, with a fixed schema (no inference job);
 * the squish (G14) is a global dropDuplicates over the 7-column
   canonical key — AQE coalesces post-shuffle partitions; the key is
   diverse (objects included) so no skew;
@@ -23,18 +25,17 @@ Scale design:
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from argo_spark.extract.rdfa import extract_triples_df
-from argo_spark.manifest import Manifest, new_run_id
+from argo_spark.extract.rdfa import EXTRACT_SCHEMA, extract_triples_df
+from argo_spark.manifest import Manifest, hadoop_fs, new_run_id
 from argo_spark.ntriples import write_ntriples
 from argo_spark.ops.dedup import apply_entity_mapping, entity_dedup_mapping
 from argo_spark.schema import TRIPLE_COLS
-from argo_spark.terms import triple_nt_col
 
 
 def bucket_col(n_buckets: int):
@@ -82,12 +83,10 @@ class KgPipeline:
         if not pending:
             return RunStats(run_id, 0, 0, 0, 0.0, 0.0, 0.0)
 
-        src = pages.withColumn("bucket", bucket_col(self.n_buckets)).where(
-            F.col("bucket").isin(pending)
+        src = pages.where(bucket_col(self.n_buckets).isin(pending))
+        triples = extract_triples_df(src, with_mentions=with_mentions).withColumn(
+            "bucket", bucket_col(self.n_buckets)
         )
-        triples = extract_triples_df(
-            src.select("url", "warc_ts", "html"), with_mentions=with_mentions
-        ).withColumn("bucket", bucket_col(self.n_buckets))
 
         # idempotent bucket overwrite (dynamic partition overwrite)
         (
@@ -100,10 +99,7 @@ class KgPipeline:
 
         # lineage: per-bucket counts from the COMMITTED files (read back,
         # so the manifest row attests exactly what landed on disk)
-        landed = self.spark.read.parquet(self.triples_path).where(
-            F.col("bucket").isin(pending)
-        )
-        stats = landed.groupBy("bucket").agg(
+        stats = self._read_buckets(pending).groupBy("bucket").agg(
             F.countDistinct("url").alias("n_pages"),
             F.count(F.lit(1)).alias("n_triples"),
             F.min("url").alias("min_url"),
@@ -121,45 +117,44 @@ class KgPipeline:
         )
 
     # ------------------------------------------------------------------
+    def _read_buckets(self, buckets: list[int]) -> DataFrame:
+        """The existing ``bucket=N`` dirs of ``buckets`` (an empty bucket has
+        none) with the table's fixed schema; ``basePath`` keeps ``bucket``."""
+        glob = f"{self.triples_path}/bucket={{{','.join(map(str, buckets))}}}"
+        fs, pattern = hadoop_fs(self.spark, glob)
+        found = fs.globStatus(pattern) if buckets else None
+        schema = EXTRACT_SCHEMA + ", bucket int"
+        if not found:
+            return self.spark.createDataFrame([], schema)
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", self.triples_path)
+            .parquet(*[st.getPath().toString() for st in found])
+        )
+
     def triples(self) -> DataFrame:
-        """Committed triples only: data joined through the manifest so
+        """Committed triples only: the buckets the manifest lists, so
         never-committed (crashed) buckets are invisible."""
-        done = self.manifest.read().select("bucket").distinct()
-        df = self.spark.read.parquet(self.triples_path)
-        return df.join(F.broadcast(done), "bucket", "left_semi")
+        return self._read_buckets(self.manifest.done_buckets())
 
     def materialize(
         self,
         nt_path: Optional[str] = None,
         squished_path: Optional[str] = None,
         dedup_entities: bool = True,
-        bucketed_table: Optional[str] = None,
-        n_subject_buckets: int = 64,
     ) -> DataFrame:
-        """The squish + entity-dedup materialization: committed triples
-        → winner-IRI rewrite → global dropDuplicates over the canonical
-        key → N-Triples text and/or parquet.
-
-        ``bucketed_table`` additionally saves the squished triples as a
-        managed table bucketed+sorted by ``s_value`` — subject-keyed
-        traversals, squish re-runs, and BGP self-joins on the table
-        then plan with zero Exchange (docs/PLANS.md §8)."""
+        """Squish + entity dedup: committed triples → winner-IRI rewrite →
+        global dropDuplicates over the canonical key → squished parquet
+        (read back, so the squish runs once) → N-Triples; either optional."""
         t = self.triples()
         if dedup_entities:
-            mapping = entity_dedup_mapping(t)
-            t = apply_entity_mapping(t, mapping)
-        squished = t.dropDuplicates(TRIPLE_COLS)
+            t = apply_entity_mapping(t, entity_dedup_mapping(t))
+        squished = t.dropDuplicates(TRIPLE_COLS).drop("bucket")
+        if squished_path:
+            squished.write.mode("overwrite").parquet(squished_path)
+            squished = self.spark.read.schema(squished.schema).parquet(squished_path)
         if nt_path:
             write_ntriples(squished.select(*TRIPLE_COLS), nt_path)
-        if squished_path:
-            squished.drop("bucket").write.mode("overwrite").parquet(squished_path)
-        if bucketed_table:
-            from argo_spark.storage import write_bucketed
-
-            write_bucketed(
-                squished.drop("bucket"), bucketed_table,
-                ["s_value"], n_subject_buckets, sort_cols=["s_value"],
-            )
         return squished
 
 
@@ -184,6 +179,3 @@ def predicate_stats(triples: DataFrame, salt_k: int = 16) -> DataFrame:
         F.sum("_nd").alias("n_distinct_subjects_approx"),
     )
 
-
-def graph_nt_lines(triples: DataFrame) -> DataFrame:
-    return triples.select(triple_nt_col().alias("value"))

@@ -1,11 +1,13 @@
 """End-to-end pipeline: exactly-once resume, committed-only reads,
-P/R after materialize, skewed predicate stats."""
+fresh-directory reads, P/R after materialize, one squish per
+materialize, skewed predicate stats."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from argo_spark.manifest import MANIFEST_SCHEMA, Manifest
 from argo_spark.pages import expected_triples, synthesize_pages
 from argo_spark.pipeline import KgPipeline, predicate_stats
 from argo_spark.schema import TRIPLE_COLS
@@ -17,6 +19,18 @@ def outdir(tmp_path):
 
 
 N = 120
+
+
+def _jobs_started(spark, group, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_run_resume_exactly_once(spark, outdir):
@@ -50,14 +64,66 @@ def test_rerun_bucket_is_idempotent(spark, outdir):
     pipe = KgPipeline(spark, outdir, n_buckets=4)
     pipe.run(pages, max_buckets=2)
     before = pipe.spark.read.parquet(pipe.triples_path).count()
-    # simulate crash AFTER data write but BEFORE manifest commit of
-    # bucket 2: write it again with resume (manifest says pending)
+    # crash AFTER the data write but BEFORE the manifest commit of
+    # bucket 2: its files landed, yet readers must not see them
+    def crash(stats, run_id):
+        raise RuntimeError("crash before manifest append")
+
+    pipe.manifest.record = crash
+    with pytest.raises(RuntimeError):
+        pipe.run(pages, max_buckets=1)
+    del pipe.manifest.record
+    assert set(pipe.manifest.done_buckets()) == {0, 1}
+    assert pipe.spark.read.parquet(pipe.triples_path).count() > before
+    assert pipe.triples().count() == before
+    # write it again with resume (manifest says pending)
     pipe.run(pages, max_buckets=1)  # processes bucket 2 fresh
     pipe.run(pages)  # finish
     total = pipe.spark.read.parquet(pipe.triples_path).count()
     committed = pipe.triples().count()
     assert committed == total  # dynamic overwrite left no duplicates
     assert total > before
+
+
+def test_fresh_directory_reads(spark, outdir):
+    """Before any commit the manifest and the committed view are empty
+    frames with their fixed schemas; reading the manifest starts no
+    Spark job. Buckets that extract no triples are never committed."""
+    empty_manifest = spark.createDataFrame([], MANIFEST_SCHEMA).schema
+    m, n_jobs = _jobs_started(spark, "fresh-manifest", Manifest(spark, outdir).read)
+    assert n_jobs == 0
+    assert m.schema == empty_manifest and m.count() == 0
+
+    pipe = KgPipeline(spark, outdir, n_buckets=16)
+    fresh = pipe.triples()
+    assert fresh.count() == 0
+    # 5 pages over 16 buckets: most buckets stay empty
+    stats = pipe.run(synthesize_pages(spark, 5))
+    assert stats.n_pages == 5 and 0 < stats.n_buckets_processed < 16
+    table = spark.read.parquet(pipe.triples_path)
+    assert fresh.schema == table.schema
+    assert pipe.manifest.read().schema == empty_manifest
+    committed = pipe.triples()
+    assert committed.schema == table.schema
+    assert committed.count() == table.count() == stats.n_triples
+
+
+def test_materialize_squishes_once(spark, outdir):
+    """With both sinks the squish (manifest read, entity rewrite,
+    dropDuplicates shuffle) runs once: the N-Triples come from the
+    squished parquet, one text-write job on top of the parquet alone."""
+    pages = synthesize_pages(spark, N)
+    pipe = KgPipeline(spark, outdir, n_buckets=4)
+    pipe.run(pages)
+    _, parquet_only = _jobs_started(
+        spark, "materialize-parquet", lambda: pipe.materialize(squished_path=outdir + "/sq-a")
+    )
+    _, both = _jobs_started(
+        spark, "materialize-both", lambda: pipe.materialize(outdir + "/nt", outdir + "/sq-b")
+    )
+    assert both <= parquet_only + 1
+    n_rows = spark.read.parquet(outdir + "/sq-b").count()
+    assert 0 < n_rows == spark.read.text(outdir + "/nt").count()
 
 
 def test_materialize_pr_and_squish(spark, outdir):

@@ -2968,6 +2968,88 @@ def test_optional_nullable_shared_var_deferred_filter(spark):
     }
 
 
+def test_multi_leg_optional_and_minus_vs_python_oracle(spark):
+    """OPTIONAL and MINUS whose two shared vars (?a, ?b) may be unbound
+    on BOTH sides run the boundness decomposition with several legs
+    over checkpointed inputs (_compat_leftjoin_frames' anti-join of
+    the id-stamped left, _compat_minus_frames' chained anti-joins,
+    unions of legs). Pinned against brute-force §18.5 LeftJoin /
+    §8.3.3 Minus on seeded random graphs, bag semantics included."""
+    import random
+    from collections import Counter
+
+    E = "http://e/"
+    right = """{ ?y <http://e/qa> ?a . ?y <http://e/qb> ?b }
+               UNION { ?y <http://e/qa> ?a } UNION { ?y <http://e/qb> ?b }"""
+    left = """?x <http://e/p> ?k
+              OPTIONAL { ?x <http://e/a> ?a } OPTIONAL { ?x <http://e/b> ?b }"""
+
+    vals = [f"{E}v{i}" for i in range(6)]  # the right side uses 4 of them
+
+    def compatible(m1, m2):
+        return all(m1[v] == m2[v] for v in m1.keys() & m2.keys())
+
+    def bag(rows, cols):
+        return Counter(tuple(r.get(c) for c in cols) for r in rows)
+
+    for seed in range(3):
+        rng = random.Random(seed)
+        trips = set()
+        for i in range(30):
+            x = f"{E}x{i}"
+            trips.add((x, E + "p", f"{E}k{i % 7}"))
+            for pred in ("a", "b"):
+                for _ in range(rng.choice([0, 0, 1, 1, 2])):
+                    trips.add((x, E + pred, rng.choice(vals)))
+        for i in range(12):
+            for pred in ("qa", "qb"):
+                if rng.random() < 0.6:
+                    trips.add((f"{E}y{i}", E + pred, rng.choice(vals[:4])))
+        g = TripleGraph.of(
+            spark, [TripleT(iri(s_), iri(p_), iri(o_)) for s_, p_, o_ in sorted(trips)]
+        ).df
+
+        def objs(subj, pred):
+            return [f"<{o_}>" for s_, p_, o_ in trips if s_ == subj and p_ == E + pred]
+
+        omega1 = []
+        for s_, p_, o_ in trips:
+            if p_ == E + "p":
+                for a in objs(s_, "a") or [None]:
+                    for b in objs(s_, "b") or [None]:
+                        mu = {"x": f"<{s_}>", "k": f"<{o_}>", "a": a, "b": b}
+                        omega1.append({v: t for v, t in mu.items() if t is not None})
+        omega2 = []
+        for y in sorted({s_ for s_, p_, _ in trips if p_ in (E + "qa", E + "qb")}):
+            ya, yb = objs(y, "qa"), objs(y, "qb")
+            omega2 += [{"y": f"<{y}>", "a": a, "b": b} for a in ya for b in yb]
+            omega2 += [{"y": f"<{y}>", "a": a} for a in ya]
+            omega2 += [{"y": f"<{y}>", "b": b} for b in yb]
+
+        cols = ["x", "k", "a", "b", "y"]
+        want = []
+        for m1 in omega1:
+            merged = [{**m1, **m2} for m2 in omega2 if compatible(m1, m2)]
+            want += merged or [m1]
+        out = sparql_select(
+            g, f"SELECT ?x ?k ?a ?b ?y WHERE {{ {left} OPTIONAL {{ {right} }} }}"
+        )
+        got = Counter(tuple(r) for r in out.select(*cols).collect())
+        assert got == bag(want, cols), f"OPTIONAL, seed {seed}"
+
+        cols = ["x", "k", "a", "b"]
+        want = [
+            m1 for m1 in omega1
+            if not any(compatible(m1, m2) and m1.keys() & m2.keys()
+                       for m2 in omega2)
+        ]
+        out = sparql_select(
+            g, f"SELECT ?x ?k ?a ?b WHERE {{ {left} MINUS {{ {right} }} }}"
+        )
+        got = Counter(tuple(r) for r in out.select(*cols).collect())
+        assert got == bag(want, cols), f"MINUS, seed {seed}"
+
+
 # -- named graphs (GRAPH / FROM / FROM NAMED) ------------------------------
 
 
