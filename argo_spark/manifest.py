@@ -28,7 +28,7 @@ MANIFEST_SCHEMA = (
 
 
 def hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for driver-side file checks, no Spark job."""
+    """(FileSystem, Path) for driver-side file access, no Spark job."""
     hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 

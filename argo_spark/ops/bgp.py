@@ -59,6 +59,92 @@ def _const_cond(pos: str, term: Union[Term, str]):
     return cond
 
 
+# CONSTRUCT needs the four term components per binding, and a literal
+# value cannot be recovered from its NT form with column expressions
+# (unescaping the escape chain via ordered replaces is ambiguous for
+# values containing backslash sequences) — so struct-mode planning
+# carries struct(kind, value, lang, dt) columns alongside the NT join
+# keys. NT lexical forms are injective, so joins/dedup on the NT
+# column alone stay correct and the structs just ride along.
+_TERM_STRUCT_PREFIX = "__term__"
+
+
+def _struct_for_position(pos: str):
+    """struct(kind, value, lang, dt) of the term at ``pos`` ("g" = the
+    row's graph IRI)."""
+    null = F.lit(None).cast("string")
+    if pos in ("p", "g"):
+        kind, value = F.lit(0).cast("tinyint"), F.col(f"{pos}_value")
+    else:
+        kind, value = F.col(f"{pos}_kind"), F.col(f"{pos}_value")
+    lang, dt = (F.col("o_lang"), F.col("o_dt")) if pos == "o" else (null, null)
+    return F.struct(
+        kind.alias("kind"), value.alias("value"),
+        lang.alias("lang"), dt.alias("dt"),
+    )
+
+
+def _bgp_plan(
+    triples: DataFrame,
+    patterns: Sequence[Pattern],
+    graph_var: str | None = None,
+    structs: bool = False,
+) -> DataFrame:
+    """The BGP join plan behind :func:`bgp_match` and SPARQL group
+    evaluation: one constant-filtered scan per pattern, inner-joined on
+    the shared variables' NT columns (cross join when none are shared).
+    ``structs=True`` (CONSTRUCT/Update templates) also projects a
+    ``__term__<var>`` component struct per variable, taken from the
+    scan that first binds it; the structs never become join keys."""
+    if not patterns:
+        raise ValueError("empty pattern list")
+    g_nt = (
+        None if graph_var is None
+        else F.concat(F.lit("<"), F.col("g_value"), F.lit(">"))
+    )
+    acc = None
+    for pat in patterns:
+        if len(pat) != 3:
+            raise ValueError(f"pattern must be (s, p, o): {pat!r}")
+        cond = F.lit(True)
+        proj: dict[str, object] = {}
+        first_pos: dict[str, str] = {}
+        if graph_var is not None:
+            # seeded BEFORE the position loop: the graph variable
+            # reused inside the pattern constrains equality against
+            # the row's graph IRI like any repeated variable
+            proj[graph_var] = g_nt
+            first_pos[graph_var] = "g"
+        for pos, term in zip(_POS, pat):
+            if isinstance(term, str) and term.startswith("?"):
+                var = term[1:]
+                nt = _nt_for_position(pos)
+                if var in proj:  # repeated var inside the pattern
+                    cond = cond & (proj[var] == nt)
+                else:
+                    proj[var] = nt
+                    first_pos[var] = pos
+            else:
+                cond = cond & _const_cond(pos, term)
+        cols = [c.alias(v) for v, c in proj.items()]
+        if structs:
+            cols += [
+                _struct_for_position(pos).alias(_TERM_STRUCT_PREFIX + v)
+                for v, pos in first_pos.items()
+            ]
+        frame = triples.where(cond).select(*cols)
+        if acc is None:
+            acc = frame
+            continue
+        shared = [c for c in frame.columns if c in acc.columns]
+        if structs:
+            dup = [c for c in shared if c.startswith(_TERM_STRUCT_PREFIX)]
+            frame = frame.drop(*dup)
+            shared = [c for c in shared if c not in dup]
+        acc = acc.join(frame, on=shared, how="inner") if shared else acc.crossJoin(frame)
+    return acc
+
+
 def bgp_match(
     triples: DataFrame,
     patterns: Sequence[Pattern],
@@ -76,37 +162,5 @@ def bgp_match(
     every pattern scan additionally projects the row's ``g_value``
     as ``<IRI>`` under that name, making the graph a shared join key
     across all patterns — one hash-join plan, no per-graph loop."""
-    if not patterns:
-        raise ValueError("empty pattern list")
-    acc = None
-    for pat in patterns:
-        if len(pat) != 3:
-            raise ValueError(f"pattern must be (s, p, o): {pat!r}")
-        cond = F.lit(True)
-        proj: dict[str, object] = {}
-        if graph_var is not None:
-            # seeded BEFORE the position loop: the graph variable
-            # reused inside the pattern constrains equality against
-            # the row's graph IRI like any repeated variable
-            proj[graph_var] = F.concat(
-                F.lit("<"), F.col("g_value"), F.lit(">")
-            )
-        for pos, term in zip(_POS, pat):
-            if isinstance(term, str) and term.startswith("?"):
-                var = term[1:]
-                nt = _nt_for_position(pos)
-                if var in proj:  # repeated var inside the pattern
-                    cond = cond & (proj[var] == nt)
-                else:
-                    proj[var] = nt
-            else:
-                cond = cond & _const_cond(pos, term)
-        frame = triples.where(cond).select(
-            *[c.alias(v) for v, c in proj.items()]
-        )
-        if acc is None:
-            acc = frame
-        else:
-            shared = [c for c in frame.columns if c in acc.columns]
-            acc = acc.join(frame, on=shared, how="inner") if shared else acc.crossJoin(frame)
+    acc = _bgp_plan(triples, patterns, graph_var)
     return acc.dropDuplicates() if distinct else acc

@@ -189,11 +189,13 @@ form as tiebreak.
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 
 from argo_spark.namespaces import RDF_TYPE
+from argo_spark.ops.bgp import _TERM_STRUCT_PREFIX
 from argo_spark.terms import KIND_LITERAL, Term
 
 _TOKEN = re.compile(
@@ -245,6 +247,17 @@ def _tokenize(query: str) -> list[tuple[str, str]]:
             raise SparqlSyntaxError(f"bad token at {query[pos:pos+20]!r}")
         pos = m.end()
         kind = m.lastgroup
+        if kind == "var":
+            # internal column-name prefixes are not query variables
+            for prefix, what in (
+                (_PATH_VAR_PREFIX, "path-variable"),
+                (_TERM_STRUCT_PREFIX, "term-struct"),
+            ):
+                if m.group()[1:].startswith(prefix):
+                    raise SparqlSyntaxError(
+                        f"variable name {m.group()!r} collides with the "
+                        f"internal {what} prefix"
+                    )
         if kind != "ws":
             out.append((kind, m.group()))
     return out
@@ -427,11 +440,6 @@ class _Parser:
     def parse_term(self, position: str):
         kind, val = self.next()
         if kind == "var":
-            if val[1:].startswith(_PATH_VAR_PREFIX):
-                raise SparqlSyntaxError(
-                    f"variable name {val!r} collides with the internal "
-                    f"path-variable prefix"
-                )
             return "?" + val[1:]
         if kind == "iri":
             return self.resolve_iri(val[1:-1])
@@ -809,9 +817,9 @@ class _Parser:
         if has_clo(alts):
             # closures may sit anywhere in a sequence, alternation
             # branch, or parenthesized group: expansion emits a
-            # ("closure", ...) / ("closure_group", ...) element per
-            # modified step, joined through the same fresh
-            # intermediate variables as plain sequence steps
+            # ("closure_group", ...) element per modified step,
+            # joined through the same fresh intermediate variables as
+            # plain sequence steps
             return ("pathx", alts)
         alts = _flatten_static_path(alts)
         if len(alts) == 1 and len(alts[0]) == 1 and not alts[0][0][0]:
@@ -847,27 +855,23 @@ class _Parser:
 
     def _expand_seq_closures(self, elements: list, s, seq, o) -> None:
         """Sequence expansion when some steps carry +/*/? — plain
-        steps join as bgp triples, modified steps as closure frames,
-        parenthesized groups recursively (a MODIFIED group becomes a
-        ("closure_group", ...) element whose inner path is
-        pre-expanded between fresh endpoint variables; an unmodified
-        group expands inline), all chained through fresh internal
-        variables."""
+        steps join as bgp triples, a MODIFIED step (single predicate
+        or parenthesized group) becomes a ("closure_group", ...)
+        element whose inner path is pre-expanded between fresh
+        endpoint variables, an unmodified group expands inline; all
+        chained through fresh internal variables."""
         cur = s
         for i, (inv, prim, clo) in enumerate(seq):
             nxt = o if i == len(seq) - 1 else self._fresh_path_var()
             group_prim = isinstance(prim, tuple) and prim[0] == "group"
             if clo is not None:
-                if group_prim:
-                    inner = (
-                        _invert_pathx_alts(prim[1]) if inv else prim[1]
-                    )
-                    g, srcv, dstv = self._group_for_path(inner)
-                    elements.append(
-                        ("closure_group", (cur, g, srcv, dstv, clo, nxt))
-                    )
-                else:
-                    elements.append(("closure", (cur, prim, inv, clo, nxt)))
+                inner = prim[1] if group_prim else [[(False, prim, None)]]
+                if inv:
+                    inner = _invert_pathx_alts(inner)
+                g, srcv, dstv = self._group_for_path(inner)
+                elements.append(
+                    ("closure_group", (cur, g, srcv, dstv, clo, nxt))
+                )
             elif group_prim:
                 inner = _invert_pathx_alts(prim[1]) if inv else prim[1]
                 self._expand_pathx_alts(elements, cur, inner, nxt)
@@ -1972,99 +1976,10 @@ def _expr_vars(expr) -> set[str]:
     return set()
 
 
-# CONSTRUCT needs the four term components per binding, and a literal
-# value cannot be recovered from its NT form with column expressions
-# (unescaping the escape chain via ordered replaces is ambiguous for
-# values containing backslash sequences) — so struct-mode evaluation
-# carries struct(kind, value, lang, dt) columns alongside the NT join
-# keys. NT lexical forms are injective, so joins/dedup on the NT
-# column alone stay correct and the structs just ride along.
-_TERM_STRUCT_PREFIX = "__term__"
-
-
 def _null_str():
     from pyspark.sql import functions as F
 
     return F.lit(None).cast("string")
-
-
-def _bgp_frame_structs(
-    triples: DataFrame, patterns, graph_var: str | None = None
-) -> DataFrame:
-    """bgp_match's join plan, plus a __term__<var> struct per
-    variable. ``graph_var`` mirrors bgp_match's: every pattern scan
-    projects the row's graph IRI as an NT binding + struct, making
-    the graph a shared join key across patterns."""
-    from pyspark.sql import functions as F
-
-    from argo_spark.ops.bgp import _const_cond, _nt_for_position, _POS
-
-    acc = None
-    for pat in patterns:
-        cond = F.lit(True)
-        proj: dict = {}
-        structs: dict = {}
-        if graph_var is not None:
-            proj[graph_var] = F.concat(
-                F.lit("<"), F.col("g_value"), F.lit(">")
-            )
-            structs[graph_var] = F.struct(
-                F.lit(0).cast("tinyint").alias("kind"),
-                F.col("g_value").alias("value"),
-                _null_str().alias("lang"),
-                _null_str().alias("dt"),
-            )
-        for pos, term in zip(_POS, pat):
-            if isinstance(term, str) and term.startswith("?"):
-                var = term[1:]
-                if var.startswith(_TERM_STRUCT_PREFIX):
-                    raise SparqlSyntaxError(
-                        f"variable name {var!r} collides with the "
-                        f"internal term-struct prefix"
-                    )
-                nt = _nt_for_position(pos)
-                if var in proj:
-                    cond = cond & (proj[var] == nt)
-                else:
-                    proj[var] = nt
-                    if pos == "p":
-                        structs[var] = F.struct(
-                            F.lit(0).cast("tinyint").alias("kind"),
-                            F.col("p_value").alias("value"),
-                            _null_str().alias("lang"),
-                            _null_str().alias("dt"),
-                        )
-                    else:
-                        structs[var] = F.struct(
-                            F.col(f"{pos}_kind").alias("kind"),
-                            F.col(f"{pos}_value").alias("value"),
-                            (F.col("o_lang") if pos == "o" else _null_str()).alias("lang"),
-                            (F.col("o_dt") if pos == "o" else _null_str()).alias("dt"),
-                        )
-            else:
-                cond = cond & _const_cond(pos, term)
-        frame = triples.where(cond).select(
-            *[c.alias(v) for v, c in proj.items()],
-            *[c.alias(_TERM_STRUCT_PREFIX + v) for v, c in structs.items()],
-        )
-        if acc is None:
-            acc = frame
-        else:
-            shared = [
-                c for c in frame.columns
-                if c in acc.columns and not c.startswith(_TERM_STRUCT_PREFIX)
-            ]
-            dup_structs = [
-                c for c in frame.columns
-                if c in acc.columns and c.startswith(_TERM_STRUCT_PREFIX)
-            ]
-            frame = frame.drop(*dup_structs)
-            acc = (
-                acc.join(frame, on=shared, how="inner")
-                if shared
-                else acc.crossJoin(frame)
-            )
-    return acc
 
 
 def _binding_vars(columns) -> list[str]:
@@ -2127,7 +2042,7 @@ def eval_group(
 _CLOSURE_MAX_ROUNDS = 10  # doubling rounds: covers diameters to 2^10
 
 # dataset stack for GRAPH evaluation: (quad_frame, named_iris | None)
-# pushed by _resolve_dataset around group evaluation. Plan building
+# pushed by _dataset_scope around group evaluation. Plan building
 # is synchronous driver-side Python, so a plain stack (not a
 # contextvar) is race-free; subqueries inherit the top entry.
 _DATASET_CTX: list = []
@@ -2202,23 +2117,25 @@ def _service_frame(
     return frame, nulls, masks
 
 
-def _resolve_dataset(triples: DataFrame, dataset):
-    """Resolve a query's RDF dataset (§13.2) -> (active_default_frame,
-    pushed). ``dataset`` = (from_iris, from_named_iris) or None. With
-    no FROM, the active default graph is the g-NULL rows of a quad
-    frame (a g-less frame is all-default, untouched); FROM replaces
-    it with the SET UNION of the named graphs (blank nodes are
-    skolemized engine-wide, so union IS the RDF merge). Pushes the
-    quad frame + FROM NAMED restriction on _DATASET_CTX for GRAPH
-    elements unless an outer context exists to inherit (subqueries);
-    caller must pop iff pushed."""
+@contextmanager
+def _dataset_scope(triples: DataFrame, dataset):
+    """Resolve a query's RDF dataset (§13.2) for the ``with`` block ->
+    the active default frame. ``dataset`` = (from_iris,
+    from_named_iris) or None. With no FROM, the active default graph
+    is the g-NULL rows of a quad frame (a g-less frame is
+    all-default, untouched); FROM replaces it with the SET UNION of
+    the named graphs (blank nodes are skolemized engine-wide, so
+    union IS the RDF merge). The quad frame + FROM NAMED restriction
+    sit on _DATASET_CTX for GRAPH elements during the block, unless
+    an outer context exists to inherit (subqueries)."""
     from pyspark.sql import functions as F
 
     has_g = "g_value" in triples.columns
     if (dataset is None and _DATASET_CTX) or (
         dataset is None and not has_g
     ):
-        return triples, False
+        yield triples
+        return
     quads = (
         triples if has_g
         else triples.withColumn("g_value", F.lit(None).cast("string"))
@@ -2235,27 +2152,34 @@ def _resolve_dataset(triples: DataFrame, dataset):
     else:
         active = triples
     _DATASET_CTX.append((quads, list(named_iris) if named_iris else None))
-    return active, True
+    try:
+        yield active
+    finally:
+        _DATASET_CTX.pop()
 
 
-def _closure_frame(
-    triples, s, iri_, inv, op, o, graph_var: str | None = None
-) -> DataFrame:
-    """Evaluate ``s p+ o`` / ``s p* o`` / ``s p? o`` (SPARQL 1.1
-    §18.4 OneOrMorePath / ZeroOrMorePath / ZeroOrOnePath) as a
+def _closure_group_frame(triples, s, group, srcv, dstv, op, o,
+                         structs: bool,
+                         graph_var: str | None = None) -> DataFrame:
+    """Evaluate ``s path+ o`` / ``s path* o`` / ``s path? o`` (SPARQL
+    1.1 §18.4 OneOrMorePath / ZeroOrMorePath / ZeroOrOnePath) as a
     solution frame.
 
-    The single-predicate edge set feeds
-    :func:`argo_spark.ops.traversal.transitive_closure` (pointer
-    doubling, O(log diameter) shuffle rounds); ``*`` additionally
-    unions the zero-length pairs — per spec, (n, n) for every term n
-    appearing as a subject or object of the active graph. ``^p+``
-    swaps the edge direction first. Endpoint variables become binding
-    columns (NT forms, same key scheme as bgp_match); a constant
-    endpoint filters; two constant endpoints would make this an
-    ASK-shaped emptiness probe and raise.
+    The path — a single predicate, or any composition of sequences,
+    alternations, inverses and closures — was pre-expanded at parse
+    time into a Group binding two fresh endpoint variables (inversion
+    already folded in: ``^(p/q)+`` -> ``(^q/^p)+``); its solution
+    frame projected to those endpoints IS the edge set. The edges
+    feed :func:`argo_spark.ops.traversal.transitive_closure` (pointer
+    doubling, O(log diameter) shuffle rounds); ``*``/``?`` add the
+    zero-length pairs — per spec, (n, n) for every term n appearing
+    as a subject or object of the active graph. Endpoint variables
+    become binding columns (NT forms, same key scheme as bgp_match);
+    a constant endpoint filters; two constant endpoints would make
+    this an ASK-shaped emptiness probe and raise.
 
-    ``graph_var`` (GRAPH ?g, §13.3): the closure must not cross
+    ``graph_var`` (GRAPH ?g, §13.3): the inner path evaluates with the
+    graph threaded as a join key, and the closure must not cross
     graphs, so node keys become ``struct(g, node)`` — the doubling
     join on dst == src then matches only within one graph (one
     composite-key equi-join, no per-graph loop) and the graph IRI
@@ -2263,54 +2187,25 @@ def _closure_frame(
     from pyspark.sql import functions as F
 
     from argo_spark.ops.bgp import _nt_for_position
-
-    src_nt = _nt_for_position("s")
-    dst_nt = _nt_for_position("o")
-    # edge dedup happens in _closure_pairs_frame ('?') or inside
-    # transitive_closure's initial state ('+'/'*') — deduping here too
-    # would pay the exchange twice
-    scoped = triples.where(F.col("p_value") == iri_)
-    if graph_var is None:
-        edges = scoped.select(src_nt.alias("src"), dst_nt.alias("dst"))
-    else:
-        g_nt = F.concat(F.lit("<"), F.col("g_value"), F.lit(">"))
-        edges = scoped.select(
-            F.struct(g_nt.alias("g"), src_nt.alias("n")).alias("src"),
-            F.struct(g_nt.alias("g"), dst_nt.alias("n")).alias("dst"),
-        )
-    if inv:
-        edges = edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
-    return _closure_pairs_frame(triples, s, o, edges, op, graph_var)
-
-
-def _closure_group_frame(triples, s, group, srcv, dstv, op, o,
-                         structs: bool,
-                         graph_var: str | None = None) -> DataFrame:
-    """Nested path closure ``s (path)+ o`` / ``*`` / ``?`` (SPARQL
-    1.1 §18.4 over a parenthesized path): the inner path — itself any
-    composition of sequences, alternations, inverses, and closures —
-    was pre-expanded at parse time into a Group binding two fresh
-    endpoint variables; its solution frame projected to those
-    endpoints IS the edge set, and the same pointer-doubling closure
-    machinery as the single-predicate case runs over it. Inversion
-    was already folded into the inner path at parse time
-    (``^(p/q)+`` -> ``(^q/^p)+``). Under GRAPH ?g the inner path
-    evaluates with the graph threaded as a join key (so an inner
-    sequence never crosses graphs either) and the edge keys become
-    ``struct(g, node)`` — see :func:`_closure_frame`."""
-    from pyspark.sql import functions as F
+    from argo_spark.ops.traversal import transitive_closure
+    from argo_spark.terms import format_term
 
     if structs:
         raise SparqlSyntaxError(
             "path closures inside CONSTRUCT are not supported"
         )
+    s_var = isinstance(s, str) and s.startswith("?")
+    o_var = isinstance(o, str) and o.startswith("?")
+    if not s_var and not o_var:
+        raise SparqlSyntaxError(
+            "path closure with two constant endpoints is not supported"
+        )
     inner = _eval_group_impl(
         triples, group, False, False, graph_var=graph_var
     )[0]
-    # dedup deferred to _closure_pairs_frame / transitive_closure —
-    # see _closure_frame
+    # edge dedup happens below ('?') or inside transitive_closure's
+    # initial state ('+'/'*') — deduping here too would pay the
+    # exchange twice
     if graph_var is None:
         edges = inner.select(
             F.col(srcv[1:]).alias("src"), F.col(dstv[1:]).alias("dst")
@@ -2322,30 +2217,6 @@ def _closure_group_frame(triples, s, group, srcv, dstv, op, o,
             .alias("src"),
             F.struct(g.alias("g"), F.col(dstv[1:]).alias("n"))
             .alias("dst"),
-        )
-    return _closure_pairs_frame(triples, s, o, edges, op, graph_var)
-
-
-def _closure_pairs_frame(
-    triples, s, o, edges, op, graph_var: str | None = None
-) -> DataFrame:
-    """Shared closure tail: run the doubling closure over an edge
-    frame (columns src, dst — NT forms, or ``struct(g, n)`` composite
-    keys under GRAPH ?g), add §18.4 zero-length pairs for '*'/'?',
-    and turn the pair set into a solution frame over the endpoint
-    terms (variable endpoints bind, constant endpoints filter; the
-    graph IRI unpacks into the ?g binding column)."""
-    from pyspark.sql import functions as F
-
-    from argo_spark.ops.bgp import _nt_for_position
-    from argo_spark.ops.traversal import transitive_closure
-    from argo_spark.terms import format_term
-
-    s_var = isinstance(s, str) and s.startswith("?")
-    o_var = isinstance(o, str) and o.startswith("?")
-    if not s_var and not o_var:
-        raise SparqlSyntaxError(
-            "path closure with two constant endpoints is not supported"
         )
     src_nt = _nt_for_position("s")
     dst_nt = _nt_for_position("o")
@@ -2571,25 +2442,73 @@ def _boundness_leg(df, bound, null, cols=None):
     return df.where(cond)
 
 
+def _compat_legs(acc, ren, shared, left_nulls, right_nulls,
+                 left_masks, right_masks, rename_prefix):
+    """Boundness-leg decomposition shared by the §18.5 compatibility
+    Join and the §8.3.3 MINUS -> yields ``(left_leg, bound_left,
+    [(keys, right_leg), ...])``.
+
+    Partition the LEFT into one leg per boundness mask A of its
+    possibly-unbound shared vars (each row lands in exactly one leg).
+    Within a leg every var in bound_left = (shared − leftN) ∪ A is
+    definitely bound, so a right row is compatible iff each
+    bound_left var is unbound-or-equal on the right — partition the
+    RIGHT (``ren``: shared vars renamed to ``rename_prefix + v``) on
+    the boundness mask B of bound_left ∩ rightN, and the (A, B) pair
+    matches by PLAIN EQUALITY on keys = (bound_left − rightN) ∪ B.
+
+    Both inputs are lazily localCheckpointed when they feed more than
+    one leg, so the upstream plan runs once, not 2^n times — NOT
+    persist(): the cached blocks are released by the ContextCleaner
+    when the query's frames are garbage-collected, where persist()
+    entries live in the session CacheManager until an explicit
+    unpersist, so chained updates accumulated cached legs
+    indefinitely (round-6 ADVICE fix)."""
+    leftN = sorted(c for c in shared if c in left_nulls)
+    rightN = {c for c in shared if c in right_nulls}
+    left_legs = _mask_project(left_masks, leftN)
+    if len(left_legs) > 1:
+        acc = acc.localCheckpoint(eager=False)
+    if len(left_legs) > 1 or rightN:
+        ren = ren.localCheckpoint(eager=False)
+    for A in left_legs:
+        bound_left = [c for c in shared if c not in leftN or c in A]
+        rightN_eff = sorted(c for c in bound_left if c in rightN)
+        cols = {v: rename_prefix + v for v in rightN_eff}
+        yield (
+            _boundness_leg(acc, A, set(leftN) - A),
+            bound_left,
+            [
+                (
+                    [c for c in bound_left if c not in rightN_eff or c in B],
+                    _boundness_leg(ren, B, set(rightN_eff) - B, cols=cols),
+                )
+                for B in _mask_project(right_masks, rightN_eff)
+            ],
+        )
+
+
+def _key_eq(keys, rename_prefix):
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    return reduce(
+        lambda a, b: a & b,
+        [F.col(k) == F.col(rename_prefix + k) for k in keys],
+    )
+
+
 def _compat_join_frames(acc, frame, shared, left_nulls, right_nulls,
                         left_masks=None, right_masks=None):
     """SPARQL §18.5 compatibility Join as a UNION OF HASH EQUI-JOINS
-    (the 100-TB shape — no nested-loop/cartesian plan).
-
-    Decomposition: partition the LEFT into one leg per boundness mask
-    A of its possibly-unbound shared vars (each row lands in exactly
-    one leg). Within a leg every var in boundL = (shared − leftN) ∪ A
-    is definitely bound, so a right row is compatible iff each boundL
-    var is unbound-or-equal on the right — partition the RIGHT on the
-    boundness mask B of boundL ∩ rightN, and the (A, B) pair joins by
-    PLAIN EQUALITY on keys = (boundL − rightN) ∪ B. Vars outside keys
-    are unbound on a known side, so the merged binding is a straight
-    column pick (left if bound-left else right), never a runtime
-    coalesce. The all-unbound × all-unbound pair (keys = ∅) is the
-    one genuine cross join the semantics require; every other leg is
-    a shuffle/broadcast hash join Catalyst can optimize. Both inputs
-    are persisted when they feed >1 leg so the upstream plan runs
-    once, not 2^n times.
+    (the 100-TB shape — no nested-loop/cartesian plan) over the
+    :func:`_compat_legs` decomposition. Vars outside a leg pair's
+    keys are unbound on a known side, so the merged binding is a
+    straight column pick (left if bound-left else right), never a
+    runtime coalesce. The all-unbound × all-unbound pair (keys = ∅)
+    is the one genuine cross join the semantics require; every other
+    leg is a shuffle/broadcast hash join Catalyst can optimize.
 
     Returns the joined frame with acc's column order
     followed by frame-only columns; term structs (__term__v) merge by
@@ -2599,132 +2518,68 @@ def _compat_join_frames(acc, frame, shared, left_nulls, right_nulls,
 
     from pyspark.sql import functions as F
 
-    leftN = sorted(c for c in shared if c in left_nulls)
-    rightN = set(c for c in shared if c in right_nulls)
-    shared_set = set(shared)
-    dup_structs = {
-        c[len(_TERM_STRUCT_PREFIX):]
+    # right-side column -> (renamed column, the variable it binds):
+    # shared NT keys and the term structs riding along with them
+    renamed = {c: ("__jk_" + c, c) for c in shared}
+    renamed.update({
+        c: ("__jks_" + c, c[len(_TERM_STRUCT_PREFIX):])
         for c in frame.columns
         if c.startswith(_TERM_STRUCT_PREFIX) and c in acc.columns
-    }
+    })
     out_cols = list(acc.columns) + [
         c for c in frame.columns if c not in acc.columns
     ]
     ren = frame
-    for c in shared:
-        ren = ren.withColumnRenamed(c, "__jk_" + c)
-    for b in dup_structs:
-        ren = ren.withColumnRenamed(
-            _TERM_STRUCT_PREFIX + b, "__jks_" + b
-        )
-    left_legs = _mask_project(left_masks, leftN)
-    # lazy localCheckpoint, NOT persist: same recompute protection for
-    # multi-leg consumers, but the cached blocks are released by the
-    # ContextCleaner when the query's frames are garbage-collected —
-    # persist() entries live in the session CacheManager until an
-    # explicit unpersist, so chained updates accumulated cached legs
-    # indefinitely (round-6 ADVICE fix)
-    if len(left_legs) > 1:
-        acc = acc.localCheckpoint(eager=False)
-    if len(left_legs) > 1 or rightN & shared_set:
-        ren = ren.localCheckpoint(eager=False)
+    for c, (new, _v) in renamed.items():
+        ren = ren.withColumnRenamed(c, new)
     pieces = []
-    for A in left_legs:
-        legl = _boundness_leg(acc, A, set(leftN) - A)
-        bound_left = [
-            c for c in shared if c not in leftN or c in A
+    for legl, bound_left, rights in _compat_legs(
+        acc, ren, shared, left_nulls, right_nulls, left_masks,
+        right_masks, "__jk_",
+    ):
+        sel = [
+            F.col(renamed[c][0]).alias(c)
+            if c in renamed and renamed[c][1] not in bound_left
+            else F.col(c)
+            for c in out_cols
         ]
-        bl_set = set(bound_left)
-        rightN_eff = sorted(c for c in bound_left if c in rightN)
-        for B in _mask_project(right_masks, rightN_eff):
-            keys = [
-                c for c in bound_left if c not in rightN_eff or c in B
-            ]
-            legr = _boundness_leg(
-                ren, B, set(rightN_eff) - B,
-                cols={v: "__jk_" + v for v in rightN_eff},
+        for keys, legr in rights:
+            j = (
+                legl.join(legr, _key_eq(keys, "__jk_"), "inner")
+                if keys
+                else legl.crossJoin(legr)
             )
-            if keys:
-                cond = reduce(
-                    lambda a, b: a & b,
-                    [F.col(k) == F.col("__jk_" + k) for k in keys],
-                )
-                j = legl.join(legr, cond, "inner")
-            else:
-                j = legl.crossJoin(legr)
-            sel = []
-            for c in out_cols:
-                if c in shared_set:
-                    sel.append(
-                        (F.col(c) if c in bl_set
-                         else F.col("__jk_" + c)).alias(c)
-                    )
-                elif (c.startswith(_TERM_STRUCT_PREFIX)
-                      and c[len(_TERM_STRUCT_PREFIX):] in dup_structs):
-                    b2 = c[len(_TERM_STRUCT_PREFIX):]
-                    sel.append(
-                        (F.col(c) if b2 in bl_set
-                         else F.col("__jks_" + b2)).alias(c)
-                    )
-                else:
-                    sel.append(F.col(c))
             pieces.append(j.select(*sel))
     return reduce(lambda a, b: a.union(b), pieces)
 
 
 def _compat_minus_frames(acc, sub, shared, left_nulls, right_nulls,
                          left_masks=None, right_masks=None):
-    """SPARQL §8.3.3 MINUS with possibly-unbound shared vars as a
-    UNION OF HASH ANTI-JOINS over boundness legs (replacing the
-    conditional nested-loop anti join).
+    """SPARQL §8.3.3 MINUS with possibly-unbound shared vars as
+    CHAINED HASH ANTI-JOINS per left leg of the :func:`_compat_legs`
+    decomposition (replacing the conditional nested-loop anti join),
+    unioned over the legs.
 
-    Per left leg A, dom(μ1) ∩ shared = boundL; μ1 is removed iff some
-    RHS row has every boundL var unbound-or-equal AND at least one
-    var bound on both sides. Partitioning the (deduped, projected)
-    RHS on B ⊆ boundL ∩ rightN makes each case a plain equi-join on
-    keys = (boundL − rightN) ∪ B; keys = ∅ means an empty domain
-    intersection, which per spec removes NOTHING, so that RHS leg is
-    simply skipped — the decomposition never needs a cross join.
-    Removal-by-any-leg composes as sequential left-anti joins."""
-    from pyspark.sql import functions as F  # noqa: F401  (parity w/ join)
+    μ1 is removed iff some RHS row has every bound_left var
+    unbound-or-equal AND at least one var bound on both sides. Over
+    the deduped, projected RHS each leg pair is a plain equi-join on
+    its keys; keys = ∅ means an empty domain intersection, which per
+    spec removes NOTHING, so that RHS leg is simply skipped — the
+    decomposition never needs a cross join. Removal-by-any-leg
+    composes as sequential left-anti joins."""
+    from functools import reduce
 
-    leftN = sorted(c for c in shared if c in left_nulls)
-    rightN = set(c for c in shared if c in right_nulls)
     ren = sub.select(*shared).dropDuplicates()
     for c in shared:
         ren = ren.withColumnRenamed(c, "__mk_" + c)
-    left_legs = _mask_project(left_masks, leftN)
-    # lazy localCheckpoint instead of persist — see _compat_join_frames
-    if len(left_legs) > 1:
-        acc = acc.localCheckpoint(eager=False)
-    if len(left_legs) > 1 or rightN:
-        ren = ren.localCheckpoint(eager=False)
     pieces = []
-    from functools import reduce
-
-    for A in left_legs:
-        legl = _boundness_leg(acc, A, set(leftN) - A)
-        bound_left = [c for c in shared if c not in leftN or c in A]
-        if not bound_left:
-            # disjoint domains: compatible but removes nothing (§8.3.3)
-            pieces.append(legl)
-            continue
-        rightN_eff = sorted(c for c in bound_left if c in rightN)
-        for B in _mask_project(right_masks, rightN_eff):
-            keys = [
-                c for c in bound_left if c not in rightN_eff or c in B
-            ]
-            if not keys:
-                continue  # no common bound var -> does not remove
-            legr = _boundness_leg(
-                ren, B, set(rightN_eff) - B,
-                cols={v: "__mk_" + v for v in rightN_eff},
-            )
-            cond = reduce(
-                lambda a, b: a & b,
-                [F.col(k) == F.col("__mk_" + k) for k in keys],
-            )
-            legl = legl.join(legr, cond, "left_anti")
+    for legl, _bound_left, rights in _compat_legs(
+        acc, ren, shared, left_nulls, right_nulls, left_masks,
+        right_masks, "__mk_",
+    ):
+        for keys, legr in rights:
+            if keys:  # no common bound var -> does not remove
+                legl = legl.join(legr, _key_eq(keys, "__mk_"), "left_anti")
         pieces.append(legl)
     return reduce(lambda a, b: a.union(b), pieces)
 
@@ -2748,7 +2603,7 @@ def _compat_leftjoin_frames(acc, sub, shared, left_nulls, right_nulls,
     rid = "__lj_rid"
     # lazy localCheckpoint: the row ids must be STABLE across the two
     # consumers (the anti-join keys on them); cached blocks release on
-    # GC instead of leaking in the CacheManager — see _compat_join_frames
+    # GC instead of leaking in the CacheManager — see _compat_legs
     acc = acc.withColumn(
         rid, F.monotonically_increasing_id()
     ).localCheckpoint(eager=False)
@@ -2794,7 +2649,7 @@ def _eval_group_impl(
     because ?g is just another binding column to them."""
     from functools import reduce
 
-    from argo_spark.ops.bgp import bgp_match
+    from argo_spark.ops.bgp import _bgp_plan
 
     acc = None
     maybe_null: set[str] = set()
@@ -2805,19 +2660,7 @@ def _eval_group_impl(
         frame_non_nt: set[str] = set()
         frame_masks = {frozenset()}
         if kind == "bgp":
-            frame = (
-                _bgp_frame_structs(triples, payload, graph_var=graph_var)
-                if structs
-                else bgp_match(
-                    triples, payload, distinct=False, graph_var=graph_var
-                )
-            )
-        elif kind == "closure":
-            if structs:
-                raise SparqlSyntaxError(
-                    "path closures inside CONSTRUCT are not supported"
-                )
-            frame = _closure_frame(triples, *payload, graph_var=graph_var)
+            frame = _bgp_plan(triples, payload, graph_var, structs)
         elif kind == "closure_group":
             frame = _closure_group_frame(
                 triples, *payload, structs, graph_var=graph_var
@@ -3837,8 +3680,7 @@ def sparql_describe(triples: DataFrame, query: str) -> DataFrame:
     spark = triples.sparkSession
     # FROM / FROM NAMED: both the WHERE evaluation and the
     # description itself read the resolved active default graph
-    triples, pushed = _resolve_dataset(triples, dataset)
-    try:
+    with _dataset_scope(triples, dataset) as triples:
         if iris:
             resources = spark.createDataFrame(
                 [("<" + i + ">",) for i in sorted(set(iris))],
@@ -3881,9 +3723,6 @@ def sparql_describe(triples: DataFrame, query: str) -> DataFrame:
             resources, on=subject_nt == resources["__res"],
             how="left_semi",
         ).select(*_CANON_COLS)
-    finally:
-        if pushed:
-            _DATASET_CTX.pop()
 
 
 def sparql_construct(triples: DataFrame, query: str) -> DataFrame:
@@ -3899,14 +3738,10 @@ def sparql_construct(triples: DataFrame, query: str) -> DataFrame:
     (dropDuplicates over the canonical columns) per 'CONSTRUCT
     produces an RDF graph'."""
     template, group, limit, order, offset, dataset = parse_construct(query)
-    active, pushed = _resolve_dataset(triples, dataset)
-    try:
+    with _dataset_scope(triples, dataset) as active:
         return _instantiate_template(
             active, template, group, limit, order, offset
         )
-    finally:
-        if pushed:
-            _DATASET_CTX.pop()
 
 
 def _instantiate_template(
@@ -4174,14 +4009,10 @@ def _select_frame(triples: DataFrame, parts, graph_var: str | None = None):
             "FROM / FROM NAMED inside a GRAPH ?var subquery is not "
             "supported"
         )
-    active, pushed = _resolve_dataset(triples, dataset)
-    try:
+    with _dataset_scope(triples, dataset) as active:
         out, group_nulls, group_non_nt, _gmasks = _eval_group_impl(
             active, group, False, False, graph_var=graph_var
         )
-    finally:
-        if pushed:
-            _DATASET_CTX.pop()
     if graph_var is not None and (
         graph_var not in out.columns or graph_var in group_nulls
     ):
@@ -4461,12 +4292,8 @@ def sparql_ask(triples: DataFrame, query: str) -> bool:
     """ASK text -> bool (sparqlservice.go:57-70 semantics); FROM /
     FROM NAMED / GRAPH supported as in SELECT (round 5)."""
     group, dataset = parse_ask(query)
-    active, pushed = _resolve_dataset(triples, dataset)
-    try:
+    with _dataset_scope(triples, dataset) as active:
         return eval_group(active, group).limit(1).count() > 0
-    finally:
-        if pushed:
-            _DATASET_CTX.pop()
 
 
 # ---------------------------------------------------------------------------
@@ -4980,17 +4807,15 @@ def sparql_update(triples: DataFrame, update: str) -> DataFrame:
             )
         elif op[0] == "modify":
             _, del_tmpl, ins_tmpl, group, with_iri, using = op
-            if quad_mode:
-                # §3.1.3: USING builds the WHERE dataset; absent
-                # USING, WITH names the active default graph
-                dataset = (
-                    using if using is not None
-                    else (([with_iri], []) if with_iri else None)
-                )
-                active, pushed = _resolve_dataset(triples, dataset)
-            else:
-                active, pushed = triples, False
-            try:
+            # §3.1.3: USING builds the WHERE dataset; absent USING,
+            # WITH names the active default graph (neither is set on
+            # a triple-mode request, whose g-less frame resolves to
+            # itself)
+            dataset = (
+                using if using is not None
+                else (([with_iri], []) if with_iri else None)
+            )
+            with _dataset_scope(triples, dataset) as active:
                 gone = (
                     _instantiate_template(
                         active, del_tmpl, group,
@@ -5007,9 +4832,6 @@ def sparql_update(triples: DataFrame, update: str) -> DataFrame:
                     if ins_tmpl
                     else None
                 )
-            finally:
-                if pushed:
-                    _DATASET_CTX.pop()
             if gone is not None:
                 triples = _graph_minus(triples, gone, cols)
             if new is not None:

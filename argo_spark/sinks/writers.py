@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from argo_spark.manifest import hadoop_fs
 from argo_spark.namespaces import NAMESPACES, RDF_TYPE, split_prefix, split_prefix_base, split_prefix_local
 from argo_spark.terms import (
     KIND_BLANK,
@@ -163,8 +164,7 @@ def _write_driver_file(spark, path: str, text: str) -> None:
     part files (hdfs://, s3a://, file:…) without starting a Spark job.
     Whatever is already at ``path`` is replaced, including a directory
     (the sidecar layout of older writes), as ``mode="overwrite"`` would."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, path)
     fs.delete(hpath, True)
     out = fs.create(hpath, False)
     try:

@@ -400,22 +400,40 @@ def test_construct_skips_unbound_and_invalid(spark):
 
 
 def test_construct_preserves_escaped_literals(spark):
-    """The struct path must carry RAW literal values — a value
+    """The struct path must carry RAW term components — a value
     containing backslash sequences cannot be recovered from its NT
-    form with column expressions."""
+    form with column expressions; lang tags, datatypes and blank
+    subjects copy through exactly."""
     from argo_spark.ops.sparql import sparql_construct
+    from argo_spark.terms import blank
 
     tricky = 'a\\nb"q\tc'  # raw backslash+n, quote, real tab
+    XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
     g = TripleGraph.of(
         spark,
-        [TripleT(iri("http://e/a"), iri("http://e/p"), literal(tricky))],
+        [
+            TripleT(iri("http://e/a"), iri("http://e/p"), literal(tricky)),
+            TripleT(iri("http://e/b"), iri("http://e/p"),
+                    literal("Bob", lang="en")),
+            TripleT(iri("http://e/c"), iri("http://e/p"),
+                    literal("7", dt=XSD_INT)),
+            TripleT(blank("b0"), iri("http://e/p"), iri("http://e/d")),
+        ],
     ).df
     out = sparql_construct(
         g,
         "CONSTRUCT { ?s <http://e/q> ?v } WHERE { ?s <http://e/p> ?v }",
     )
-    r = out.collect()[0]
-    assert r.o_value == tricky and r.p_value == "http://e/q"
+    assert {
+        (r.s_kind, r.s_value, r.p_value, r.o_kind, r.o_value, r.o_lang,
+         r.o_dt)
+        for r in out.collect()
+    } == {
+        (0, "http://e/a", "http://e/q", 2, tricky, None, None),
+        (0, "http://e/b", "http://e/q", 2, "Bob", "en", None),
+        (0, "http://e/c", "http://e/q", 2, "7", None, XSD_INT),
+        (1, "b0", "http://e/q", 0, "http://e/d", None, None),
+    }
 
 
 def test_construct_set_semantics(spark):
@@ -906,6 +924,32 @@ def test_path_var_reserved(spark):
             path_graph(spark),
             "SELECT ?__path1 WHERE { ?__path1 <http://e/knows> ?o }",
         )
+
+
+def test_term_struct_var_reserved(spark):
+    """``?__term__x`` names an internal term-struct column, which the
+    join, MINUS and OPTIONAL planners never use as a key — it would
+    turn the join below into a cross join, make MINUS remove nothing
+    and OPTIONAL raise, so the prefix is rejected at parse time."""
+    E = "http://e/"
+    g = TripleGraph.of(
+        spark,
+        [
+            TripleT(iri(E + "a"), iri(E + "p"), iri(E + "b")),
+            TripleT(iri(E + "b"), iri(E + "p"), iri(E + "c")),
+        ],
+    ).df
+    head = (
+        "SELECT * WHERE { { ?__term__x <http://e/p> ?o } "
+        "UNION { ?__term__x <http://e/p> ?o } "
+    )
+    for tail in (
+        "?__term__x <http://e/p> ?o2 }",
+        "MINUS { ?__term__x <http://e/p> <http://e/c> } }",
+        "OPTIONAL { ?__term__x <http://e/p> ?z } }",
+    ):
+        with pytest.raises(SparqlSyntaxError, match="term-struct"):
+            sparql_select(g, head + tail)
 
 
 # -- GROUP BY + aggregates ------------------------------------------------
@@ -3603,6 +3647,31 @@ def test_graph_var_closures(spark):
     assert {(r.g, r.x, r.y) for r in out.collect()} == {
         ("<http://g/2>", "<http://e/c>", "<http://e/e>"),
     }
+    # one constant endpoint per operator, each evaluated under GRAPH ?g
+    # (pairs per graph; a constant endpoint is a zero-length node of
+    # every graph) and over the merged, g-less triples
+    merged_df = q.drop("g_value")
+    for pat, per_graph, merged in [
+        ("<http://e/a> <http://e/p>+ ?y", {(1, "b"), (1, "c")},
+         {"b", "c", "d"}),
+        ("?y <http://e/p>+ <http://e/d>", {(2, "c")}, {"a", "b", "c"}),
+        ("<http://e/c> ^<http://e/p>+ ?y", {(1, "a"), (1, "b")},
+         {"a", "b"}),
+        ("<http://e/c> <http://e/p>* ?y", {(1, "c"), (2, "c"), (2, "d")},
+         {"c", "d"}),
+        ("<http://e/b> <http://e/p>? ?y", {(1, "b"), (1, "c"), (2, "b")},
+         {"b", "c"}),
+    ]:
+        out = sparql_select(
+            q, f"SELECT ?g ?y WHERE {{ GRAPH ?g {{ {pat} }} }}"
+        )
+        assert {(r.g, r.y) for r in out.collect()} == {
+            (f"<http://g/{g}>", f"<http://e/{y}>") for g, y in per_graph
+        }, pat
+        out = sparql_select(merged_df, f"SELECT ?y WHERE {{ {pat} }}")
+        assert {r.y for r in out.collect()} == {
+            f"<http://e/{y}>" for y in merged
+        }, pat
 
 
 def test_graph_var_subquery(spark):
