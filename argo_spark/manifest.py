@@ -9,7 +9,9 @@ overwrite, not append), and a bucket becomes visible ONLY when its row
 is appended to the manifest parquet after the data commit. A crash
 between data write and manifest append re-runs that bucket from
 scratch; readers read the manifest's bucket list and open only those
-buckets, so half-written ones are never observed. With an Iceberg
+buckets, so half-written ones are never observed. Each commit appends
+one part file to the manifest: its rows are a driver-built local frame
+(``session.local_frame``), written as one partition. With an Iceberg
 catalog the same layout maps 1:1 onto a partitioned table + snapshots.
 """
 
@@ -20,6 +22,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from argo_spark.session import local_frame
 
 MANIFEST_SCHEMA = (
     "bucket int, n_pages long, n_triples long, run_id string, "
@@ -39,18 +43,20 @@ class Manifest:
         self.path = path.rstrip("/") + "/manifest"
 
     def read(self) -> DataFrame:
-        """The lineage rows; an empty frame (no Spark job) before any commit."""
+        """The lineage rows; before any commit an empty local frame, on
+        which no action starts a Spark job."""
         fs, hpath = hadoop_fs(self.spark, self.path)
         if not fs.exists(hpath):
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_frame(self.spark, [], MANIFEST_SCHEMA)
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def done_buckets(self) -> list[int]:
+        """Committed buckets; no Spark job before the first commit."""
         return sorted({r.bucket for r in self.read().select("bucket").collect()})
 
     def record(self, stats: DataFrame, run_id: str) -> None:
-        """Append per-bucket lineage rows. stats: (bucket, n_pages,
-        n_triples, min_url, max_url)."""
+        """Append per-bucket lineage rows as one part file. stats:
+        (bucket, n_pages, n_triples, min_url, max_url)."""
         (
             stats.withColumn("run_id", F.lit(run_id))
             .withColumn("committed_at", F.lit(time.time()))
@@ -58,6 +64,7 @@ class Manifest:
                 "bucket", "n_pages", "n_triples", "run_id",
                 "committed_at", "min_url", "max_url",
             )
+            .coalesce(1)
             .write.mode("append")
             .parquet(self.path)
         )

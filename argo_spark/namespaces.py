@@ -122,11 +122,3 @@ def split_prefix_local(uri: Column) -> Column:
         .when(F.instr(uri, "/") > 0, F.substring_index(uri, "/", -1))
         .otherwise(uri)
     )
-
-
-def prefixes_df(spark):
-    """The static prefix table as a small DataFrame (broadcast-sized)."""
-    return spark.createDataFrame(
-        [(p, b) for p, b in sorted(NAMESPACES.items())],
-        "prefix string, base_uri string",
-    )

@@ -52,6 +52,7 @@ def _warn_uncapped_pairs(tag: str, remedy: str = "set max_bucket or use star-edg
     log.warning(msg)
 
 from argo_spark.namespaces import DBP, FOAF, SCHEMA
+from argo_spark.session import local_frame
 from argo_spark.terms import KIND_IRI
 
 
@@ -841,9 +842,11 @@ def entity_dedup_mapping(
     (:func:`_driver_entity_mapping`): one Spark job instead of ~20
     tiny ones, removing ~8s of pure scheduling serial fraction from
     the flagship (pinned equal to the distributed path by
-    test_dedup's equivalence test). Pass ``None`` to force the
-    distributed path; above the cap it is taken automatically — at
-    web scale the entity vocabulary can exceed any driver."""
+    test_dedup's equivalence test); the map comes back as a local
+    frame, so broadcasting or counting it forks no Python worker.
+    Pass ``None`` to force the distributed path; above the cap it is
+    taken automatically — at web scale the entity vocabulary can
+    exceed any driver."""
     surf = (
         entity_surface_forms(triples, iri_prefix)
         .groupBy("entity")
@@ -874,8 +877,8 @@ def entity_dedup_mapping(
             mapping = _driver_entity_mapping(
                 [(r.entity, r.surface) for r in head], shingle_k, threshold
             )
-            return triples.sparkSession.createDataFrame(
-                mapping, "entity string, canonical string"
+            return local_frame(
+                triples.sparkSession, mapping, "entity string, canonical string"
             )
         log.info(
             "entity_dedup_mapping: > %d entities — distributed path",

@@ -196,6 +196,7 @@ from pyspark.sql import DataFrame
 
 from argo_spark.namespaces import RDF_TYPE
 from argo_spark.ops.bgp import _TERM_STRUCT_PREFIX
+from argo_spark.session import local_frame
 from argo_spark.terms import KIND_LITERAL, Term
 
 _TOKEN = re.compile(
@@ -2019,7 +2020,7 @@ def _values_frame(spark, vnames, rows, with_structs: bool) -> DataFrame:
                 f"`{_TERM_STRUCT_PREFIX}{v}` "
                 "struct<kind:tinyint,value:string,lang:string,dt:string>"
             )
-    frame = spark.createDataFrame(data, ", ".join(fields))
+    frame = local_frame(spark, data, ", ".join(fields))
     return F.broadcast(frame)
 
 
@@ -2113,7 +2114,7 @@ def _service_frame(
                     else None
                 )
         data.append(tuple(row))
-    frame = spark.createDataFrame(data, ", ".join(fields))
+    frame = local_frame(spark, data, ", ".join(fields))
     return frame, nulls, masks
 
 
@@ -2261,8 +2262,8 @@ def _closure_group_frame(triples, s, group, srcv, dstv, op, o,
         ]
         if consts:
             if graph_var is None:
-                extra = triples.sparkSession.createDataFrame(
-                    [(c,) for c in consts], "n string"
+                extra = local_frame(
+                    triples.sparkSession, [(c,) for c in consts], "n string"
                 )
             else:
                 g_nt = F.concat(
@@ -2272,8 +2273,9 @@ def _closure_group_frame(triples, s, group, srcv, dstv, op, o,
                     g_nt.alias("g")
                 ).dropDuplicates()
                 extra = graphs.crossJoin(
-                    triples.sparkSession.createDataFrame(
-                        [(c,) for c in consts], "cn string"
+                    local_frame(
+                        triples.sparkSession, [(c,) for c in consts],
+                        "cn string",
                     )
                 ).select(
                     F.struct(
@@ -3682,7 +3684,8 @@ def sparql_describe(triples: DataFrame, query: str) -> DataFrame:
     # description itself read the resolved active default graph
     with _dataset_scope(triples, dataset) as triples:
         if iris:
-            resources = spark.createDataFrame(
+            resources = local_frame(
+                spark,
                 [("<" + i + ">",) for i in sorted(set(iris))],
                 "__res string",
             )
@@ -4616,7 +4619,7 @@ def _const_triples_frame(spark, template, quads: bool = False) -> DataFrame:
     )
     if quads:
         schema += ", g_value string"
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _graph_minus(triples: DataFrame, gone: DataFrame, cols=None) -> DataFrame:

@@ -36,6 +36,7 @@ from argo_spark.manifest import Manifest, hadoop_fs, new_run_id
 from argo_spark.ntriples import write_ntriples
 from argo_spark.ops.dedup import apply_entity_mapping, entity_dedup_mapping
 from argo_spark.schema import TRIPLE_COLS
+from argo_spark.session import local_frame
 
 
 def bucket_col(n_buckets: int):
@@ -106,7 +107,7 @@ class KgPipeline:
             F.max("url").alias("max_url"),
         )
         rows = stats.collect()
-        self.manifest.record(self.spark.createDataFrame(rows, stats.schema), run_id)
+        self.manifest.record(local_frame(self.spark, rows, stats.schema), run_id)
 
         n_pages = sum(r.n_pages for r in rows)
         n_triples = sum(r.n_triples for r in rows)
@@ -125,7 +126,7 @@ class KgPipeline:
         found = fs.globStatus(pattern) if buckets else None
         schema = EXTRACT_SCHEMA + ", bucket int"
         if not found:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return (
             self.spark.read.schema(schema)
             .option("basePath", self.triples_path)

@@ -10,8 +10,10 @@ timezone pinned for oracle comparison.
 from __future__ import annotations
 
 import os
+from datetime import datetime, timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -46,3 +48,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for rows already on the
+    driver, kept in the JVM as a local relation: the rows cross once as
+    an Arrow table, so ``collect`` starts no Spark job and no action on
+    the frame forks a Python worker (a list-built frame is a
+    parallelized Python RDD). A naive top-level datetime is local time,
+    as in the list path."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+
+    def cell(v):
+        return v.astimezone(timezone.utc) if isinstance(v, datetime) else v
+
+    columns = [
+        pa.array([cell(r[i]) for r in rows], type=f.type)
+        for i, f in enumerate(arrow)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)

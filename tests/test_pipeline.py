@@ -1,16 +1,23 @@
 """End-to-end pipeline: exactly-once resume, committed-only reads,
-fresh-directory reads, P/R after materialize, one squish per
-materialize, skewed predicate stats."""
+fresh-directory reads, manifest lineage, driver-built local frames,
+P/R after materialize, one squish per materialize, skewed predicate
+stats."""
 
 from __future__ import annotations
+
+import os
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
+from argo_spark.extract.rdfa import EXTRACT_SCHEMA
 from argo_spark.manifest import MANIFEST_SCHEMA, Manifest
+from argo_spark.ops.bgp import _TERM_STRUCT_PREFIX
 from argo_spark.pages import expected_triples, synthesize_pages
 from argo_spark.pipeline import KgPipeline, predicate_stats
 from argo_spark.schema import TRIPLE_COLS
+from argo_spark.session import local_frame
 
 
 @pytest.fixture()
@@ -87,16 +94,20 @@ def test_rerun_bucket_is_idempotent(spark, outdir):
 
 def test_fresh_directory_reads(spark, outdir):
     """Before any commit the manifest and the committed view are empty
-    frames with their fixed schemas; reading the manifest starts no
-    Spark job. Buckets that extract no triples are never committed."""
+    frames with their fixed schemas; reading the manifest, listing its
+    buckets and collecting the committed view start no Spark job.
+    Buckets that extract no triples are never committed."""
     empty_manifest = spark.createDataFrame([], MANIFEST_SCHEMA).schema
     m, n_jobs = _jobs_started(spark, "fresh-manifest", Manifest(spark, outdir).read)
     assert n_jobs == 0
     assert m.schema == empty_manifest and m.count() == 0
+    done, n_jobs = _jobs_started(spark, "fresh-done", Manifest(spark, outdir).done_buckets)
+    assert done == [] and n_jobs == 0
 
     pipe = KgPipeline(spark, outdir, n_buckets=16)
     fresh = pipe.triples()
-    assert fresh.count() == 0
+    rows, n_jobs = _jobs_started(spark, "fresh-triples", fresh.collect)
+    assert rows == [] and n_jobs == 0
     # 5 pages over 16 buckets: most buckets stay empty
     stats = pipe.run(synthesize_pages(spark, 5))
     assert stats.n_pages == 5 and 0 < stats.n_buckets_processed < 16
@@ -106,6 +117,96 @@ def test_fresh_directory_reads(spark, outdir):
     committed = pipe.triples()
     assert committed.schema == table.schema
     assert committed.count() == table.count() == stats.n_triples
+
+
+def test_manifest_attests_committed_files(spark, outdir):
+    """Each commit appends one manifest part file, and the manifest rows
+    are the per-bucket stats of what landed on disk."""
+    pipe = KgPipeline(spark, outdir, n_buckets=8)
+    pages = synthesize_pages(spark, N)
+
+    def part_files():
+        return sorted(
+            f for f in os.listdir(pipe.manifest.path) if f.startswith("part-")
+        )
+
+    pipe.run(pages, max_buckets=2)
+    first = part_files()
+    assert len(first) == 1
+    stats = pipe.run(pages, max_buckets=3)
+    assert stats.n_buckets_processed == 3
+    assert len(part_files()) == 2 and set(first) < set(part_files())
+
+    cols = ["bucket", "n_pages", "n_triples", "min_url", "max_url"]
+    recorded = pipe.manifest.read().select(*cols).orderBy("bucket").collect()
+    recomputed = (
+        pipe.triples()
+        .groupBy("bucket")
+        .agg(
+            F.countDistinct("url").alias("n_pages"),
+            F.count(F.lit(1)).alias("n_triples"),
+            F.min("url").alias("min_url"),
+            F.max("url").alias("max_url"),
+        )
+        .select(*cols)
+        .orderBy("bucket")
+        .collect()
+    )
+    assert len(recorded) == 5 and recorded == recomputed
+
+
+_VALUES_SCHEMA = (
+    f"`x` string, `{_TERM_STRUCT_PREFIX}x` "
+    "struct<kind:tinyint,value:string,lang:string,dt:string>"
+)
+
+
+@pytest.mark.parametrize(
+    "schema, rows",
+    [
+        (
+            MANIFEST_SCHEMA,
+            [
+                (3, 12, 340, "a1b2c3", 1.7e9, "http://a.example/", "http://z.example/"),
+                (5, 1, 0, None, None, None, None),
+            ],
+        ),
+        (
+            EXTRACT_SCHEMA + ", bucket int",
+            [
+                (0, "http://e/s", "http://e/p", 1, "chat", "fr", None,
+                 "http://e/page", datetime(2024, 2, 29, 23, 59, 58, 123456), 7),
+                (2, "b0", "http://e/p", 0, "http://e/o", None, None,
+                 "http://e/page", None, None),
+            ],
+        ),
+        (
+            "entity string, canonical string",
+            [("http://dbpedia.org/resource/Paris_", "http://dbpedia.org/resource/Paris")],
+        ),
+        (
+            _VALUES_SCHEMA,
+            [
+                ('"chat"@fr', (1, "chat", "fr", None)),
+                ("<http://e/o>", (0, "http://e/o", None, None)),
+                (None, None),
+            ],
+        ),
+        (MANIFEST_SCHEMA, []),
+    ],
+    ids=["manifest", "extract", "mapping", "values", "empty"],
+)
+def test_local_frame_matches_list_frame(spark, request, schema, rows):
+    """local_frame is createDataFrame(list) without the Python RDD: same
+    schema and rows, and collect starts no Spark job."""
+    listed = spark.createDataFrame(rows, schema)
+    local = local_frame(spark, rows, schema)
+    assert local.schema == listed.schema
+    tag = request.node.callspec.id
+    got, local_jobs = _jobs_started(spark, "local-" + tag, local.collect)
+    want, list_jobs = _jobs_started(spark, "list-" + tag, listed.collect)
+    assert got == want
+    assert local_jobs == 0 and list_jobs >= 1
 
 
 def test_materialize_squishes_once(spark, outdir):
