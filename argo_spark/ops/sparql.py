@@ -2429,25 +2429,27 @@ def _compat_too_wide(shared, left_nulls, right_nulls,
     return n_l * n_r > _COMPAT_MAX_LEGS
 
 
-def _boundness_leg(df, bound, null, cols=None):
+def _boundness_leg(df, bound, null):
     """Filter ``df`` to the rows where every var in ``bound`` is
-    bound and every var in ``null`` is unbound. ``cols`` maps var ->
-    column name (identity by default)."""
+    bound and every var in ``null`` is unbound, and drop the ``null``
+    vars' columns with their term structs: in this leg the other side
+    supplies those bindings, or nothing does."""
     from pyspark.sql import functions as F
 
-    get = (lambda v: F.col(cols[v])) if cols else F.col
     cond = F.lit(True)
     for v in sorted(bound):
-        cond = cond & get(v).isNotNull()
+        cond = cond & F.col(v).isNotNull()
     for v in sorted(null):
-        cond = cond & get(v).isNull()
-    return df.where(cond)
+        cond = cond & F.col(v).isNull()
+    return df.where(cond).drop(
+        *[c for v in sorted(null) for c in (v, _TERM_STRUCT_PREFIX + v)]
+    )
 
 
-def _compat_legs(acc, ren, shared, left_nulls, right_nulls,
-                 left_masks, right_masks, rename_prefix):
+def _compat_legs(left, right, shared, left_nulls, right_nulls,
+                 left_masks, right_masks):
     """Boundness-leg decomposition shared by the §18.5 compatibility
-    Join and the §8.3.3 MINUS -> yields ``(left_leg, bound_left,
+    Join, the §8.3.3 MINUS and the LeftJoin -> yields ``(left_leg,
     [(keys, right_leg), ...])``.
 
     Partition the LEFT into one leg per boundness mask A of its
@@ -2455,104 +2457,89 @@ def _compat_legs(acc, ren, shared, left_nulls, right_nulls,
     Within a leg every var in bound_left = (shared − leftN) ∪ A is
     definitely bound, so a right row is compatible iff each
     bound_left var is unbound-or-equal on the right — partition the
-    RIGHT (``ren``: shared vars renamed to ``rename_prefix + v``) on
-    the boundness mask B of bound_left ∩ rightN, and the (A, B) pair
-    matches by PLAIN EQUALITY on keys = (bound_left − rightN) ∪ B.
+    RIGHT on the boundness mask B of bound_left ∩ rightN, and the
+    (A, B) pair matches by PLAIN EQUALITY on keys = (bound_left −
+    rightN) ∪ B.
 
-    Both inputs are lazily localCheckpointed when they feed more than
-    one leg, so the upstream plan runs once, not 2^n times — NOT
-    persist(): the cached blocks are released by the ContextCleaner
-    when the query's frames are garbage-collected, where persist()
-    entries live in the session CacheManager until an explicit
-    unpersist, so chained updates accumulated cached legs
-    indefinitely (round-6 ADVICE fix)."""
+    Each leg drops the shared columns (and term structs) its mask
+    marks as unbound, so the keys are the only shared variables a
+    leg pair has in common and ``left_leg.join(right_leg, on=keys)``
+    takes every other variable from the one side that binds it. The
+    inputs are neither cached nor checkpointed: Spark recomputes a
+    leg from lineage and reuses the upstream exchanges legs share."""
     leftN = sorted(c for c in shared if c in left_nulls)
     rightN = {c for c in shared if c in right_nulls}
-    left_legs = _mask_project(left_masks, leftN)
-    if len(left_legs) > 1:
-        acc = acc.localCheckpoint(eager=False)
-    if len(left_legs) > 1 or rightN:
-        ren = ren.localCheckpoint(eager=False)
-    for A in left_legs:
+    for A in _mask_project(left_masks, leftN):
         bound_left = [c for c in shared if c not in leftN or c in A]
         rightN_eff = sorted(c for c in bound_left if c in rightN)
-        cols = {v: rename_prefix + v for v in rightN_eff}
         yield (
-            _boundness_leg(acc, A, set(leftN) - A),
-            bound_left,
+            _boundness_leg(left, A, set(leftN) - A),
             [
                 (
                     [c for c in bound_left if c not in rightN_eff or c in B],
-                    _boundness_leg(ren, B, set(rightN_eff) - B, cols=cols),
+                    _boundness_leg(right, B, set(rightN_eff) - B),
                 )
                 for B in _mask_project(right_masks, rightN_eff)
             ],
         )
 
 
-def _key_eq(keys, rename_prefix):
-    from functools import reduce
-
+def _null_pad(df, fields):
+    """``df`` projected onto ``fields`` (StructFields); a column the
+    frame lacks is a variable it leaves unbound -> typed NULL."""
     from pyspark.sql import functions as F
 
-    return reduce(
-        lambda a, b: a & b,
-        [F.col(k) == F.col(rename_prefix + k) for k in keys],
-    )
+    return df.select(*[
+        F.col(f.name) if f.name in df.columns
+        else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in fields
+    ])
+
+
+def _joined_fields(left, right):
+    """Output schema of a join: left's columns, then right-only ones."""
+    return list(left.schema.fields) + [
+        f for f in right.schema.fields if f.name not in left.columns
+    ]
+
+
+def _join_legs(legl, rights, fields):
+    """One left leg's share of the §18.5 Join: the union of its leg
+    pairs' equi-joins, projected onto ``fields``. The pair with no
+    keys (the all-unbound × all-unbound pair) is the one genuine
+    cross join the semantics require. A key's term struct is taken
+    from the left."""
+    from functools import reduce
+
+    pieces = []
+    for keys, legr in rights:
+        legr = legr.drop(
+            *[c for c in legl.columns if c.startswith(_TERM_STRUCT_PREFIX)]
+        )
+        j = legl.join(legr, on=keys) if keys else legl.crossJoin(legr)
+        pieces.append(_null_pad(j, fields))
+    return reduce(lambda a, b: a.union(b), pieces)
 
 
 def _compat_join_frames(acc, frame, shared, left_nulls, right_nulls,
                         left_masks=None, right_masks=None):
     """SPARQL §18.5 compatibility Join as a UNION OF HASH EQUI-JOINS
-    (the 100-TB shape — no nested-loop/cartesian plan) over the
-    :func:`_compat_legs` decomposition. Vars outside a leg pair's
-    keys are unbound on a known side, so the merged binding is a
-    straight column pick (left if bound-left else right), never a
-    runtime coalesce. The all-unbound × all-unbound pair (keys = ∅)
-    is the one genuine cross join the semantics require; every other
-    leg is a shuffle/broadcast hash join Catalyst can optimize.
+    (the 100-TB shape — no nested-loop/cartesian plan besides the
+    keyless pair) over the :func:`_compat_legs` decomposition.
 
-    Returns the joined frame with acc's column order
-    followed by frame-only columns; term structs (__term__v) merge by
-    the same bound-side rule. Bag semantics preserved: the legs
-    partition the input, so the union is exact."""
+    Returns the joined frame with acc's column order followed by
+    frame-only columns. Bag semantics preserved: the legs partition
+    the input, so the union is exact."""
     from functools import reduce
 
-    from pyspark.sql import functions as F
-
-    # right-side column -> (renamed column, the variable it binds):
-    # shared NT keys and the term structs riding along with them
-    renamed = {c: ("__jk_" + c, c) for c in shared}
-    renamed.update({
-        c: ("__jks_" + c, c[len(_TERM_STRUCT_PREFIX):])
-        for c in frame.columns
-        if c.startswith(_TERM_STRUCT_PREFIX) and c in acc.columns
-    })
-    out_cols = list(acc.columns) + [
-        c for c in frame.columns if c not in acc.columns
-    ]
-    ren = frame
-    for c, (new, _v) in renamed.items():
-        ren = ren.withColumnRenamed(c, new)
-    pieces = []
-    for legl, bound_left, rights in _compat_legs(
-        acc, ren, shared, left_nulls, right_nulls, left_masks,
-        right_masks, "__jk_",
-    ):
-        sel = [
-            F.col(renamed[c][0]).alias(c)
-            if c in renamed and renamed[c][1] not in bound_left
-            else F.col(c)
-            for c in out_cols
-        ]
-        for keys, legr in rights:
-            j = (
-                legl.join(legr, _key_eq(keys, "__jk_"), "inner")
-                if keys
-                else legl.crossJoin(legr)
-            )
-            pieces.append(j.select(*sel))
-    return reduce(lambda a, b: a.union(b), pieces)
+    fields = _joined_fields(acc, frame)
+    return reduce(lambda a, b: a.union(b), [
+        _join_legs(legl, rights, fields)
+        for legl, rights in _compat_legs(
+            acc, frame, shared, left_nulls, right_nulls, left_masks,
+            right_masks,
+        )
+    ])
 
 
 def _compat_minus_frames(acc, sub, shared, left_nulls, right_nulls,
@@ -2571,18 +2558,18 @@ def _compat_minus_frames(acc, sub, shared, left_nulls, right_nulls,
     composes as sequential left-anti joins."""
     from functools import reduce
 
-    ren = sub.select(*shared).dropDuplicates()
-    for c in shared:
-        ren = ren.withColumnRenamed(c, "__mk_" + c)
+    sub = sub.select(*shared).dropDuplicates()
     pieces = []
-    for legl, _bound_left, rights in _compat_legs(
-        acc, ren, shared, left_nulls, right_nulls, left_masks,
-        right_masks, "__mk_",
+    for legl, rights in _compat_legs(
+        acc, sub, shared, left_nulls, right_nulls, left_masks,
+        right_masks,
     ):
         for keys, legr in rights:
             if keys:  # no common bound var -> does not remove
-                legl = legl.join(legr, _key_eq(keys, "__mk_"), "left_anti")
-        pieces.append(legl)
+                legl = legl.join(
+                    legr.select(*keys), on=keys, how="left_anti"
+                )
+        pieces.append(_null_pad(legl, acc.schema.fields))
     return reduce(lambda a, b: a.union(b), pieces)
 
 
@@ -2590,43 +2577,39 @@ def _compat_leftjoin_frames(acc, sub, shared, left_nulls, right_nulls,
                             deferred_filters=(), left_masks=None,
                             right_masks=None):
     """SPARQL LeftJoin (OPTIONAL) with possibly-unbound shared vars,
-    decomposed scale-first: matched = the §18.5 compatibility join
-    (union of hash equi-joins, _compat_join_frames) with any deferred
-    LeftJoin expressions (§18.2.1) applied to the MERGED rows
-    (expression error or false -> not a match); unmatched = a hash
-    anti-join of the id-stamped left against the matched ids,
-    null-extended with the right-only columns. The row id makes
-    'matched by ANY boundness leg' exact under bag semantics —
-    duplicate left rows keep independent ids and therefore
-    independent fates. Every join in the plan is hash-based; the left
-    is persisted so the id assignment is computed once."""
+    per left leg of the :func:`_compat_legs` decomposition: matched =
+    the leg's §18.5 compatibility join (:func:`_join_legs`) with any
+    deferred LeftJoin expressions (§18.2.1) applied to the MERGED
+    rows (expression error or false -> not a match); unmatched = the
+    leg's rows whose binding columns appear in no matched row (a
+    null-safe hash anti-join), null-extended. Two identical left rows
+    always share their fate, so bag semantics hold without row ids."""
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
-    rid = "__lj_rid"
-    # lazy localCheckpoint: the row ids must be STABLE across the two
-    # consumers (the anti-join keys on them); cached blocks release on
-    # GC instead of leaking in the CacheManager — see _compat_legs
-    acc = acc.withColumn(
-        rid, F.monotonically_increasing_id()
-    ).localCheckpoint(eager=False)
-    matched = _compat_join_frames(
-        acc, sub, shared, left_nulls, right_nulls,
-        left_masks, right_masks,
-    )
-    for f in deferred_filters:
-        matched = matched.where(_expr_col(f, matched.columns))
-    right_only = [c for c in sub.columns if c not in acc.columns]
-    rtypes = {fl.name: fl.dataType for fl in sub.schema.fields}
-    unmatched = acc.join(
-        matched.select(rid).dropDuplicates(), on=rid, how="left_anti"
-    ).select(
-        *acc.columns,
-        *[F.lit(None).cast(rtypes[c]).alias(c) for c in right_only],
-    )
-    cols = list(acc.columns) + right_only
-    return (
-        matched.select(*cols).union(unmatched.select(*cols)).drop(rid)
-    )
+    fields = _joined_fields(acc, sub)
+    pieces = []
+    for legl, rights in _compat_legs(
+        acc, sub, shared, left_nulls, right_nulls, left_masks,
+        right_masks,
+    ):
+        matched = _join_legs(legl, rights, fields)
+        for f in deferred_filters:
+            matched = matched.where(_expr_col(f, matched.columns))
+        cols = _binding_vars(legl.columns)
+        # seeded with TRUE: a leg may bind no column at all
+        unmatched = legl.alias("l").join(
+            matched.select(*cols).alias("m"),
+            reduce(
+                lambda a, b: a & b,
+                [F.col(f"l.{c}").eqNullSafe(F.col(f"m.{c}")) for c in cols],
+                F.lit(True),
+            ),
+            "left_anti",
+        )
+        pieces += [matched, _null_pad(unmatched, fields)]
+    return reduce(lambda a, b: a.union(b), pieces)
 
 
 def _eval_group_impl(
@@ -3125,8 +3108,8 @@ def _eval_group_impl(
             elif nullable:
                 # SPARQL's compatibility JOIN (§18.5 Join), 100-TB
                 # shape: union of hash equi-joins over boundness legs
-                # (merged binding = the bound side, picked statically
-                # per leg — see _compat_join_frames)
+                # (each merged var comes from the leg that binds it —
+                # see _compat_legs)
                 acc = _compat_join_frames(
                     acc, frame, shared, maybe_null, frame_nulls,
                     acc_masks, frame_masks,
@@ -4686,11 +4669,13 @@ def _load_document_frame(spark, src: str) -> DataFrame:
             else src
         )
         df, errors = read_source(spark, path)
-    if errors is not None and errors.limit(1).count() > 0:
-        first = errors.limit(1).collect()[0]
+    first = [] if errors is None else (
+        errors.select("error").limit(1).collect()
+    )
+    if first:
         raise ValueError(
             f"LOAD <{src}>: document has parse errors "
-            f"(first: {first.error!r})"
+            f"(first: {first[0].error!r})"
         )
     return df
 

@@ -1,8 +1,11 @@
-"""loopc compiler (ops/loopc.py) vs /root/reference/loop/loopc —
-structure checks on the reference's own fixture and an end-to-end
+"""loopc compiler (ops/loopc.py) vs the reference loop/loopc —
+structure checks on a fixture rebuilt from the reference's
+loopc/test.loop (``data/loopc_test.loop``) and an end-to-end
 compile→evaluate run through the loop interpreter."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import pytest
 
@@ -19,7 +22,8 @@ RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 XSD = "http://www.w3.org/2001/XMLSchema#"
 
-REFERENCE_FIXTURE = open("/root/reference/loop/loopc/test.loop").read()
+DATA = Path(__file__).parent / "data"
+REFERENCE_FIXTURE = (DATA / "loopc_test.loop").read_text()
 
 
 def _spo(triples):
@@ -147,8 +151,10 @@ name <http://t/ns#> as x
 def test_reference_positional_fixture_rejected():
     """Divergence (5) pinned: loop/test.loop's positional call args
     violate namedexprlist (name-expr pairs) in the reference grammar
-    and here alike."""
-    src = open("/root/reference/loop/test.loop").read()
+    and here alike. ``data/loop_test.loop`` is the named-args program
+    of test_compile_and_evaluate_add_end_to_end with positional
+    arguments."""
+    src = (DATA / "loop_test.loop").read_text()
     with pytest.raises(LoopcSyntaxError):
         compile_loop(src)
 

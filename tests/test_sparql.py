@@ -3015,10 +3015,10 @@ def test_optional_nullable_shared_var_deferred_filter(spark):
 def test_multi_leg_optional_and_minus_vs_python_oracle(spark):
     """OPTIONAL and MINUS whose two shared vars (?a, ?b) may be unbound
     on BOTH sides run the boundness decomposition with several legs
-    over checkpointed inputs (_compat_leftjoin_frames' anti-join of
-    the id-stamped left, _compat_minus_frames' chained anti-joins,
-    unions of legs). Pinned against brute-force §18.5 LeftJoin /
-    §8.3.3 Minus on seeded random graphs, bag semantics included."""
+    (_compat_leftjoin_frames' per-leg anti-join against the matched
+    rows, _compat_minus_frames' chained anti-joins, unions of legs).
+    Pinned against brute-force §18.5 LeftJoin / §8.3.3 Minus on
+    seeded random graphs, bag semantics included."""
     import random
     from collections import Counter
 
@@ -3092,6 +3092,64 @@ def test_multi_leg_optional_and_minus_vs_python_oracle(spark):
         )
         got = Counter(tuple(r) for r in out.select(*cols).collect())
         assert got == bag(want, cols), f"MINUS, seed {seed}"
+
+        # §18.2.1 LeftJoin expression: the FILTER reads the outer ?k,
+        # and the UNION repeats every left row, so rows with equal
+        # ?a/?b but different ?k (or the same row twice) must each
+        # get their own fate
+        cols = ["x", "k", "a", "b", "y"]
+        k0 = f"<{E}k0>"
+        want = []
+        for m1 in omega1 + omega1:
+            merged = [{**m1, **m2} for m2 in omega2
+                      if compatible(m1, m2) and m1["k"] != k0]
+            want += merged or [m1]
+        out = sparql_select(
+            g,
+            f"SELECT ?x ?k ?a ?b ?y WHERE {{ {{ {left} }} UNION "
+            f"{{ {left} }} OPTIONAL {{ {right} FILTER(?k != {k0}) }} }}",
+        )
+        got = Counter(tuple(r) for r in out.select(*cols).collect())
+        assert got == bag(want, cols), f"OPTIONAL FILTER, seed {seed}"
+
+
+def test_compat_queries_leave_no_state_behind(spark):
+    """Compat Join, MINUS and OPTIONAL plan straight from their
+    inputs: they register no persisted RDD (a lazy localCheckpoint
+    would) and no executed plan scans an ExistingRDD. The graph is a
+    local relation, so any ExistingRDD would be a checkpoint."""
+    from argo_spark.session import local_frame
+
+    src = graph2(spark)
+    g = local_frame(spark, src.collect(), src.schema)
+    queries = [
+        """SELECT ?n WHERE {
+             VALUES ?n { "Ada" UNDEF } ?who s:name ?n }""",
+        """SELECT ?w ?age WHERE {
+             { ?w s:age ?age } UNION { ?w s:name "Cat" }
+             ?x s:age ?age . }""",
+        """SELECT ?n WHERE {
+             ?who s:name ?n . OPTIONAL { ?who s:age ?age }
+             ?x s:age ?age }""",
+        """SELECT ?n ?age WHERE {
+             ?w s:name ?n OPTIONAL { ?w s:age ?age }
+             MINUS { ?x s:age ?age } }""",
+        """SELECT ?w ?age ?y WHERE {
+             { ?w s:age ?age } UNION { ?w s:name "Cat" }
+             OPTIONAL { ?y s:age ?age . ?y s:name "Ada" } }""",
+        """SELECT ?w ?n ?age ?y WHERE {
+             ?w s:name ?n
+             { ?w s:age ?age } UNION { ?w s:name "Cat" }
+             OPTIONAL { ?y s:age ?age FILTER(?n = "Cat") } }""",
+    ]
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    for q in queries:
+        out = sparql_select(g, "PREFIX s: <http://schema.org/> " + q)
+        assert out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, q
+    assert set(persistent().keySet()) - before == set()
 
 
 # -- named graphs (GRAPH / FROM / FROM NAMED) ------------------------------
