@@ -69,11 +69,7 @@ def read_source(
         fmt = format_from_mime(mime)  # URL sources: fall back to Content-Type
     if fmt is None or fmt.reader is None:
         raise SystemExit(f"no reader for source {path!r} (format {fmt_id or 'auto'})")
-    out = fmt.reader(spark, path)
-    if isinstance(out, tuple):
-        df, errors = out
-    else:
-        df, errors = out, None
+    df, errors = fmt.reader(spark, path)
     cols = TRIPLE_COLS + (
         ["g_value"] if "g_value" in df.columns else []
     )

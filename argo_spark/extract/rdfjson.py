@@ -18,22 +18,23 @@ object or a SEQUENCE of newline-delimited objects (the distributed
 writer's one-subject-per-line output) — the parser tries whole-doc
 first, then JSON-lines.
 
-Distribution: whole-file documents through the same wholetext +
-Arrow ``mapInPandas`` stage as the other readers; json.loads is C
-speed and per-document, zero shuffles.
+Distribution: whole-file documents through the shared document stage
+(sources/documents.py); json.loads is C speed and per-document, zero
+shuffles.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterable, Iterator, List, Optional, Tuple
-
-import pandas as pd
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from argo_spark.extract.rdfa import FlatTriple
+from argo_spark.sources.documents import (
+    FLAT_DDL, parse_documents, scan_documents, split_quarantine,
+)
 from argo_spark.terms import KIND_BLANK, KIND_IRI, KIND_LITERAL
 
 
@@ -114,44 +115,25 @@ def parse_rdfjson(text: str) -> Tuple[List[FlatTriple], Optional[str]]:
         return [], str(e)
 
 
-RDFJSON_SCHEMA = (
-    "s_kind tinyint, s_value string, p_value string, o_kind tinyint, "
-    "o_value string, o_lang string, o_dt string, key string, error string"
-)
+RDFJSON_SCHEMA = FLAT_DDL + ", key string, error string"
 
 
 def parse_rdfjson_col(
     df: DataFrame, text_col: str = "value", key_col: str = "key"
 ) -> DataFrame:
-    """Arrow-batched distributed parse, one document per input row."""
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["s_kind", "s_value", "p_value", "o_kind", "o_value",
-                "o_lang", "o_dt", "key", "error"]
-        for pdf in batches:
-            rows = []
-            for text, key in zip(pdf[text_col], pdf[key_col]):
-                triples, error = parse_rdfjson(text)
-                for t in triples:
-                    rows.append(t + (key, None))
-                if error is not None:
-                    rows.append(
-                        (None, None, None, None, None, None, None, key, error)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(text_col, key_col).mapInPandas(fn, schema=RDFJSON_SCHEMA)
+    """Distributed parse through the shared document stage, one
+    document per input row (RDF/JSON names its blank nodes, so the key
+    seeds no skolemization)."""
+    return parse_documents(
+        df, lambda text, key: parse_rdfjson(text), RDFJSON_SCHEMA,
+        text_col, key_col,
+    )
 
 
 def read_rdfjson(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Read RDF/JSON files (one document or JSON-lines per file) into
     (triples_df, errors_df)."""
-    raw = spark.read.text(path, wholetext=True).select(
-        F.col("value"), F.input_file_name().alias("key")
+    return split_quarantine(
+        parse_rdfjson_col(scan_documents(spark, path)),
+        F.col("key").alias("path"), "error",
     )
-    parsed = parse_rdfjson_col(raw)
-    triples = parsed.where("error IS NULL").drop("error")
-    errors = parsed.where("error IS NOT NULL").select(
-        F.col("key").alias("path"), "error"
-    )
-    return triples, errors

@@ -29,15 +29,15 @@ instead of killing the whole stream.
 from __future__ import annotations
 
 import xml.parsers.expat
-from typing import Iterable, Iterator, List, Optional, Tuple
-
-import pandas as pd
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from argo_spark.extract.rdfa import FlatTriple
 from argo_spark.namespaces import RDF, RDF_TYPE
+from argo_spark.sources.documents import (
+    FLAT_DDL, parse_documents, scan_documents, split_quarantine,
+)
 from argo_spark.terms import KIND_BLANK, KIND_IRI, KIND_LITERAL, skolem_id
 
 RDF_RDF = RDF + "RDF"
@@ -162,62 +162,26 @@ def parse_rdfxml(
     return out, None
 
 
-RDFXML_SCHEMA = (
-    "s_kind tinyint, s_value string, p_value string, o_kind tinyint, "
-    "o_value string, o_lang string, o_dt string, path string, error string"
-)
+RDFXML_SCHEMA = FLAT_DDL + ", path string, error string"
 
 
 def parse_rdfxml_col(
     df: DataFrame, text_col: str = "value", key_col: str = "key"
 ) -> DataFrame:
     """Distributed RDF/XML parse over a STRING COLUMN (one document
-    per row) — the same Arrow-stage machinery as :func:`read_rdfxml`
-    without the file layer. ``key_col`` seeds skolemization and rides
-    through as ``path``; quarantine rows carry ``error``."""
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["s_kind", "s_value", "p_value", "o_kind", "o_value",
-                "o_lang", "o_dt", "path", "error"]
-        for pdf in batches:
-            rows = []
-            for text, k in zip(pdf[text_col], pdf[key_col]):
-                if text is None:
-                    rows.append((None, None, None, None, None, None, None,
-                                 str(k), "null document"))
-                    continue
-                triples, error = parse_rdfxml(text, skolem_key=str(k))
-                for t in triples:
-                    rows.append(t + (str(k), None))
-                if error is not None:
-                    rows.append((None, None, None, None, None, None, None, str(k), error))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(text_col, key_col).mapInPandas(fn, schema=RDFXML_SCHEMA)
+    per row) through the shared document stage. ``key_col`` seeds
+    skolemization and rides through as ``path``; quarantine rows carry
+    ``error``."""
+    return parse_documents(
+        df, lambda text, key: parse_rdfxml(text, skolem_key=key),
+        RDFXML_SCHEMA, text_col, key_col,
+    )
 
 
 def read_rdfxml(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Read RDF/XML files (one document per file) into
-    (triples_df, errors_df). Whole-file reads; parsing is one Arrow
-    stage per file split."""
-    # input file name doubles as the skolem key — deterministic anons
-    raw = spark.read.text(path, wholetext=True).withColumn(
-        "path", F.input_file_name()
+    (triples_df, errors_df). The input file name doubles as the skolem
+    key, so anonymous nodes are deterministic."""
+    return split_quarantine(
+        parse_rdfxml_col(scan_documents(spark, path)), "path", "error"
     )
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["s_kind", "s_value", "p_value", "o_kind", "o_value",
-                "o_lang", "o_dt", "path", "error"]
-        for pdf in batches:
-            rows = []
-            for text, pth in zip(pdf["value"], pdf["path"]):
-                triples, error = parse_rdfxml(text, skolem_key=pth)
-                for t in triples:
-                    rows.append(t + (pth, None))
-                if error is not None:
-                    rows.append((None, None, None, None, None, None, None, pth, error))
-            yield pd.DataFrame(rows, columns=cols)
-
-    parsed = raw.mapInPandas(fn, schema=RDFXML_SCHEMA)
-    triples = parsed.where("error IS NULL").drop("error")
-    errors = parsed.where("error IS NOT NULL").select("path", "error")
-    return triples, errors

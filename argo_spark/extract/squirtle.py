@@ -56,20 +56,20 @@ emits it unconditionally and produces unparseable output for locals
 containing ``.``/``%``/``~`` etc.
 
 Strings are parsed whole-file (one doc per file) — ``read_squirtle``
-distributes via the same wholetext + Arrow-stage shape as RDF/XML.
+distributes via the shared document stage (sources/documents.py).
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, List, NamedTuple, Optional, Tuple, Union
-
-import pandas as pd
+from typing import Iterator, List, NamedTuple, Optional, Tuple, Union
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from argo_spark.extract.rdfa import FlatTriple
 from argo_spark.namespaces import NAMESPACES, RDF, RDF_TYPE, XSD
+from argo_spark.sources.documents import (
+    FLAT_DDL, parse_documents, scan_documents, split_quarantine,
+)
 from argo_spark.terms import KIND_BLANK, KIND_IRI, KIND_LITERAL, Term, skolem_id
 
 
@@ -623,41 +623,24 @@ def t_flat(s: Term, p: Term, o: Term) -> FlatTriple:
     return (s.kind, s.value, p.value, o.kind, o.value, o.lang, o.dt)
 
 
-SQUIRTLE_SCHEMA = (
-    "s_kind tinyint, s_value string, p_value string, o_kind tinyint, "
-    "o_value string, o_lang string, o_dt string, path string, error string"
-)
+SQUIRTLE_SCHEMA = FLAT_DDL + ", path string, error string"
 
 
 def parse_squirtle_col(
     df: DataFrame, text_col: str = "value", key_col: str = "key"
 ) -> DataFrame:
     """Distributed Squirtle parse over a STRING COLUMN (one document
-    per row) — the same Arrow-stage shape as :func:`read_squirtle`
-    without the file layer. ``key_col`` seeds skolemization and rides
-    through as ``path``; quarantine rows carry ``error``. Includes are
-    refused (no file/url context for an in-memory document)."""
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["s_kind", "s_value", "p_value", "o_kind", "o_value",
-                "o_lang", "o_dt", "path", "error"]
-        for pdf in batches:
-            rows = []
-            for text, k in zip(pdf[text_col], pdf[key_col]):
-                if text is None:
-                    rows.append((None, None, None, None, None, None, None,
-                                 str(k), "null document"))
-                    continue
-                triples, error = parse_squirtle(
-                    text, skolem_key=str(k),
-                    file_opener=_no_include_opener,
-                )
-                for t in triples:
-                    rows.append(t + (str(k), None))
-                if error is not None:
-                    rows.append((None, None, None, None, None, None, None, str(k), error))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(text_col, key_col).mapInPandas(fn, schema=SQUIRTLE_SCHEMA)
+    per row) through the shared document stage. ``key_col`` seeds
+    skolemization and rides through as ``path``; quarantine rows carry
+    ``error``. Includes are refused (no file/url context for an
+    in-memory document)."""
+    return parse_documents(
+        df,
+        lambda text, key: parse_squirtle(
+            text, skolem_key=key, file_opener=_no_include_opener
+        ),
+        SQUIRTLE_SCHEMA, text_col, key_col,
+    )
 
 
 def _no_include_opener(path, *a, **kw):
@@ -666,28 +649,13 @@ def _no_include_opener(path, *a, **kw):
 
 def read_squirtle(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Read .squirtle files (one document per file) into
-    (triples_df, errors_df) — the same wholetext + Arrow-stage shape
-    as read_rdfxml. ``include "file"`` directives resolve executor-side
-    relative to the worker's filesystem; ``include <url>`` is refused
-    (no fetcher on executors)."""
-    raw = spark.read.text(path, wholetext=True).withColumn(
-        "path", F.input_file_name()
+    (triples_df, errors_df) through the shared document stage.
+    ``include "file"`` directives resolve executor-side relative to
+    the worker's filesystem; ``include <url>`` is refused (no fetcher
+    on executors)."""
+    parsed = parse_documents(
+        scan_documents(spark, path),
+        lambda text, key: parse_squirtle(text, skolem_key=key),
+        SQUIRTLE_SCHEMA,
     )
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["s_kind", "s_value", "p_value", "o_kind", "o_value",
-                "o_lang", "o_dt", "path", "error"]
-        for pdf in batches:
-            rows = []
-            for text, pth in zip(pdf["value"], pdf["path"]):
-                triples, error = parse_squirtle(text, skolem_key=pth)
-                for t in triples:
-                    rows.append(t + (pth, None))
-                if error is not None:
-                    rows.append((None, None, None, None, None, None, None, pth, error))
-            yield pd.DataFrame(rows, columns=cols)
-
-    parsed = raw.mapInPandas(fn, schema=SQUIRTLE_SCHEMA)
-    triples = parsed.where("error IS NULL").drop("error")
-    errors = parsed.where("error IS NOT NULL").select("path", "error")
-    return triples, errors
+    return split_quarantine(parsed, "path", "error")

@@ -34,17 +34,14 @@ the distributed readers route rows to a (triples, errors) pair.
 
 Parsing is whole-document (prefix/base state is document-scoped, so
 a .ttl file cannot be line-split); ``read_turtle`` distributes via
-the same wholetext + Arrow mapInPandas stage as read_rdfxml /
-read_squirtle — one file per task row, CPU-parallel across files,
-zero shuffles.
+the shared document stage (sources/documents.py) — one file per task
+row, CPU-parallel across files, zero shuffles.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 from urllib.parse import urljoin
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +49,9 @@ from pyspark.sql import functions as F
 from argo_spark.extract.rdfa import FlatTriple
 from argo_spark.namespaces import (
     NAMESPACES, RDF_FIRST, RDF_NIL, RDF_REST, RDF_TYPE, has_iri_scheme,
+)
+from argo_spark.sources.documents import (
+    FLAT_DDL, parse_documents, scan_documents, split_quarantine,
 )
 from argo_spark.terms import (
     KIND_BLANK, KIND_IRI, KIND_LITERAL, skolem_id,
@@ -608,50 +608,28 @@ def parse_turtle(
         return [], "turtle: unexpected end of input"
 
 
-TURTLE_SCHEMA = (
-    "s_kind tinyint, s_value string, p_value string, o_kind tinyint, "
-    "o_value string, o_lang string, o_dt string, key string, error string"
-)
+TURTLE_SCHEMA = FLAT_DDL + ", key string, error string"
 
 
 def parse_turtle_col(
     df: DataFrame, text_col: str = "value", key_col: str = "key"
 ) -> DataFrame:
-    """Arrow-batched distributed parse: one DOCUMENT per input row
-    (prefix state is document-scoped — .ttl cannot be line-split),
-    keyed output + per-document error rows."""
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["s_kind", "s_value", "p_value", "o_kind", "o_value",
-                "o_lang", "o_dt", "key", "error"]
-        for pdf in batches:
-            rows = []
-            for text, key in zip(pdf[text_col], pdf[key_col]):
-                triples, error = parse_turtle(text, skolem_key=str(key))
-                for t in triples:
-                    rows.append(t + (key, None))
-                if error is not None:
-                    rows.append(
-                        (None, None, None, None, None, None, None, key, error)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(text_col, key_col).mapInPandas(fn, schema=TURTLE_SCHEMA)
+    """Distributed parse through the shared document stage: one
+    DOCUMENT per input row (prefix state is document-scoped — .ttl
+    cannot be line-split), keyed output + per-document error rows."""
+    return parse_documents(
+        df, lambda text, key: parse_turtle(text, skolem_key=key),
+        TURTLE_SCHEMA, text_col, key_col,
+    )
 
 
 def read_turtle(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Read .ttl files (one document per file) into (triples_df,
-    errors_df) — wholetext + Arrow stage, the same shape as
-    read_rdfxml / read_squirtle."""
-    raw = spark.read.text(path, wholetext=True).select(
-        F.col("value"), F.input_file_name().alias("key")
+    errors_df)."""
+    return split_quarantine(
+        parse_turtle_col(scan_documents(spark, path)),
+        F.col("key").alias("path"), "error",
     )
-    parsed = parse_turtle_col(raw)
-    triples = parsed.where("error IS NULL").drop("error")
-    errors = parsed.where("error IS NOT NULL").select(
-        F.col("key").alias("path"), "error"
-    )
-    return triples, errors
 
 
 # ---------------------------------------------------------------------------
@@ -677,42 +655,23 @@ def parse_trig(
         return [], "trig: unexpected end of input"
 
 
-TRIG_SCHEMA = (
-    "s_kind tinyint, s_value string, p_value string, o_kind tinyint, "
-    "o_value string, o_lang string, o_dt string, g_value string, "
-    "key string, error string"
-)
+TRIG_SCHEMA = FLAT_DDL + ", g_value string, key string, error string"
 
 
 def parse_trig_col(
     df: DataFrame, text_col: str = "value", key_col: str = "key"
 ) -> DataFrame:
-    """Arrow-batched distributed TriG parse, one document per row."""
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["s_kind", "s_value", "p_value", "o_kind", "o_value",
-                "o_lang", "o_dt", "g_value", "key", "error"]
-        for pdf in batches:
-            rows = []
-            for text, key in zip(pdf[text_col], pdf[key_col]):
-                quads, error = parse_trig(text, skolem_key=str(key))
-                for q in quads:
-                    rows.append(q + (key, None))
-                if error is not None:
-                    rows.append((None,) * 8 + (key, error))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(text_col, key_col).mapInPandas(fn, schema=TRIG_SCHEMA)
+    """Distributed TriG parse through the shared document stage, one
+    document per row."""
+    return parse_documents(
+        df, lambda text, key: parse_trig(text, skolem_key=key),
+        TRIG_SCHEMA, text_col, key_col,
+    )
 
 
 def read_trig(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Read .trig files into (quads_df, errors_df)."""
-    raw = spark.read.text(path, wholetext=True).select(
-        F.col("value"), F.input_file_name().alias("key")
+    return split_quarantine(
+        parse_trig_col(scan_documents(spark, path)),
+        F.col("key").alias("path"), "error",
     )
-    parsed = parse_trig_col(raw)
-    quads = parsed.where("error IS NULL").drop("error")
-    errors = parsed.where("error IS NOT NULL").select(
-        F.col("key").alias("path"), "error"
-    )
-    return quads, errors

@@ -37,6 +37,7 @@ from argo_spark.ntriples import (
     _TERM_S,
     _parse_batch,
 )
+from argo_spark.sources.documents import split_quarantine
 from argo_spark.terms import KIND_BLANK, KIND_IRI, KIND_LITERAL, term_nt_col
 
 # quad fast path: the NT fast regex plus a mandatory IRI graph label
@@ -147,15 +148,10 @@ def read_nquads(
     The quads frame carries the eight canonical columns (NULL
     ``g_value`` = default graph) and feeds the SPARQL dataset layer
     (GRAPH / FROM / graph-aware Update) directly."""
-    raw = spark.read.text(path)
-    parsed = raw.mapInPandas(_parse_batch_nq, schema=_PARSED_NQ_SCHEMA)
-    quads = parsed.where(F.col("error").isNull()).drop(
-        "error", "err_column", "line"
+    return split_quarantine(
+        parse_nquads_col(spark.read.text(path)),
+        "error", F.col("err_column").alias("column"), "line",
     )
-    errors = parsed.where(F.col("error").isNotNull()).select(
-        "error", F.col("err_column").alias("column"), "line"
-    )
-    return quads, errors
 
 
 def parse_nquads_col(df: DataFrame, col: str = "value") -> DataFrame:

@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from argo_spark.sources.documents import split_quarantine
 from argo_spark.terms import (
     KIND_BLANK,
     KIND_IRI,
@@ -386,21 +387,17 @@ def read_ntriples(
     Filters and projections over the result push into the text scan
     normally; parsing itself is one Arrow-batched stage.
     """
-    raw = spark.read.text(path)
-    parsed = raw.mapInPandas(_parse_batch, schema=_PARSED_SCHEMA)
-    triples = parsed.where(F.col("error").isNull()).drop("error", "err_column", "line")
-    errors = parsed.where(F.col("error").isNotNull()).select(
-        "error", F.col("err_column").alias("column"), "line"
+    return split_quarantine(
+        parse_ntriples_col(spark.read.text(path)),
+        "error", F.col("err_column").alias("column"), "line",
     )
-    return triples, errors
 
 
 def parse_ntriples_col(df: DataFrame, col: str = "value") -> DataFrame:
     """Parse a string column of NT lines already in a DataFrame."""
-    parsed = df.select(F.col(col).alias("value")).mapInPandas(
+    return df.select(F.col(col).alias("value")).mapInPandas(
         _parse_batch, schema=_PARSED_SCHEMA
     )
-    return parsed
 
 
 # ---------------------------------------------------------------------------

@@ -573,43 +573,31 @@ if __name__ == "__main__":
     raise SystemExit(main())
 
 
+def _compile_flat(text: str, key: str):
+    """One ``.loop`` document -> (flat program triples, error)."""
+    try:
+        triples = compile_loop(text)
+    except LoopcSyntaxError as e:
+        return [], str(e)
+    return [
+        (t.s.kind, t.s.value, t.p.value, t.o.kind, t.o.value, t.o.lang, t.o.dt)
+        for t in triples
+    ], None
+
+
 def read_loop(spark, path: str):
     """Distributed LOOP-source reader: compile each ``.loop`` file to
-    its program triples (one document per file, same wholetext +
-    Arrow-stage shape as read_squirtle) -> (triples_df, errors_df).
-    Programs are tiny by construction; the reader exists so the rdf
-    CLI treats ``.loop`` like any other source format (the reference
-    pipes loopc output into its NT tooling instead)."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    raw = spark.read.text(path, wholetext=True).withColumn(
-        "path", F.input_file_name()
-    )
-    schema = (
-        "s_kind tinyint, s_value string, p_value string, o_kind tinyint, "
-        "o_value string, o_lang string, o_dt string, path string, error string"
+    its program triples (one document per file, through the shared
+    document stage) -> (triples_df, errors_df). Programs are tiny by
+    construction; the reader exists so the rdf CLI treats ``.loop``
+    like any other source format (the reference pipes loopc output
+    into its NT tooling instead)."""
+    from argo_spark.sources.documents import (
+        FLAT_DDL, parse_documents, scan_documents, split_quarantine,
     )
 
-    def fn(batches):
-        cols = ["s_kind", "s_value", "p_value", "o_kind", "o_value",
-                "o_lang", "o_dt", "path", "error"]
-        for pdf in batches:
-            rows = []
-            for text, pth in zip(pdf["value"], pdf["path"]):
-                try:
-                    for t in compile_loop(text):
-                        rows.append(
-                            (t.s.kind, t.s.value, t.p.value, t.o.kind,
-                             t.o.value, t.o.lang, t.o.dt, pth, None)
-                        )
-                except LoopcSyntaxError as e:
-                    rows.append((None, None, None, None, None, None, None,
-                                 pth, str(e)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    parsed = raw.mapInPandas(fn, schema=schema)
-    triples = parsed.where("error IS NULL").drop("error")
-    errors = parsed.where("error IS NOT NULL").select("path", "error")
-    return triples, errors
+    parsed = parse_documents(
+        scan_documents(spark, path), _compile_flat,
+        FLAT_DDL + ", path string, error string",
+    )
+    return split_quarantine(parsed, "path", "error")

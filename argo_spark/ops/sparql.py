@@ -4638,30 +4638,19 @@ def _graph_plus(triples: DataFrame, new: DataFrame, cols=None) -> DataFrame:
 
 
 def _load_document_frame(spark, src: str) -> DataFrame:
-    """LOAD's document reader: http(s) IRIs fetch driver-side
-    (streamed to a temp file, materialized via localCheckpoint before
-    cleanup), ``file://`` IRIs and plain paths read in place; format
-    dispatch and quarantine come from the rdf CLI's registry. A
+    """LOAD's document reader: http(s) IRIs go through the rdf CLI's
+    ``parse_http`` (fetched driver-side, materialized before the temp
+    file is removed), ``file://`` IRIs and plain paths read in place;
+    format dispatch and quarantine come from the rdf CLI's registry. A
     document with ANY parse error fails the operation (§3.1.4 —
     SILENT at the call site turns that into a no-op); the error
     probe is one driver-side scalar action."""
-    import os as _os
     import urllib.parse as _up
 
-    from argo_spark.cli import _fetch_url, read_source
+    from argo_spark.cli import parse_http, read_source
 
     if src.startswith(("http://", "https://")):
-        local, mime = _fetch_url(src)
-        try:
-            df, errors = read_source(spark, local, mime=mime)
-            df = df.localCheckpoint(eager=True)
-            if errors is not None:
-                errors = errors.localCheckpoint(eager=True)
-        finally:
-            try:
-                _os.unlink(local)
-            except OSError:
-                pass
+        df, errors = parse_http(spark, src)
     else:
         path = (
             _up.unquote(_up.urlparse(src).path)

@@ -28,22 +28,4 @@ TRIPLES_FIELDS = [
 
 TRIPLES_SCHEMA = T.StructType(TRIPLES_FIELDS)
 
-TRIPLES_WITH_PROV_SCHEMA = T.StructType(
-    TRIPLES_FIELDS
-    + [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-    ]
-)
-
 TRIPLE_COLS = [f.name for f in TRIPLES_FIELDS]
-
-# NT parser quarantine rows (error categories of ntriples.go:44-51).
-PARSE_ERRORS_SCHEMA = T.StructType(
-    [
-        T.StructField("line_no", T.LongType(), False),
-        T.StructField("column", T.IntegerType(), False),
-        T.StructField("error", T.StringType(), False),
-        T.StructField("line", T.StringType(), False),
-    ]
-)

@@ -20,7 +20,9 @@ class Format:
     preferred_ext: str
     other_mimes: list[str] = field(default_factory=list)
     other_exts: list[str] = field(default_factory=list)
-    reader: Optional[Callable] = None  # (spark, path) -> (triples, errors)|triples
+    # (spark, path) -> (triples, errors_or_None); the document readers
+    # share one parse stage and quarantine split (sources/documents.py)
+    reader: Optional[Callable] = None
     writer: Optional[Callable] = None  # (df, path, ...) -> None
 
 
@@ -33,7 +35,7 @@ def _read_rdfxml(spark, path):
 def _read_rdfa(spark, path):
     from argo_spark.extract.rdfa import read_rdfa
 
-    return read_rdfa(spark, path)
+    return read_rdfa(spark, path), None  # RDFa has no quarantine frame
 
 
 def _write_rdfxml(df, path, mode="overwrite"):

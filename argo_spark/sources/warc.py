@@ -45,6 +45,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from argo_spark.sources.documents import split_quarantine
+
 
 class WarcError(Exception):
     pass
@@ -398,9 +400,7 @@ def pages_from_warc(
         from pyspark import StorageLevel
 
         parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-    pages = parsed.where("error IS NULL").drop("error")
-    errors = parsed.where("error IS NOT NULL").select("path", "error")
-    return pages, errors
+    return split_quarantine(parsed, "path", "error")
 
 
 _BATCH_ROWS = 1024

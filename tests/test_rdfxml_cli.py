@@ -267,16 +267,6 @@ def test_parse_http(spark, tmp_path):
         httpd.shutdown()
 
 
-def test_parse_rdfxml_col_null_rows_quarantined(spark):
-    from argo_spark.extract.rdfxml import parse_rdfxml_col
-
-    df = spark.createDataFrame(
-        [(None, "k0")], "value string, key string",
-    )
-    out = parse_rdfxml_col(df).collect()
-    assert len(out) == 1 and out[0].error == "null document"
-
-
 def test_cli_construct_transform(spark, tmp_path):
     """--construct transforms the merged graph with a SPARQL CONSTRUCT
     query before serialization (after rewrites, set-semantic)."""

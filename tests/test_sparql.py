@@ -2636,6 +2636,43 @@ def test_sparql_update_load(spark, tmp_path):
     ).count() == 1
 
 
+def test_sparql_update_load_http(spark, tmp_path):
+    # an http(s) document IRI is fetched through cli.parse_http: the
+    # loaded triples outlive the temp file, which is removed
+    import glob
+    import http.server
+    import os
+    import tempfile
+    import threading
+
+    from argo_spark.ops.sparql import sparql_update
+
+    (tmp_path / "g.nt").write_text('<http://e/h1> <http://e/p> "via-http" .\n')
+    (tmp_path / "bad.nt").write_text("not a triple\n")
+    handler = lambda *a, **kw: http.server.SimpleHTTPRequestHandler(  # noqa: E731
+        *a, directory=str(tmp_path), **kw
+    )
+    httpd = http.server.HTTPServer(("127.0.0.1", 0), handler)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    temps = os.path.join(tempfile.gettempdir(), "argo_url_*")
+    try:
+        base = f"http://127.0.0.1:{httpd.server_address[1]}"
+        g = TripleGraph.of(
+            spark,
+            [TripleT(iri("http://e/a"), iri("http://e/name"),
+                     literal("Ada"))],
+        ).df
+        before = set(glob.glob(temps))
+        out = sparql_update(g, f"LOAD <{base}/g.nt>")
+        assert set(glob.glob(temps)) == before  # no temp leak
+        assert sorted(r.o_value for r in out.collect()) == ["Ada", "via-http"]
+        with pytest.raises(ValueError, match="parse errors"):
+            sparql_update(g, f"LOAD <{base}/bad.nt>").count()
+        assert sparql_update(g, f"LOAD SILENT <{base}/bad.nt>").count() == 1
+    finally:
+        httpd.shutdown()
+
+
 def test_exists_in_expression(spark):
     g = graph2(spark)
     # EXISTS composed under || : has an age OR is named Cat

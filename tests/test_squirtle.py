@@ -364,18 +364,3 @@ def test_unsafe_locals_roundtrip_as_uriref(spark, tmp_path):
         for r in back.collect()
     }
     assert got == expected
-
-
-def test_parse_col_null_rows_quarantined(spark):
-    """A null document row becomes a quarantine row, not a task
-    failure (review fix; same contract as file-level quarantine)."""
-    from argo_spark.extract.squirtle import parse_squirtle_col
-
-    df = spark.createDataFrame(
-        [('<http://e/s> { foaf:name "Ada" }', "k1"), (None, "k2")],
-        "value string, key string",
-    )
-    out = parse_squirtle_col(df)
-    errs = out.where("error IS NOT NULL").collect()
-    assert len(errs) == 1 and errs[0].path == "k2" and "null" in errs[0].error
-    assert out.where("error IS NULL").count() == 1
