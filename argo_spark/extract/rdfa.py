@@ -50,6 +50,7 @@ from argo_spark.extract.html import (
     parse_html,
 )
 from argo_spark.namespaces import RDF_TYPE, SCHEMA
+from argo_spark.sources.documents import scan_documents
 from argo_spark.terms import KIND_BLANK, KIND_IRI, KIND_LITERAL, Term, skolem_id
 
 MENTIONS_PRED = SCHEMA + "mentions"
@@ -249,12 +250,9 @@ def read_rdfa(spark, path: str) -> DataFrame:
     (rdfaparse emits pure RDFa). One wholetext scan + one Arrow stage."""
     from pyspark.sql import functions as F
 
-    pages = (
-        spark.read.text(path, wholetext=True)
-        .select(
-            F.input_file_name().alias("url"),
-            F.lit(None).cast("timestamp").alias("warc_ts"),
-            F.col("value").alias("html"),
-        )
+    pages = scan_documents(spark, path).select(
+        F.col("key").alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.col("value").alias("html"),
     )
     return extract_triples_df(pages, with_mentions=False).drop("url", "warc_ts")

@@ -21,6 +21,8 @@ Execution model: the reference is a single-goroutine pull parser; here
 parsing is a *vectorized per-line* operator — a regex fast path covers
 escape-free triples entirely inside pandas/C, and only exotic lines
 (escapes, comments, malformed input) hit the char-level Python parser.
+N-Quads (nquads.py) is this parser in quad mode: both paths accept an
+optional IRI graph term after the object.
 Malformed lines are quarantined as error rows instead of aborting the
 stream (documented divergence: the reference stops at the first error,
 ntriples.go:480-492 — at 100 TB we keep going and report).
@@ -34,10 +36,10 @@ from typing import Iterable, Iterator, Optional
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from argo_spark.sources.documents import split_quarantine
+from argo_spark.sources.documents import FLAT_DDL, split_quarantine
 from argo_spark.terms import (
     KIND_BLANK,
     KIND_IRI,
@@ -81,11 +83,17 @@ class _LineParser:
     ``False`` reproduces bare-string EOF behavior for fixture parity.
     """
 
-    def __init__(self, line: str, line_no: int = 1, final_newline: bool = True):
+    def __init__(
+        self, line: str, line_no: int = 1, final_newline: bool = True,
+        quads: bool = False,
+    ):
         self.s = line + ("\n" if final_newline else "")
         self.i = 0
         self.line = line_no
         self.column = -1
+        # N-Quads: an IRI graph label may follow the object
+        self.quads = quads
+        self.graph: Optional[str] = None
 
     def _err(self, cat: str) -> NTParseError:
         return NTParseError(cat, self.line, self.column)
@@ -230,7 +238,20 @@ class _LineParser:
         raise self._err(ERR_UNEXPECTED_CHARACTER)
 
     def read_end_triple(self) -> None:
+        after_object = self.column
         c = self.skip_ws()
+        if self.quads and c == "<" and self.column > after_object + 1:
+            # the graph label: past the object, the triple grammar stops
+            # at this term's start, so every error reports there; quad
+            # mode ends here, so a fifth term is an error
+            start, self.quads = self.column, False
+            self.unread()
+            try:
+                self.graph = self.parse_term().value
+                self.read_end_triple()
+            except NTParseError:
+                raise NTParseError(ERR_UNEXPECTED_CHARACTER, self.line, start)
+            return
         if c is None:
             raise self._err(ERR_UNTERMINATED_TRIPLE)
         if c != ".":
@@ -315,68 +336,110 @@ _TERM_O = (
     rf"(?:<({_IRI_CC}+)>|_:([A-Za-z][A-Za-z0-9]*)"
     rf'|"([^"\\]*)"(?:@([a-z0-9-]+)|\^\^<({_IRI_CC}+)>)?)'
 )
-FAST_RE = re.compile(
-    rf"^[ \t]*{_TERM_S}[ \t]+<({_IRI_CC}+)>[ \t]+{_TERM_O}[ \t]*\.[ \t]*$"
-)
-
-_PARSED_SCHEMA = (
-    "s_kind tinyint, s_value string, p_value string, o_kind tinyint, "
-    "o_value string, o_lang string, o_dt string, error string, "
-    "err_column int, line string"
-)
 
 
-def _parse_batch(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _fast_re(quads: bool) -> re.Pattern:
+    """The escape-free statement. Groups: 0-1 subject IRI/blank label,
+    2 predicate, 3-7 object, and in quad mode 8 the optional graph IRI."""
+    graph = rf"(?:[ \t]+<({_IRI_CC}+)>)?" if quads else ""
+    return re.compile(
+        rf"^[ \t]*{_TERM_S}[ \t]+<({_IRI_CC}+)>[ \t]+{_TERM_O}{graph}"
+        r"[ \t]*\.[ \t]*$"
+    )
+
+
+def _line_codec(quads: bool):
+    """(batch function, schema) of the one line parser, for N-Triples
+    or, with ``quads``, N-Quads (a ``g_value`` column, NULL for triple
+    lines = the default graph)."""
+    fast_re = _fast_re(quads)
+    g_col = ["g_value"] if quads else []
     cols = [
-        "s_kind", "s_value", "p_value", "o_kind",
-        "o_value", "o_lang", "o_dt", "error", "err_column", "line",
+        "s_kind", "s_value", "p_value", "o_kind", "o_value", "o_lang",
+        "o_dt", *g_col, "error", "err_column", "line",
     ]
-    for pdf in batches:
-        lines = pdf["value"]
-        m = lines.str.extract(FAST_RE)
-        # fast-path rows: regex matched (group 2 = predicate IRI present)
-        fast = m[2].notna()
-        out = pd.DataFrame(index=pdf.index, columns=cols, dtype=object)
-        out["s_kind"] = pd.array(
-            np.where(m[0].notna(), KIND_IRI, KIND_BLANK), dtype="Int8"
-        )
-        out["s_value"] = np.where(m[0].notna(), m[0], m[1])
-        out["p_value"] = m[2]
-        o_kind = pd.Series(index=pdf.index, dtype="Int8")
-        o_kind[m[3].notna()] = KIND_IRI
-        o_kind[m[4].notna()] = KIND_BLANK
-        o_kind[m[5].notna()] = KIND_LITERAL
-        out["o_kind"] = o_kind
-        out["o_value"] = np.where(
-            m[3].notna(), m[3], np.where(m[4].notna(), m[4], m[5])
-        )
-        out["o_lang"] = m[6]
-        out["o_dt"] = m[7]
-        out["error"] = None
-        out["err_column"] = pd.array([None] * len(pdf), dtype="Int32")
-        out["line"] = None
+    schema = (
+        FLAT_DDL + (", g_value string" if quads else "")
+        + ", error string, err_column int, line string"
+    )
 
-        slow_idx = pdf.index[~fast]
-        drop = []
-        for i in slow_idx:
-            ln = lines[i]
-            try:
-                t = parse_line(ln, final_newline=True)
-            except NTParseError as e:
-                out.loc[i, ["error", "line"]] = [e.err, ln]
-                out.loc[i, "err_column"] = e.column
-                continue
-            if t is None:
-                drop.append(i)  # comment / blank line
-                continue
-            out.loc[i, ["s_kind", "s_value", "p_value", "o_kind", "o_value"]] = [
-                t.s.kind, t.s.value, t.p.value, t.o.kind, t.o.value,
-            ]
-            out.loc[i, "o_lang"] = t.o.lang
-            out.loc[i, "o_dt"] = t.o.dt
-        if drop:
-            out = out.drop(index=drop)
-        yield out
+    def _parse_batch(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            lines = pdf["value"]
+            m = lines.str.extract(fast_re)
+            # fast-path rows: regex matched (group 2 = predicate IRI present)
+            fast = m[2].notna()
+            out = pd.DataFrame(index=pdf.index, columns=cols, dtype=object)
+            out["s_kind"] = pd.array(
+                np.where(m[0].notna(), KIND_IRI, KIND_BLANK), dtype="Int8"
+            )
+            out["s_value"] = np.where(m[0].notna(), m[0], m[1])
+            out["p_value"] = m[2]
+            o_kind = pd.Series(index=pdf.index, dtype="Int8")
+            o_kind[m[3].notna()] = KIND_IRI
+            o_kind[m[4].notna()] = KIND_BLANK
+            o_kind[m[5].notna()] = KIND_LITERAL
+            out["o_kind"] = o_kind
+            out["o_value"] = np.where(
+                m[3].notna(), m[3], np.where(m[4].notna(), m[4], m[5])
+            )
+            out["o_lang"] = m[6]
+            out["o_dt"] = m[7]
+            if quads:
+                out["g_value"] = m[8]
+            out["error"] = None
+            out["err_column"] = pd.array([None] * len(pdf), dtype="Int32")
+            out["line"] = None
+
+            slow_idx = pdf.index[~fast]
+            drop = []
+            for i in slow_idx:
+                ln = lines[i]
+                if ln is None:
+                    out.loc[i, "error"] = "null line"
+                    continue
+                parser = _LineParser(ln, quads=quads)
+                try:
+                    t = parser.read_triple()
+                except NTParseError as e:
+                    out.loc[i, ["error", "line"]] = [e.err, ln]
+                    out.loc[i, "err_column"] = e.column
+                    continue
+                if t is None:
+                    drop.append(i)  # comment / blank line
+                    continue
+                out.loc[i, ["s_kind", "s_value", "p_value", "o_kind", "o_value"]] = [
+                    t.s.kind, t.s.value, t.p.value, t.o.kind, t.o.value,
+                ]
+                out.loc[i, "o_lang"] = t.o.lang
+                out.loc[i, "o_dt"] = t.o.dt
+                if quads:
+                    out.loc[i, "g_value"] = parser.graph
+            if drop:
+                out = out.drop(index=drop)
+            yield out
+
+    return _parse_batch, schema
+
+
+def _parse_lines_col(df: DataFrame, col: str, quads: bool) -> DataFrame:
+    """The Arrow-batched line parser over a string column (N-Triples,
+    or N-Quads with ``quads``); every line yields a row or one
+    quarantine row, and comment / blank lines yield none."""
+    parse_batch, schema = _line_codec(quads)
+    return df.select(F.col(col).alias("value")).mapInPandas(
+        parse_batch, schema=schema
+    )
+
+
+def _read_lines(
+    spark: SparkSession, path: str, quads: bool
+) -> tuple[DataFrame, DataFrame]:
+    """Line files -> (rows, quarantine with ``error, column, line``)."""
+    return split_quarantine(
+        _parse_lines_col(spark.read.text(path), "value", quads),
+        "error", F.col("err_column").alias("column"), "line",
+    )
 
 
 def read_ntriples(
@@ -387,17 +450,12 @@ def read_ntriples(
     Filters and projections over the result push into the text scan
     normally; parsing itself is one Arrow-batched stage.
     """
-    return split_quarantine(
-        parse_ntriples_col(spark.read.text(path)),
-        "error", F.col("err_column").alias("column"), "line",
-    )
+    return _read_lines(spark, path, quads=False)
 
 
 def parse_ntriples_col(df: DataFrame, col: str = "value") -> DataFrame:
     """Parse a string column of NT lines already in a DataFrame."""
-    return df.select(F.col(col).alias("value")).mapInPandas(
-        _parse_batch, schema=_PARSED_SCHEMA
-    )
+    return _parse_lines_col(df, col, quads=False)
 
 
 # ---------------------------------------------------------------------------

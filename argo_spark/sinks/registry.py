@@ -11,6 +11,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
+from argo_spark import nquads, ntriples
+from argo_spark.extract import rdfjson, rdfxml, squirtle, turtle
+from argo_spark.ops import loopc
+from argo_spark.sinks import writers
+
 
 @dataclass
 class Format:
@@ -26,58 +31,10 @@ class Format:
     writer: Optional[Callable] = None  # (df, path, ...) -> None
 
 
-def _read_rdfxml(spark, path):
-    from argo_spark.extract.rdfxml import read_rdfxml
-
-    return read_rdfxml(spark, path)
-
-
 def _read_rdfa(spark, path):
     from argo_spark.extract.rdfa import read_rdfa
 
     return read_rdfa(spark, path), None  # RDFa has no quarantine frame
-
-
-def _write_rdfxml(df, path, mode="overwrite"):
-    from argo_spark.sinks.writers import write_rdfxml
-
-    return write_rdfxml(df, path, mode=mode)
-
-
-def _read_loop(spark, path):
-    from argo_spark.ops.loopc import read_loop
-
-    return read_loop(spark, path)
-
-
-def _read_nquads(spark, path):
-    from argo_spark.nquads import read_nquads
-
-    return read_nquads(spark, path)
-
-
-def _write_nquads(df, path, mode="overwrite"):
-    from argo_spark.nquads import write_nquads
-
-    return write_nquads(df, path, mode=mode)
-
-
-def _read_turtle(spark, path):
-    from argo_spark.extract.turtle import read_turtle
-
-    return read_turtle(spark, path)
-
-
-def _read_trig(spark, path):
-    from argo_spark.extract.turtle import read_trig
-
-    return read_trig(spark, path)
-
-
-def _read_rdfjson(spark, path):
-    from argo_spark.extract.rdfjson import read_rdfjson
-
-    return read_rdfjson(spark, path)
 
 
 def _read_warc(spark, path):
@@ -98,93 +55,71 @@ def _read_warc(spark, path):
     return triples, errors
 
 
-def _read_squirtle(spark, path):
-    from argo_spark.extract.squirtle import read_squirtle
-
-    return read_squirtle(spark, path)
-
-
-def _write_squirtle(df, path, mode="overwrite"):
-    from argo_spark.sinks.writers import write_squirtle
-
-    return write_squirtle(df, path, mode=mode)
-
-
-def _load():
-    from argo_spark import ntriples
-    from argo_spark.sinks import writers
-
-    def read_nt(spark, path):
-        return ntriples.read_ntriples(spark, path)
-
-    return {
-        "ntriples": Format(
-            "ntriples", "NTriples", "text/plain", ".nt",
-            reader=read_nt, writer=ntriples.write_ntriples,
-        ),
-        "nquads": Format(
-            # beyond the reference (single-graph Graph, graph.go:31-50):
-            # the serialization face of the named-graph quad model
-            "nquads", "NQuads", "application/n-quads", ".nq",
-            reader=_read_nquads, writer=_write_nquads,
-        ),
-        "turtle": Format(
-            # reader is BEYOND the reference (serializer-only
-            # registration, argo.go:117-140 — argo cannot read the
-            # Turtle it writes; extract/turtle.py can)
-            "turtle", "Turtle", "text/turtle", ".ttl",
-            other_mimes=["application/x-turtle"],
-            reader=_read_turtle, writer=writers.write_turtle,
-        ),
-        "trig": Format(
-            # Turtle analogue for the quad model; reader round 5c
-            "trig", "TriG", "application/trig", ".trig",
-            reader=_read_trig, writer=writers.write_trig,
-        ),
-        "json": Format(
-            # reader round 5c: accepts both the writer's NT-keyed
-            # lines and the W3C bare-IRI RDF/JSON form
-            "json", "RDF/JSON", "application/json", ".json",
-            reader=_read_rdfjson,
-            writer=lambda df, path, mode="overwrite": writers.rdfjson_lines(df)
-            .select("json")
-            .write.mode(mode)
-            .text(path),
-        ),
-        "rdfxml": Format(
-            "rdfxml", "RDF/XML", "application/rdf+xml", ".rdf",
-            other_exts=[".xml"],
-            reader=_read_rdfxml, writer=_write_rdfxml,
-        ),
-        "rdfa": Format(
-            "rdfa", "RDFA", "text/html", ".html",
-            other_mimes=["text/xhtml"], other_exts=[".htm"],
-            # reader registered by side-effect in the reference
-            # (rdfaparser.go:30-41); HTML is read-only (no writer)
-            reader=_read_rdfa,
-        ),
-        "squirtle": Format(
-            "squirtle", "Squirtle", "text/x-squirtle", ".squirtle",
-            reader=_read_squirtle, writer=_write_squirtle,
-        ),
-        "warc": Format(
-            # crawl ingestion (read-only by nature, like rdfa): WARC
-            # segments -> page extraction -> triples
-            "warc", "WARC", "application/warc", ".warc",
-            other_exts=[".warc.gz"],
-            reader=_read_warc,
-        ),
-        "loop": Format(
-            # the reference ships loopc as a separate binary whose NT
-            # output feeds the rdf tooling; registering the compiler
-            # as a reader folds that pipe into the same registry
-            "loop", "LOOP", "text/x-loop", ".loop",
-            reader=_read_loop,
-        ),
-    }
-
-
-FORMATS: dict[str, Format] = _load()
+FORMATS: dict[str, Format] = {
+    "ntriples": Format(
+        "ntriples", "NTriples", "text/plain", ".nt",
+        reader=ntriples.read_ntriples, writer=ntriples.write_ntriples,
+    ),
+    "nquads": Format(
+        # beyond the reference (single-graph Graph, graph.go:31-50):
+        # the serialization face of the named-graph quad model
+        "nquads", "NQuads", "application/n-quads", ".nq",
+        reader=nquads.read_nquads, writer=nquads.write_nquads,
+    ),
+    "turtle": Format(
+        # reader is BEYOND the reference (serializer-only
+        # registration, argo.go:117-140 — argo cannot read the
+        # Turtle it writes; extract/turtle.py can)
+        "turtle", "Turtle", "text/turtle", ".ttl",
+        other_mimes=["application/x-turtle"],
+        reader=turtle.read_turtle, writer=writers.write_turtle,
+    ),
+    "trig": Format(
+        # Turtle analogue for the quad model; reader round 5c
+        "trig", "TriG", "application/trig", ".trig",
+        reader=turtle.read_trig, writer=writers.write_trig,
+    ),
+    "json": Format(
+        # reader round 5c: accepts both the writer's NT-keyed
+        # lines and the W3C bare-IRI RDF/JSON form
+        "json", "RDF/JSON", "application/json", ".json",
+        reader=rdfjson.read_rdfjson,
+        writer=lambda df, path, mode="overwrite": writers.rdfjson_lines(df)
+        .select("json")
+        .write.mode(mode)
+        .text(path),
+    ),
+    "rdfxml": Format(
+        "rdfxml", "RDF/XML", "application/rdf+xml", ".rdf",
+        other_exts=[".xml"],
+        reader=rdfxml.read_rdfxml, writer=writers.write_rdfxml,
+    ),
+    "rdfa": Format(
+        "rdfa", "RDFA", "text/html", ".html",
+        other_mimes=["text/xhtml"], other_exts=[".htm"],
+        # reader registered by side-effect in the reference
+        # (rdfaparser.go:30-41); HTML is read-only (no writer)
+        reader=_read_rdfa,
+    ),
+    "squirtle": Format(
+        "squirtle", "Squirtle", "text/x-squirtle", ".squirtle",
+        reader=squirtle.read_squirtle, writer=writers.write_squirtle,
+    ),
+    "warc": Format(
+        # crawl ingestion (read-only by nature, like rdfa): WARC
+        # segments -> page extraction -> triples
+        "warc", "WARC", "application/warc", ".warc",
+        other_exts=[".warc.gz"],
+        reader=_read_warc,
+    ),
+    "loop": Format(
+        # the reference ships loopc as a separate binary whose NT
+        # output feeds the rdf tooling; registering the compiler
+        # as a reader folds that pipe into the same registry
+        "loop", "LOOP", "text/x-loop", ".loop",
+        reader=loopc.read_loop,
+    ),
+}
 
 
 def format_from_filename(path: str) -> Optional[Format]:

@@ -9,11 +9,14 @@ reproducible across runs and parallelism levels.
 All three group by subject. The groupings are plain shuffles on the
 subject key; Turtle and RDF/JSON stay entirely in column expressions
 (whole-stage codegen), RDF/XML uses one applyInPandas stage for the
-nested element layout.
+nested element layout. Turtle, TriG and Squirtle blocks come from one
+builder (_subject_blocks) and one term encoder (_turtle_term); only
+the block syntax and the IRI-abbreviation rule differ.
 """
 
 from __future__ import annotations
 
+import re
 from typing import Optional
 from xml.sax.saxutils import escape as _xml_escape
 
@@ -71,21 +74,27 @@ def _prefix_map_col(prefixes: dict[str, str]) -> Column:
 _PN_LOCAL_SAFE = r"^([A-Za-z0-9_]([A-Za-z0-9_.-]*[A-Za-z0-9_-])?)?$"
 
 
-def _qname_or_iri(value: Column, pmap: Column) -> Column:
+def _turtle_local_ok(local: Column) -> Column:
+    return local.rlike(_PN_LOCAL_SAFE)
+
+
+def _qname_or_iri(value: Column, pmap: Column, local_ok=_turtle_local_ok) -> Column:
     """Turtle term encoding for IRIs: ``prefix:local`` when the
-    split_prefix base is bound (turtleserializer.go:18-27) AND the
-    local is a safe PN_LOCAL, else ``<uri>``. The reference abbreviates
-    unconditionally, so ``dbp:London_(England)`` would not re-parse;
-    we diverge as the Squirtle writer does (_local_is_safe)."""
+    split_prefix base is bound (turtleserializer.go:18-27) AND
+    ``local_ok`` holds for the local, else ``<uri>``. The reference
+    abbreviates unconditionally, so ``dbp:London_(England)`` would not
+    re-parse; we diverge as the Squirtle writer does (_local_is_safe)."""
     local = split_prefix_local(value)
     prefix = F.element_at(pmap, split_prefix_base(value))
     return F.when(
-        prefix.isNotNull() & local.rlike(_PN_LOCAL_SAFE),
+        prefix.isNotNull() & local_ok(local),
         F.concat(prefix, F.lit(":"), local),
     ).otherwise(F.concat(F.lit("<"), value, F.lit(">")))
 
 
-def _turtle_term(kind: Column, value: Column, lang, dt, pmap: Column) -> Column:
+def _turtle_term(
+    kind: Column, value: Column, lang, dt, pmap: Column, local_ok=_turtle_local_ok
+) -> Column:
     lit_body = F.concat(F.lit('"'), escape_literal_col(value), F.lit('"'))
     if lang is not None:
         lit_full = (
@@ -99,9 +108,52 @@ def _turtle_term(kind: Column, value: Column, lang, dt, pmap: Column) -> Column:
     else:
         lit_full = lit_body
     return (
-        F.when(kind == KIND_IRI, _qname_or_iri(value, pmap))
+        F.when(kind == KIND_IRI, _qname_or_iri(value, pmap, local_ok))
         .when(kind == KIND_BLANK, F.concat(F.lit("_:"), value))
         .otherwise(lit_full)
+    )
+
+
+# (after the subject, after each p-o pair, after the last pair) of one
+# subject block: Turtle's reference layout with the trailing ';' after
+# EVERY p-o pair (turtleserializer.go:58-81), and Squirtle's braces
+# (squirtleserializer.go:36-78)
+_TURTLE_BLOCK = ("\n", " ;", "\n  .\n")
+_SQUIRTLE_BLOCK = (" {\n", "", "\n}\n")
+
+
+def _subject_blocks(
+    df: DataFrame, prefixes: Optional[dict[str, str]], syntax: tuple,
+    local_ok=_turtle_local_ok, graph: Optional[Column] = None,
+) -> DataFrame:
+    """One ``block`` row per subject (per (``g_value``, subject) when
+    ``graph`` is given, kept as a column): the encoded subject, then
+    its sorted p-o lines, in the ``syntax`` of _TURTLE_BLOCK or
+    _SQUIRTLE_BLOCK."""
+    head, line_end, tail = syntax
+    pmap = _prefix_map_col(prefixes if prefixes is not None else NAMESPACES)
+    s_enc = _turtle_term(F.col("s_kind"), F.col("s_value"), None, None, pmap, local_ok)
+    p_enc = _qname_or_iri(F.col("p_value"), pmap, local_ok)
+    o_enc = _turtle_term(
+        F.col("o_kind"), F.col("o_value"), F.col("o_lang"), F.col("o_dt"), pmap,
+        local_ok,
+    )
+    line = F.concat(F.lit("  "), p_enc, F.lit(" "), o_enc, F.lit(line_end))
+    keys = ["s_enc"] if graph is None else ["g_value", "s_enc"]
+    cols = [s_enc.alias("s_enc"), line.alias("line")]
+    if graph is not None:
+        cols.insert(0, graph.alias("g_value"))
+    return (
+        df.select(*cols)
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list("line")).alias("lines"))
+        .select(
+            *keys[:-1],
+            F.concat(
+                F.col("s_enc"), F.lit(head), F.array_join("lines", "\n"),
+                F.lit(tail),
+            ).alias("block"),
+        )
     )
 
 
@@ -116,26 +168,7 @@ def turtle_blocks(
     after EVERY p-o pair (turtleserializer.go:58-81). p-o lines sorted
     for determinism. Written via .text each row gains the final
     newline, reproducing the blank line between blocks."""
-    pmap = _prefix_map_col(prefixes if prefixes is not None else NAMESPACES)
-    s_enc = _turtle_term(F.col("s_kind"), F.col("s_value"), None, None, pmap)
-    p_enc = _qname_or_iri(F.col("p_value"), pmap)
-    o_enc = _turtle_term(
-        F.col("o_kind"), F.col("o_value"), F.col("o_lang"), F.col("o_dt"), pmap
-    )
-    line = F.concat(F.lit("  "), p_enc, F.lit(" "), o_enc, F.lit(" ;"))
-    return (
-        df.select(s_enc.alias("s_enc"), line.alias("line"))
-        .groupBy("s_enc")
-        .agg(F.array_sort(F.collect_list("line")).alias("lines"))
-        .select(
-            F.concat(
-                F.col("s_enc"),
-                F.lit("\n"),
-                F.array_join("lines", "\n"),
-                F.lit("\n  .\n"),
-            ).alias("block")
-        )
-    )
+    return _subject_blocks(df, prefixes, _TURTLE_BLOCK)
 
 
 def turtle_header(prefixes: Optional[dict[str, str]] = None) -> str:
@@ -154,7 +187,14 @@ def turtle_string(
 ) -> str:
     """Whole document as ONE DRIVER-SIDE string (tests / small graphs;
     size-guarded — write_turtle is the distributed form)."""
-    rows = _collect_guarded(turtle_blocks(df, prefixes), max_rows, "turtle_string")
+    return _blocks_string(turtle_blocks(df, prefixes), prefixes, max_rows, "turtle_string")
+
+
+def _blocks_string(
+    blocks: DataFrame, prefixes: Optional[dict[str, str]],
+    max_rows: Optional[int], tag: str,
+) -> str:
+    rows = _collect_guarded(blocks, max_rows, tag)
     return turtle_header(prefixes) + "\n".join(sorted(r.block for r in rows))
 
 
@@ -181,11 +221,15 @@ def write_turtle(
     inter-block blank line once .text appends its newline); the prefix
     header goes to the ``<path>._prefixes`` sidecar file, since a
     distributed write cannot say which part file comes first."""
-    turtle_blocks(df, prefixes).select(F.col("block").alias("value")).write.mode(
-        mode
-    ).text(path)
+    _write_blocks(turtle_blocks(df, prefixes), path, prefixes, mode)
+
+
+def _write_blocks(
+    blocks: DataFrame, path: str, prefixes: Optional[dict[str, str]], mode: str
+) -> None:
+    blocks.select(F.col("block").alias("value")).write.mode(mode).text(path)
     _write_driver_file(
-        df.sparkSession, path.rstrip("/") + "._prefixes",
+        blocks.sparkSession, path.rstrip("/") + "._prefixes",
         turtle_header(prefixes).rstrip("\n") + "\n",
     )
 
@@ -208,43 +252,17 @@ def trig_blocks(
     (triples accumulate), so each row is independently valid — the
     distributed form needs no per-graph grouping beyond the subject
     aggregation, and a 100-TB graph never has to fit one task."""
-    pmap = _prefix_map_col(prefixes if prefixes is not None else NAMESPACES)
-    s_enc = _turtle_term(F.col("s_kind"), F.col("s_value"), None, None, pmap)
-    p_enc = _qname_or_iri(F.col("p_value"), pmap)
-    o_enc = _turtle_term(
-        F.col("o_kind"), F.col("o_value"), F.col("o_lang"), F.col("o_dt"), pmap
-    )
-    g = (
-        F.col("g_value")
-        if "g_value" in df.columns
-        else F.lit(None).cast("string")
-    )
-    line = F.concat(F.lit("  "), p_enc, F.lit(" "), o_enc, F.lit(" ;"))
-    blocks = (
-        df.select(
-            g.alias("g_value"), s_enc.alias("s_enc"), line.alias("line")
-        )
-        .groupBy("g_value", "s_enc")
-        .agg(F.array_sort(F.collect_list("line")).alias("lines"))
-        .select(
-            "g_value",
-            F.concat(
-                F.col("s_enc"),
-                F.lit("\n"),
-                F.array_join("lines", "\n"),
-                F.lit("\n  ."),
-            ).alias("body"),
-        )
-    )
+    g = F.col("g_value") if "g_value" in df.columns else F.lit(None).cast("string")
+    blocks = _subject_blocks(df, prefixes, _TURTLE_BLOCK, graph=g)
     return blocks.select(
         F.when(
             F.col("g_value").isNotNull(),
             F.concat(
-                F.lit("<"), F.col("g_value"), F.lit("> {\n"),
-                F.col("body"), F.lit("\n}\n"),
+                F.lit("<"), F.col("g_value"), F.lit("> {\n"), F.col("block"),
+                F.lit("}\n"),
             ),
         )
-        .otherwise(F.concat(F.col("body"), F.lit("\n")))
+        .otherwise(F.col("block"))
         .alias("block")
     )
 
@@ -255,8 +273,7 @@ def trig_string(
 ) -> str:
     """Whole TriG document as ONE DRIVER-SIDE string (tests / small
     graphs; size-guarded — write_trig is the distributed form)."""
-    rows = _collect_guarded(trig_blocks(df, prefixes), max_rows, "trig_string")
-    return turtle_header(prefixes) + "\n".join(sorted(r.block for r in rows))
+    return _blocks_string(trig_blocks(df, prefixes), prefixes, max_rows, "trig_string")
 
 
 def write_trig(
@@ -265,13 +282,7 @@ def write_trig(
 ) -> None:
     """Distributed TriG: block rows as text; prefix header sidecar as
     in the Turtle sink."""
-    trig_blocks(df, prefixes).select(F.col("block").alias("value")).write.mode(
-        mode
-    ).text(path)
-    _write_driver_file(
-        df.sparkSession, path.rstrip("/") + "._prefixes",
-        turtle_header(prefixes).rstrip("\n") + "\n",
-    )
+    _write_blocks(trig_blocks(df, prefixes), path, prefixes, mode)
 
 
 # ---------------------------------------------------------------------------
@@ -451,15 +462,24 @@ def write_rdfxml(
     ``read_rdfxml`` (one document per file) — the sharded analogue of
     the reference's single serialized stream (rdfxml.go:181-333).
     Empty partitions emit a valid empty document."""
-    header = rdfxml_header(prefixes).rstrip("\n")
-    footer = "</rdf:RDF>"
-    blocks = rdfxml_blocks(df, prefixes)
+    _write_documents(
+        rdfxml_blocks(df, prefixes), path, rdfxml_header(prefixes), "</rdf:RDF>", mode
+    )
+
+
+def _write_documents(
+    blocks: DataFrame, path: str, header: str, footer: Optional[str], mode: str
+) -> None:
+    """Every part file is one whole document: ``header``, the
+    partition's ``block`` rows, then ``footer`` if any."""
+    header = header.rstrip("\n")
 
     def wrap(batches):
         yield pd.DataFrame({"value": [header]})
         for pdf in batches:
             yield pd.DataFrame({"value": pdf["block"].str.rstrip("\n")})
-        yield pd.DataFrame({"value": [footer]})
+        if footer is not None:
+            yield pd.DataFrame({"value": [footer]})
 
     blocks.mapInPandas(wrap, schema="value string").write.mode(mode).text(path)
 
@@ -467,8 +487,6 @@ def write_rdfxml(
 # ---------------------------------------------------------------------------
 # Squirtle (K5) — /root/reference/squirtleserializer.go:8-104
 # ---------------------------------------------------------------------------
-
-import re as _re
 
 # Locals the parser can lex back as a postfix identifier: word chars
 # only ([A-Za-z0-9_-], alpha/_ start — squirtle.py _is_word), not the
@@ -479,12 +497,20 @@ import re as _re
 # to re-parse. The REFERENCE serializer has this flaw
 # (squirtleserializer.go:13-24 emits prefix:local unconditionally);
 # we diverge to keep the advertised round-trip guarantee.
-_SAFE_LOCAL = _re.compile(r"[A-Za-z_][A-Za-z0-9_-]*\Z")
+_SQUIRTLE_LOCAL = "[A-Za-z_][A-Za-z0-9_-]*"
 _UNSAFE_WORDS = frozenset({"include", "new", "inf", "nan"})
 
 
 def _local_is_safe(local: str) -> bool:
-    return bool(_SAFE_LOCAL.match(local)) and local.lower() not in _UNSAFE_WORDS
+    return (
+        re.fullmatch(_SQUIRTLE_LOCAL, local) is not None
+        and local.lower() not in _UNSAFE_WORDS
+    )
+
+
+def _squirtle_local_ok(local: Column) -> Column:
+    """_local_is_safe as a column expression."""
+    return local.rlike(f"^{_SQUIRTLE_LOCAL}$") & ~F.lower(local).isin(*_UNSAFE_WORDS)
 
 
 def _squirtle_term(t_kind: int, value: str, lang, dt, pmap: dict) -> str:
@@ -558,58 +584,7 @@ def squirtle_blocks(
     """Distributed flat variant: one ``subject { ... }`` block row per
     subject, no cross-subject inlining (inlining needs the whole graph
     on one node; flat blocks parse back identically)."""
-    p = prefixes if prefixes is not None else NAMESPACES
-    pmap_col = _prefix_map_col(p)
-
-    def enc(kind, value, lang=None, dt=None):
-        base = split_prefix_base(value)
-        local = split_prefix_local(value)
-        prefix = F.element_at(pmap_col, base)
-        # same safe-local rule as _local_is_safe (parser charset)
-        local_ok = local.rlike(r"^[A-Za-z_][A-Za-z0-9_-]*$") & ~F.lower(
-            local
-        ).isin(*_UNSAFE_WORDS)
-        as_iri = F.when(
-            prefix.isNotNull() & local_ok, F.concat(prefix, F.lit(":"), local)
-        ).otherwise(F.concat(F.lit("<"), value, F.lit(">")))
-        if lang is None:
-            return F.when(kind == KIND_IRI, as_iri).otherwise(
-                F.concat(F.lit("_:"), value)
-            )
-        return (
-            F.when(kind == KIND_IRI, as_iri)
-            .when(kind == KIND_BLANK, F.concat(F.lit("_:"), value))
-            .otherwise(
-                F.concat(
-                    F.lit('"'), escape_literal_col(value), F.lit('"'),
-                    F.when(
-                        lang.isNotNull() & (lang != F.lit("")),
-                        F.concat(F.lit("@"), lang),
-                    )
-                    .when(dt.isNotNull(), F.concat(F.lit("^^<"), dt, F.lit(">")))
-                    .otherwise(F.lit("")),
-                )
-            )
-        )
-
-    s_enc = enc(F.col("s_kind"), F.col("s_value"))
-    line = F.concat(
-        F.lit("  "),
-        enc(F.lit(KIND_IRI).cast("tinyint"), F.col("p_value")),
-        F.lit(" "),
-        enc(F.col("o_kind"), F.col("o_value"), F.col("o_lang"), F.col("o_dt")),
-    )
-    return (
-        df.select(s_enc.alias("s_enc"), line.alias("line"))
-        .groupBy("s_enc")
-        .agg(F.array_sort(F.collect_list("line")).alias("lines"))
-        .select(
-            F.concat(
-                F.col("s_enc"), F.lit(" {\n"),
-                F.array_join("lines", "\n"), F.lit("\n}\n"),
-            ).alias("block")
-        )
-    )
+    return _subject_blocks(df, prefixes, _SQUIRTLE_BLOCK, _squirtle_local_ok)
 
 
 def squirtle_header(prefixes: Optional[dict[str, str]] = None) -> str:
@@ -626,15 +601,9 @@ def write_squirtle(
     """Distributed Squirtle: every part file is a complete document —
     name headers + that partition's flat subject blocks — so a
     directory of parts round-trips through read_squirtle."""
-    header = squirtle_header(prefixes).rstrip("\n")
-    blocks = squirtle_blocks(df, prefixes)
-
-    def wrap(batches):
-        yield pd.DataFrame({"value": [header]})
-        for pdf in batches:
-            yield pd.DataFrame({"value": pdf["block"].str.rstrip("\n")})
-
-    blocks.mapInPandas(wrap, schema="value string").write.mode(mode).text(path)
+    _write_documents(
+        squirtle_blocks(df, prefixes), path, squirtle_header(prefixes), None, mode
+    )
 
 
 def select_tsv_lines(bindings: DataFrame) -> DataFrame:

@@ -49,7 +49,7 @@ def test_read_nquads_mixed(spark, tmp_path):
     assert by_subject["http://e/a"][7] is None or any(
         r[7] is None for r in got if r[1] == "http://e/a"
     )
-    # quad with an escaped literal goes through the strip-retry path
+    # quad with an escaped literal: the per-row parser reads the graph term
     assert by_subject["http://e/b"][4] == 'hi "there" . <fake> .'
     assert by_subject["http://e/b"][7] == "http://g/2"
     # datatype and lang survive next to a graph label
@@ -123,3 +123,44 @@ def test_nquads_registry(spark):
     assert format_from_filename("dump.nq").id == "nquads"
     assert format_from_filename("dump.nt").id == "ntriples"
     assert format_from_mime("application/n-quads").id == "nquads"
+
+
+# One line per N-Quads shape the line parser must keep apart: quad,
+# triple, escaped-literal quad (the per-row parser path), five terms,
+# a blank-node graph label, an unterminated quad, a comment and a
+# blank line.
+PARITY_LINES = [
+    "<http://e/a> <http://e/p> <http://e/o> <http://g/1> .",
+    '<http://e/a> <http://e/name> "Ada"@en .',
+    '<http://e/b> <http://e/says> "hi \\"there\\"\\n" <http://g/2> .',
+    "<http://e/f> <http://e/p> <http://e/o> <http://g/1> <http://g/2> .",
+    "<http://e/e> <http://e/p> <http://e/o> _:bg .",
+    "<http://e/u> <http://e/p> <http://e/o> <http://g/1>",
+    "# a comment",
+    "",
+]
+
+# (s_kind, s_value, p_value, o_kind, o_value, o_lang, o_dt, g_value,
+#  error, err_column, line) per parsed line, in input order
+PARITY_ROWS = [
+    (0, 'http://e/a', 'http://e/p', 0, 'http://e/o', None, None, 'http://g/1', None, None, None),
+    (0, 'http://e/a', 'http://e/name', 2, 'Ada', 'en', None, None, None, None, None),
+    (0, 'http://e/b', 'http://e/says', 2, 'hi "there"\n', None, None, 'http://g/2', None, None, None),
+    (1, None, None, None, None, None, None, None, 'unexpected character', 39, '<http://e/f> <http://e/p> <http://e/o> <http://g/1> <http://g/2> .'),
+    (1, None, None, None, None, None, None, None, 'unexpected character', 39, '<http://e/e> <http://e/p> <http://e/o> _:bg .'),
+    (1, None, None, None, None, None, None, None, 'unexpected character', 39, '<http://e/u> <http://e/p> <http://e/o> <http://g/1>'),
+]
+
+
+def parity_rows(spark):
+    from argo_spark.nquads import parse_nquads_col
+
+    df = spark.createDataFrame([(ln,) for ln in PARITY_LINES], "value string")
+    return [tuple(r) for r in parse_nquads_col(df.coalesce(1)).collect()]
+
+
+def test_nquads_quarantine_parity(spark):
+    """Parsed rows and quarantine rows (error, column, line) of every
+    N-Quads line shape, as the standalone N-Quads parser produced them
+    before N-Quads became the N-Triples parser with a graph term."""
+    assert parity_rows(spark) == PARITY_ROWS

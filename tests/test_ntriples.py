@@ -102,3 +102,26 @@ def test_distributed_quarantine(spark):
             assert errs[text] in (expected_err, "unexpected character")
         else:
             assert errs[text] == expected_err, text
+
+
+@pytest.mark.parametrize("module,fn", [
+    ("argo_spark.ntriples", "parse_ntriples_col"),
+    ("argo_spark.nquads", "parse_nquads_col"),
+])
+def test_null_line_quarantined(spark, module, fn):
+    """A null line is one "null line" quarantine row; the lines next
+    to it still parse."""
+    import importlib
+
+    parse = getattr(importlib.import_module(module), fn)
+    df = spark.createDataFrame(
+        [(None,), ("<http://a> <http://b> <http://c> .",), ("<http://a> <http://b> \"x\\ny\" .",)],
+        "value string",
+    )
+    rows = parse(df.coalesce(1)).collect()
+    assert [(r.error, r.err_column, r.line) for r in rows if r.error] == [
+        ("null line", None, None)
+    ]
+    assert sorted((r.s_value, r.p_value, r.o_value) for r in rows if not r.error) == [
+        ("http://a", "http://b", "http://c"), ("http://a", "http://b", "x\ny"),
+    ]
