@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from argo_spark.schema import TRIPLE_COLS
 from argo_spark.sinks.registry import FORMATS, format_from_filename, format_from_mime
+from argo_spark.sources.documents import parse_error_count
 
 
 def _fetch_url(url: str) -> tuple[str, str | None]:
@@ -83,11 +84,15 @@ def parse_http(
     fetch one URL and parse it by explicit format, extension, or
     Content-Type. Returns (triples, errors_or_None); the temp file is
     removed after the frames are materialized via localCheckpoint so
-    no lazy scan outlives it."""
+    no lazy scan outlives it. The eager triples checkpoint consumes
+    every parsed row, so the parse pass's error count is exact there:
+    a clean document is parsed once and returns no error frame."""
     local, mime = _fetch_url(url)
     try:
         df, errors = read_source(spark, local, fmt_id, mime=mime)
         df = df.localCheckpoint(eager=True)
+        if errors is not None and parse_error_count(errors) == 0:
+            errors = None
         if errors is not None:
             errors = errors.localCheckpoint(eager=True)
         return df, errors
@@ -241,11 +246,19 @@ def _run_pipeline_on(
 
     n = obs.get["n"]
     dt = time.time() - t0
-    # quarantine report AFTER the write. ONE pass per source: take(6)
-    # both samples and (when < 6 rows) counts exactly; the full count
-    # job runs only on the cached frame of an actually-errored source.
+    # quarantine report AFTER the write. The parse pass counted each
+    # source's errors (documents.split_quarantine). A plain conversion
+    # writes every parsed row, so there a 0 is exact and a clean
+    # source is not parsed again; a query (--update, --construct,
+    # --describe) may read only part of a source, so there every
+    # source is probed. The probe is one pass: take(6) samples and
+    # (when < 6 rows) counts; the full count runs only on the cached
+    # frame of a source that errored.
+    counts_exact = not (update or construct or describe)
     n_err = 0
     for ef in err_frames:
+        if counts_exact and parse_error_count(ef) == 0:
+            continue
         ef = ef.persist()
         head = ef.take(6)
         for r in head[:5]:

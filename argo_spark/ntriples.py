@@ -370,9 +370,10 @@ def _line_codec(quads: bool):
             # fast-path rows: regex matched (group 2 = predicate IRI present)
             fast = m[2].notna()
             out = pd.DataFrame(index=pdf.index, columns=cols, dtype=object)
-            out["s_kind"] = pd.array(
-                np.where(m[0].notna(), KIND_IRI, KIND_BLANK), dtype="Int8"
-            )
+            s_kind = pd.Series(index=pdf.index, dtype="Int8")
+            s_kind[m[0].notna()] = KIND_IRI
+            s_kind[m[1].notna()] = KIND_BLANK
+            out["s_kind"] = s_kind
             out["s_value"] = np.where(m[0].notna(), m[0], m[1])
             out["p_value"] = m[2]
             o_kind = pd.Series(index=pdf.index, dtype="Int8")

@@ -71,17 +71,27 @@ def _prefix_map_col(prefixes: dict[str, str]) -> Column:
 # A conservative subset of Turtle's PN_LOCAL that extract/turtle.py
 # lexes back as the same local name: ASCII word chars, inner '.' and
 # '-', no leading '.'/'-' and no trailing '.' (statement punctuation).
-_PN_LOCAL_SAFE = r"^([A-Za-z0-9_]([A-Za-z0-9_.-]*[A-Za-z0-9_-])?)?$"
+_PN_LOCAL_SAFE = r"^([A-Za-z0-9_]([A-Za-z0-9_.-]*[A-Za-z0-9_-])?)?\z"
 
 
 def _turtle_local_ok(local: Column) -> Column:
     return local.rlike(_PN_LOCAL_SAFE)
 
 
-def _qname_or_iri(value: Column, pmap: Column, local_ok=_turtle_local_ok) -> Column:
+def _turtle_iriref(value: Column) -> Column:
+    """``<value>`` with CR and LF as UCHAR escapes: IRIREF admits
+    neither raw, and extract/turtle.py ends an IRI at a line break."""
+    for raw, uchar in (("\n", "\\u000A"), ("\r", "\\u000D")):
+        value = F.replace(value, F.lit(raw), F.lit(uchar))
+    return F.concat(F.lit("<"), value, F.lit(">"))
+
+
+def _qname_or_iri(
+    value: Column, pmap: Column, local_ok=_turtle_local_ok, iriref=_turtle_iriref
+) -> Column:
     """Turtle term encoding for IRIs: ``prefix:local`` when the
     split_prefix base is bound (turtleserializer.go:18-27) AND
-    ``local_ok`` holds for the local, else ``<uri>``. The reference
+    ``local_ok`` holds for the local, else ``iriref``. The reference
     abbreviates unconditionally, so ``dbp:London_(England)`` would not
     re-parse; we diverge as the Squirtle writer does (_local_is_safe)."""
     local = split_prefix_local(value)
@@ -89,11 +99,12 @@ def _qname_or_iri(value: Column, pmap: Column, local_ok=_turtle_local_ok) -> Col
     return F.when(
         prefix.isNotNull() & local_ok(local),
         F.concat(prefix, F.lit(":"), local),
-    ).otherwise(F.concat(F.lit("<"), value, F.lit(">")))
+    ).otherwise(iriref(value))
 
 
 def _turtle_term(
-    kind: Column, value: Column, lang, dt, pmap: Column, local_ok=_turtle_local_ok
+    kind: Column, value: Column, lang, dt, pmap: Column,
+    local_ok=_turtle_local_ok, iriref=_turtle_iriref,
 ) -> Column:
     lit_body = F.concat(F.lit('"'), escape_literal_col(value), F.lit('"'))
     if lang is not None:
@@ -102,13 +113,13 @@ def _turtle_term(
                 lang.isNotNull() & (lang != F.lit("")),
                 F.concat(lit_body, F.lit("@"), lang),
             )
-            .when(dt.isNotNull(), F.concat(lit_body, F.lit("^^<"), dt, F.lit(">")))
+            .when(dt.isNotNull(), F.concat(lit_body, F.lit("^^"), iriref(dt)))
             .otherwise(lit_body)
         )
     else:
         lit_full = lit_body
     return (
-        F.when(kind == KIND_IRI, _qname_or_iri(value, pmap, local_ok))
+        F.when(kind == KIND_IRI, _qname_or_iri(value, pmap, local_ok, iriref))
         .when(kind == KIND_BLANK, F.concat(F.lit("_:"), value))
         .otherwise(lit_full)
     )
@@ -124,7 +135,8 @@ _SQUIRTLE_BLOCK = (" {\n", "", "\n}\n")
 
 def _subject_blocks(
     df: DataFrame, prefixes: Optional[dict[str, str]], syntax: tuple,
-    local_ok=_turtle_local_ok, graph: Optional[Column] = None,
+    local_ok=_turtle_local_ok, iriref=_turtle_iriref,
+    graph: Optional[Column] = None,
 ) -> DataFrame:
     """One ``block`` row per subject (per (``g_value``, subject) when
     ``graph`` is given, kept as a column): the encoded subject, then
@@ -132,11 +144,13 @@ def _subject_blocks(
     _SQUIRTLE_BLOCK."""
     head, line_end, tail = syntax
     pmap = _prefix_map_col(prefixes if prefixes is not None else NAMESPACES)
-    s_enc = _turtle_term(F.col("s_kind"), F.col("s_value"), None, None, pmap, local_ok)
-    p_enc = _qname_or_iri(F.col("p_value"), pmap, local_ok)
+    s_enc = _turtle_term(
+        F.col("s_kind"), F.col("s_value"), None, None, pmap, local_ok, iriref
+    )
+    p_enc = _qname_or_iri(F.col("p_value"), pmap, local_ok, iriref)
     o_enc = _turtle_term(
         F.col("o_kind"), F.col("o_value"), F.col("o_lang"), F.col("o_dt"), pmap,
-        local_ok,
+        local_ok, iriref,
     )
     line = F.concat(F.lit("  "), p_enc, F.lit(" "), o_enc, F.lit(line_end))
     keys = ["s_enc"] if graph is None else ["g_value", "s_enc"]
@@ -510,7 +524,13 @@ def _local_is_safe(local: str) -> bool:
 
 def _squirtle_local_ok(local: Column) -> Column:
     """_local_is_safe as a column expression."""
-    return local.rlike(f"^{_SQUIRTLE_LOCAL}$") & ~F.lower(local).isin(*_UNSAFE_WORDS)
+    return local.rlike(f"^{_SQUIRTLE_LOCAL}\\z") & ~F.lower(local).isin(*_UNSAFE_WORDS)
+
+
+def _squirtle_iriref(value: Column) -> Column:
+    """``<value>`` as is: the Squirtle lexer reads an IRI up to ``>``
+    and decodes no escapes (_squirtle_term's ``<uri>``)."""
+    return F.concat(F.lit("<"), value, F.lit(">"))
 
 
 def _squirtle_term(t_kind: int, value: str, lang, dt, pmap: dict) -> str:
@@ -584,7 +604,9 @@ def squirtle_blocks(
     """Distributed flat variant: one ``subject { ... }`` block row per
     subject, no cross-subject inlining (inlining needs the whole graph
     on one node; flat blocks parse back identically)."""
-    return _subject_blocks(df, prefixes, _SQUIRTLE_BLOCK, _squirtle_local_ok)
+    return _subject_blocks(
+        df, prefixes, _SQUIRTLE_BLOCK, _squirtle_local_ok, _squirtle_iriref
+    )
 
 
 def squirtle_header(prefixes: Optional[dict[str, str]] = None) -> str:

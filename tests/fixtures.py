@@ -5,6 +5,7 @@
 ntriples_test.go:95-119 — each as (input, expected error category from
 ntriples.go:44-51). The test *data* is authoritative even though the
 reference's own suite has drifted from its implementation (SURVEY §5).
+Also the job counter the per-call Spark job tests share.
 """
 
 from __future__ import annotations
@@ -114,3 +115,15 @@ NEGATIVE_CASES: list[tuple[str, str]] = [
     ("_:abc <> _:abc .", ERR_UNEXPECTED_CHARACTER),
     ("_:abc < > _:abc .", ERR_UNEXPECTED_CHARACTER),
 ]
+
+
+def jobs_started(spark, group, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -72,8 +72,11 @@ QUARANTINING = {
 def test_read_source_quarantines_one_bad_document(spark, tmp_path, fmt_id):
     """Every quarantining registry reader, through cli.read_source: the
     good document's triples come through and the malformed one is one
-    error row with the reader's error columns."""
+    error row with the reader's error columns. The split counts the
+    error while the triples are read: unknown before any action, 1
+    after a collect that parsed every document."""
     from argo_spark.cli import read_source
+    from argo_spark.sources.documents import parse_error_count
 
     good, bad, error_cols = QUARANTINING[fmt_id]
     for name, doc in (("good", good), ("bad", bad)):
@@ -81,7 +84,9 @@ def test_read_source_quarantines_one_bad_document(spark, tmp_path, fmt_id):
             doc if isinstance(doc, bytes) else doc.encode()
         )
     triples, errors = read_source(spark, str(tmp_path), fmt_id)
+    assert parse_error_count(errors) is None
     assert "good" in {r.o_value for r in triples.collect()}
+    assert parse_error_count(errors) == 1
     assert errors.columns == error_cols
     assert errors.count() == 1
 

@@ -146,9 +146,9 @@ PARITY_ROWS = [
     (0, 'http://e/a', 'http://e/p', 0, 'http://e/o', None, None, 'http://g/1', None, None, None),
     (0, 'http://e/a', 'http://e/name', 2, 'Ada', 'en', None, None, None, None, None),
     (0, 'http://e/b', 'http://e/says', 2, 'hi "there"\n', None, None, 'http://g/2', None, None, None),
-    (1, None, None, None, None, None, None, None, 'unexpected character', 39, '<http://e/f> <http://e/p> <http://e/o> <http://g/1> <http://g/2> .'),
-    (1, None, None, None, None, None, None, None, 'unexpected character', 39, '<http://e/e> <http://e/p> <http://e/o> _:bg .'),
-    (1, None, None, None, None, None, None, None, 'unexpected character', 39, '<http://e/u> <http://e/p> <http://e/o> <http://g/1>'),
+    (None, None, None, None, None, None, None, None, 'unexpected character', 39, '<http://e/f> <http://e/p> <http://e/o> <http://g/1> <http://g/2> .'),
+    (None, None, None, None, None, None, None, None, 'unexpected character', 39, '<http://e/e> <http://e/p> <http://e/o> _:bg .'),
+    (None, None, None, None, None, None, None, None, 'unexpected character', 39, '<http://e/u> <http://e/p> <http://e/o> <http://g/1>'),
 ]
 
 

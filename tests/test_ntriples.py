@@ -125,3 +125,34 @@ def test_null_line_quarantined(spark, module, fn):
     assert sorted((r.s_value, r.p_value, r.o_value) for r in rows if not r.error) == [
         ("http://a", "http://b", "http://c"), ("http://a", "http://b", "x\ny"),
     ]
+
+
+TERM_COLS = ["s_kind", "s_value", "p_value", "o_kind", "o_value", "o_lang", "o_dt"]
+
+
+@pytest.mark.parametrize("module,fn", [
+    ("argo_spark.ntriples", "parse_ntriples_col"),
+    ("argo_spark.nquads", "parse_nquads_col"),
+])
+def test_error_rows_carry_no_term(spark, module, fn):
+    """Every quarantine row (a null line, a line the fast path cannot
+    match, each reference negative case) has all seven term columns
+    NULL, while the parsed rows next to them keep theirs."""
+    import importlib
+
+    parse = getattr(importlib.import_module(module), fn)
+    lines = [
+        None, "this line is not a triple at all", "<http://a> <http://b>",
+        "_:x <http://b> <http://c>", '<http://a> <http://b> "open .',
+        *(text for text, _ in NEGATIVE_CASES),
+        "<http://a> <http://b> <http://c> .", '_:x <http://b> "y\\n" .',
+    ]
+    df = spark.createDataFrame([(ln,) for ln in lines], "value string")
+    rows = parse(df.coalesce(1)).collect()
+    errors = [r for r in rows if r.error]
+    assert len(errors) == len(lines) - 2
+    assert [r.error for r in errors if r.line is None] == ["null line"]
+    for r in errors:
+        assert [r[c] for c in TERM_COLS] == [None] * 7, r
+    parsed = sorted((r.s_kind, r.s_value) for r in rows if not r.error)
+    assert parsed == [(0, "http://a"), (1, "x")]

@@ -18,6 +18,7 @@ from argo_spark.pages import expected_triples, synthesize_pages
 from argo_spark.pipeline import KgPipeline, predicate_stats
 from argo_spark.schema import TRIPLE_COLS
 from argo_spark.session import local_frame
+from tests.fixtures import jobs_started
 
 
 @pytest.fixture()
@@ -26,18 +27,6 @@ def outdir(tmp_path):
 
 
 N = 120
-
-
-def _jobs_started(spark, group, fn):
-    """(fn(), number of Spark jobs fn started)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(prop, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_run_resume_exactly_once(spark, outdir):
@@ -98,15 +87,15 @@ def test_fresh_directory_reads(spark, outdir):
     buckets and collecting the committed view start no Spark job.
     Buckets that extract no triples are never committed."""
     empty_manifest = spark.createDataFrame([], MANIFEST_SCHEMA).schema
-    m, n_jobs = _jobs_started(spark, "fresh-manifest", Manifest(spark, outdir).read)
+    m, n_jobs = jobs_started(spark, "fresh-manifest", Manifest(spark, outdir).read)
     assert n_jobs == 0
     assert m.schema == empty_manifest and m.count() == 0
-    done, n_jobs = _jobs_started(spark, "fresh-done", Manifest(spark, outdir).done_buckets)
+    done, n_jobs = jobs_started(spark, "fresh-done", Manifest(spark, outdir).done_buckets)
     assert done == [] and n_jobs == 0
 
     pipe = KgPipeline(spark, outdir, n_buckets=16)
     fresh = pipe.triples()
-    rows, n_jobs = _jobs_started(spark, "fresh-triples", fresh.collect)
+    rows, n_jobs = jobs_started(spark, "fresh-triples", fresh.collect)
     assert rows == [] and n_jobs == 0
     # 5 pages over 16 buckets: most buckets stay empty
     stats = pipe.run(synthesize_pages(spark, 5))
@@ -203,8 +192,8 @@ def test_local_frame_matches_list_frame(spark, request, schema, rows):
     local = local_frame(spark, rows, schema)
     assert local.schema == listed.schema
     tag = request.node.callspec.id
-    got, local_jobs = _jobs_started(spark, "local-" + tag, local.collect)
-    want, list_jobs = _jobs_started(spark, "list-" + tag, listed.collect)
+    got, local_jobs = jobs_started(spark, "local-" + tag, local.collect)
+    want, list_jobs = jobs_started(spark, "list-" + tag, listed.collect)
     assert got == want
     assert local_jobs == 0 and list_jobs >= 1
 
@@ -216,10 +205,10 @@ def test_materialize_squishes_once(spark, outdir):
     pages = synthesize_pages(spark, N)
     pipe = KgPipeline(spark, outdir, n_buckets=4)
     pipe.run(pages)
-    _, parquet_only = _jobs_started(
+    _, parquet_only = jobs_started(
         spark, "materialize-parquet", lambda: pipe.materialize(squished_path=outdir + "/sq-a")
     )
-    _, both = _jobs_started(
+    _, both = jobs_started(
         spark, "materialize-both", lambda: pipe.materialize(outdir + "/nt", outdir + "/sq-b")
     )
     assert both <= parquet_only + 1

@@ -5,6 +5,7 @@ from __future__ import annotations
 from argo_spark.extract.rdfxml import parse_rdfxml, read_rdfxml
 from argo_spark.namespaces import RDF_TYPE
 from argo_spark.terms import KIND_BLANK, KIND_IRI, KIND_LITERAL, skolem_id
+from tests.fixtures import jobs_started
 
 RDF_OPEN = (
     '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
@@ -240,15 +241,93 @@ def test_cli_quarantines_parse_errors(spark, tmp_path, capsys):
     assert "1 input rows quarantined" in err
 
 
+GOOD_LINES = [f'<http://e/g{i}> <http://e/p> "v{i}" .' for i in range(40)]
+BAD_LINES = [f"<http://e/s{i}> <http://e/p> broken{i}" for i in range(8)]
+# the report of a source holding BAD_LINES: 5 samples and the exact total
+BAD_REPORT = [
+    "parse error: Row(error='unexpected character', column=27, "
+    f"line='<http://e/s{i}> <http://e/p> broken{i}')"
+    for i in range(5)
+] + ["8 input rows quarantined (parse errors)"]
+
+
+def _convert(spark, capsys, tag, inputs, out, **kw):
+    """run_pipeline -> (triples written, Spark jobs started, the
+    quarantine report lines on stderr)."""
+    from argo_spark.cli import run_pipeline
+
+    capsys.readouterr()
+    n, n_jobs = jobs_started(
+        spark, tag, lambda: run_pipeline(spark, inputs, out, **kw)
+    )
+    report = [
+        ln for ln in capsys.readouterr().err.splitlines()
+        if ln.startswith("parse error:") or "quarantined" in ln
+    ]
+    return n, n_jobs, report
+
+
+def test_cli_clean_convert_parses_once(spark, tmp_path, capsys):
+    """A clean N-Triples -> squished Turtle conversion starts 3 Spark
+    jobs (parse and squish, subject blocks, write): the parse pass
+    counted no errors, so the report does not parse the source again."""
+    src = tmp_path / "clean.nt"
+    src.write_text("\n".join(GOOD_LINES) + "\n")
+    n, n_jobs, report = _convert(
+        spark, capsys, "convert-clean", [str(src)], str(tmp_path / "out.ttl"),
+        in_format="ntriples", squish=True,
+    )
+    assert n == len(GOOD_LINES)
+    assert report == []
+    assert n_jobs == 3
+
+
+def test_cli_reports_dirty_source_next_to_clean(spark, tmp_path, capsys):
+    """A clean source is skipped and a dirty one still reports its
+    first 5 errors and the exact total."""
+    clean, dirty = tmp_path / "clean.nt", tmp_path / "dirty.nt"
+    clean.write_text("\n".join(GOOD_LINES) + "\n")
+    dirty.write_text("\n".join(BAD_LINES + ['<http://e/x> <http://e/p> "ok" .']) + "\n")
+    n, _, report = _convert(
+        spark, capsys, "convert-dirty", [str(clean), str(dirty)],
+        str(tmp_path / "out.ttl"), in_format="ntriples", squish=True,
+    )
+    assert n == len(GOOD_LINES) + 1
+    assert report == BAD_REPORT
+
+
+def test_cli_construct_limit_still_reports(spark, tmp_path, capsys):
+    """A CONSTRUCT ... LIMIT reads only part of a source, so its
+    parse-pass count is partial and must not clear it: the source is
+    probed, the report is complete and the call finishes."""
+    import threading
+
+    dirty = tmp_path / "dirty.nt"
+    dirty.write_text("\n".join(GOOD_LINES + BAD_LINES) + "\n")
+    got = {}
+    run = threading.Thread(target=lambda: got.update(out=_convert(
+        spark, capsys, "construct-limit", [str(dirty)], str(tmp_path / "out.nt"),
+        construct="CONSTRUCT { ?s <http://e/q> ?o } WHERE { ?s <http://e/p> ?o } LIMIT 1",
+    )), daemon=True)
+    run.start()
+    run.join(timeout=300)
+    assert "out" in got, "run_pipeline did not finish"
+    n, _, report = got["out"]
+    assert n == 1
+    assert report == BAD_REPORT
+
+
 def test_parse_http(spark, tmp_path):
-    """Graph.ParseHTTP analogue: one URL -> (triples, errors), temp
-    file cleaned up after materialization."""
+    """Graph.ParseHTTP analogue: one URL -> (triples, errors or None
+    for a clean document), temp file cleaned up after
+    materialization."""
     import glob
     import http.server
     import os
     import threading
 
     (tmp_path / "g.nt").write_text('<http://e/h1> <http://e/p> "via-http" .\n')
+    (tmp_path / "bad.nt").write_text('not a triple\n<http://e/h2> <http://e/p> "ok" .\n')
     handler = lambda *a, **kw: http.server.SimpleHTTPRequestHandler(  # noqa: E731
         *a, directory=str(tmp_path), **kw
     )
@@ -259,9 +338,17 @@ def test_parse_http(spark, tmp_path):
 
         port = httpd.server_address[1]
         before = set(glob.glob("/tmp/argo_url_*"))
-        triples, errors = parse_http(spark, f"http://127.0.0.1:{port}/g.nt")
+        (triples, errors), n_jobs = jobs_started(
+            spark, "parse-http-clean",
+            lambda: parse_http(spark, f"http://127.0.0.1:{port}/g.nt"),
+        )
+        # a clean document is parsed once, by the triples checkpoint
+        assert n_jobs == 1
         assert [r.o_value for r in triples.collect()] == ["via-http"]
-        assert errors is not None and errors.count() == 0
+        assert errors is None
+        triples, errors = parse_http(spark, f"http://127.0.0.1:{port}/bad.nt")
+        assert [r.o_value for r in triples.collect()] == ["ok"]
+        assert [r.line for r in errors.collect()] == ["not a triple"]
         assert set(glob.glob("/tmp/argo_url_*")) == before  # no temp leak
     finally:
         httpd.shutdown()

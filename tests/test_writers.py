@@ -9,6 +9,7 @@ from argo_spark.sinks.registry import FORMATS, format_from_filename, format_from
 from argo_spark.sinks.writers import (
     rdfjson_string,
     rdfxml_string,
+    squirtle_header,
     turtle_string,
 )
 from argo_spark.terms import TripleT, blank, iri, literal
@@ -198,6 +199,44 @@ def test_write_turtle_unsafe_locals_round_trip(spark, tmp_path):
     text = "".join(r.value for r in spark.read.text(path, wholetext=True).collect())
     assert "<http://dbpedia.org/resource/London_(England)>" in text
     assert "ex:ok\n" in text and "ex:p.q-r_s ex:1st ;" in text
+
+
+def test_local_ending_in_newline_is_not_abbreviated(spark, tmp_path):
+    """A local name ending in a line break is unsafe. The column rules
+    anchor at the true end of input, so the column encoder
+    (squirtle_blocks) writes the IRI as <iri> as the driver encoder
+    (squirtle_string) does, and the Turtle output re-parses to the
+    same IRI (the break written as a UCHAR escape)."""
+    from pyspark.sql import functions as F
+
+    from argo_spark.extract.turtle import parse_turtle_col
+    from argo_spark.sinks.writers import squirtle_blocks, squirtle_string, write_turtle
+
+    dbp = "http://dbpedia.org/resource/"
+    prefixes = {"dbp": dbp}
+    triples = [
+        TripleT(iri(dbp + "abc\n"), iri(dbp + "p"), iri(dbp + "ok\r\n")),
+        TripleT(iri(dbp + "ok"), iri(dbp + "p"), literal("v", dt=dbp + "dt\n")),
+    ]
+    gr = TripleGraph.of(spark, triples)
+    blocks = sorted(r.block for r in squirtle_blocks(gr.df, prefixes).collect())
+    doc = squirtle_string(gr.df, prefixes)
+    assert doc == squirtle_header(prefixes) + "".join(blocks)
+    assert blocks[0].startswith(f"<{dbp}abc\n> {{")
+
+    path = str(tmp_path / "nl.ttl")
+    write_turtle(gr.df, path, prefixes)
+    with open(path + "._prefixes", encoding="utf-8") as f:
+        header = f.read()
+    parsed = parse_turtle_col(spark.read.text(path, wholetext=True).select(
+        F.concat(F.lit(header), F.col("value")).alias("value"),
+        F.input_file_name().alias("key"),
+    ))
+    assert parsed.where("error IS NOT NULL").count() == 0
+    cols = ["s_kind", "s_value", "p_value", "o_kind", "o_value", "o_lang", "o_dt"]
+    assert sorted(tuple(r) for r in parsed.select(*cols).collect()) == sorted(
+        tuple(r) for r in gr.df.select(*cols).collect()
+    )
 
 
 def test_prefix_sidecar_is_one_driver_written_file(spark, tmp_path):
