@@ -42,7 +42,7 @@ def entry(spark: SparkSession) -> DataFrame:
     # persist: entity dedup runs several actions over the triples
     triples = extract_triples_df(pages).select(*TRIPLE_COLS).persist()
     mapping = entity_dedup_mapping(triples)
-    rewritten = apply_entity_mapping(triples, mapping, broadcast=True)
+    rewritten = apply_entity_mapping(triples, mapping)
     # Materialize the rewritten triples BUCKETED BY SUBJECT before the
     # squish (storage.write_bucketed, PLANS.md §8): the shuffle is
     # paid once at ingest, and the squish's dropDuplicates over the

@@ -77,25 +77,36 @@ def read_source(
     return df.select(*cols), errors
 
 
+def read_checkpointed(
+    spark: SparkSession,
+    path: str,
+    fmt_id: str | None = None,
+    mime: str | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """``read_source`` materialized: the triples are eagerly
+    localCheckpointed, so the document is parsed once and the frames
+    outlive the file. That checkpoint consumes every parsed row, so
+    the parse pass's error count is exact: a clean document returns no
+    error frame, a dirty one its errors, checkpointed as well."""
+    df, errors = read_source(spark, path, fmt_id, mime=mime)
+    df = df.localCheckpoint(eager=True)
+    if errors is not None and parse_error_count(errors) == 0:
+        errors = None
+    if errors is not None:
+        errors = errors.localCheckpoint(eager=True)
+    return df, errors
+
+
 def parse_http(
     spark: SparkSession, url: str, fmt_id: str | None = None
 ) -> tuple[DataFrame, DataFrame | None]:
     """Graph.ParseHTTP analogue (/root/reference/graph.go:310-335):
     fetch one URL and parse it by explicit format, extension, or
-    Content-Type. Returns (triples, errors_or_None); the temp file is
-    removed after the frames are materialized via localCheckpoint so
-    no lazy scan outlives it. The eager triples checkpoint consumes
-    every parsed row, so the parse pass's error count is exact there:
-    a clean document is parsed once and returns no error frame."""
+    Content-Type through ``read_checkpointed``, then remove the temp
+    file. Returns (triples, errors_or_None)."""
     local, mime = _fetch_url(url)
     try:
-        df, errors = read_source(spark, local, fmt_id, mime=mime)
-        df = df.localCheckpoint(eager=True)
-        if errors is not None and parse_error_count(errors) == 0:
-            errors = None
-        if errors is not None:
-            errors = errors.localCheckpoint(eager=True)
-        return df, errors
+        return read_checkpointed(spark, local, fmt_id, mime=mime)
     finally:
         try:
             os.unlink(local)

@@ -13,26 +13,23 @@ reorders/broadcasts the joins; selective patterns prune first.
 
 from __future__ import annotations
 
-from functools import lru_cache
 from typing import Sequence, Union
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from argo_spark.terms import KIND_IRI, KIND_LITERAL, Term, term_nt_col
+from argo_spark.terms import KIND_IRI, KIND_LITERAL, Term, jvm_memo, term_nt_col
 
 Pattern = tuple  # (s, p, o): each '?var' | Term | IRI string
 
 _POS = ("s", "p", "o")
 
 
-# lru_cache: the three position expressions are over FIXED column
-# names, and building one costs ~25 py4j round-trips — a visible slice
-# of every SPARQL compile (measured: the compile-only phase of the
-# algebra bench is half its wall time, almost all py4j socket reads).
-# Column objects are immutable expression trees, not bound to a
-# SparkContext, so reuse across plans/sessions in one JVM is safe.
-@lru_cache(maxsize=None)
+# memoized per JVM: the three position expressions are over FIXED
+# column names, and building one costs ~25 py4j round-trips — a visible
+# slice of every SPARQL compile (measured: the compile-only phase of
+# the algebra bench is half its wall time, almost all py4j socket reads)
+@jvm_memo
 def _nt_for_position(pos: str):
     if pos == "s":
         return term_nt_col(F.col("s_kind"), F.col("s_value"))

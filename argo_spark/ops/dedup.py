@@ -821,6 +821,13 @@ def _driver_entity_mapping(
     return sorted((e, find(e)) for e in parent if find(e) != e)
 
 
+# an entity map of up to this many rows (a few hundred MB of IRIs) is
+# broadcast; at 100 TB a dup map can exceed the executors' and the
+# driver's broadcast limits, so a larger one is a plain join that AQE
+# plans
+BROADCAST_MAX_ROWS = 5_000_000
+
+
 def entity_dedup_mapping(
     triples: DataFrame,
     iri_prefix: str = DBP,
@@ -833,7 +840,9 @@ def entity_dedup_mapping(
     by connected components; canonical = min IRI of the component.
 
     Identity rows (entity == canonical) are omitted — the map is the
-    small side of a broadcast join.
+    small side of :func:`apply_entity_mapping`'s joins, and it carries
+    its own join strategy: a broadcast hint up to
+    ``BROADCAST_MAX_ROWS`` rows, none above.
 
     When the distinct-entity set fits ``driver_max_entities`` (a
     broadcast-sized map by definition — default 100k surface forms),
@@ -843,10 +852,11 @@ def entity_dedup_mapping(
     tiny ones, removing ~8s of pure scheduling serial fraction from
     the flagship (pinned equal to the distributed path by
     test_dedup's equivalence test); the map comes back as a local
-    frame, so broadcasting or counting it forks no Python worker.
-    Pass ``None`` to force the distributed path; above the cap it is
-    taken automatically — at web scale the entity vocabulary can
-    exceed any driver."""
+    frame of known length, so deciding and running its broadcast
+    starts no job and forks no Python worker. Pass ``None`` to force
+    the distributed path; above the cap it is taken automatically — at
+    web scale the entity vocabulary can exceed any driver — and counts
+    its map (up to ``BROADCAST_MAX_ROWS + 1`` rows) to decide."""
     surf = (
         entity_surface_forms(triples, iri_prefix)
         .groupBy("entity")
@@ -877,8 +887,11 @@ def entity_dedup_mapping(
             mapping = _driver_entity_mapping(
                 [(r.entity, r.surface) for r in head], shingle_k, threshold
             )
-            return local_frame(
-                triples.sparkSession, mapping, "entity string, canonical string"
+            return _broadcast_if_small(
+                local_frame(
+                    triples.sparkSession, mapping, "entity string, canonical string"
+                ),
+                len(mapping),
             )
         log.info(
             "entity_dedup_mapping: > %d entities — distributed path",
@@ -894,46 +907,39 @@ def entity_dedup_mapping(
         pair_mode="star",
     )
     comps = connected_components(pairs.select("a", "b"))
-    return comps.where(F.col("id") != F.col("comp")).select(
+    mapping = comps.where(F.col("id") != F.col("comp")).select(
         F.col("id").alias("entity"), F.col("comp").alias("canonical")
+    )
+    return _broadcast_if_small(
+        mapping, mapping.limit(BROADCAST_MAX_ROWS + 1).count()
     )
 
 
-def apply_entity_mapping(
-    triples: DataFrame,
-    mapping: DataFrame,
-    max_broadcast_rows: int = 5_000_000,
-    broadcast: Optional[bool] = None,
-) -> DataFrame:
+def _broadcast_if_small(mapping: DataFrame, n_rows: int) -> DataFrame:
+    if n_rows <= BROADCAST_MAX_ROWS:
+        return F.broadcast(mapping)
+    log.warning(
+        "entity_dedup_mapping: mapping exceeds %d rows — using shuffle join "
+        "instead of broadcast", BROADCAST_MAX_ROWS,
+    )
+    return mapping
+
+
+def apply_entity_mapping(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite subject/object IRIs through the (entity -> canonical)
-    map. The map is usually tiny relative to the triples — broadcast
-    both joins so the big side never shuffles — but at 100 TB a dup
-    map can exceed executor/driver broadcast limits, so guard: above
-    ``max_broadcast_rows`` (~a few hundred MB of IRIs) fall back to a
-    plain shuffle join and let AQE pick the strategy. A caller that
-    already knows the map's size class passes ``broadcast`` explicitly
-    and skips the guard's counting job (the flagship does — the guard
-    job is pure serial fraction there)."""
-    if broadcast is None:
-        broadcast = mapping.limit(max_broadcast_rows + 1).count() <= max_broadcast_rows
-    if broadcast:
-        m = F.broadcast(mapping)
-    else:
-        log.warning(
-            "apply_entity_mapping: mapping exceeds %d rows — using shuffle join "
-            "instead of broadcast", max_broadcast_rows,
-        )
-        m = mapping
+    map: two left joins. The join strategy is the map's own:
+    :func:`entity_dedup_mapping` hints it for broadcast up to
+    ``BROADCAST_MAX_ROWS``, so the triples side never shuffles."""
     out = (
         triples.join(
-            m.withColumnRenamed("entity", "s_value").withColumnRenamed(
+            mapping.withColumnRenamed("entity", "s_value").withColumnRenamed(
                 "canonical", "_s_canon"
             ),
             "s_value",
             "left",
         )
         .join(
-            m.withColumnRenamed("entity", "o_value").withColumnRenamed(
+            mapping.withColumnRenamed("entity", "o_value").withColumnRenamed(
                 "canonical", "_o_canon"
             ),
             "o_value",

@@ -4638,16 +4638,16 @@ def _graph_plus(triples: DataFrame, new: DataFrame, cols=None) -> DataFrame:
 
 
 def _load_document_frame(spark, src: str) -> DataFrame:
-    """LOAD's document reader: http(s) IRIs go through the rdf CLI's
-    ``parse_http`` (fetched driver-side, materialized before the temp
-    file is removed), ``file://`` IRIs and plain paths read in place;
-    format dispatch and quarantine come from the rdf CLI's registry. A
-    document with ANY parse error fails the operation (§3.1.4 —
-    SILENT at the call site turns that into a no-op); the error
-    probe is one driver-side scalar action."""
+    """LOAD's document reader: the rdf CLI's ``parse_http`` for an
+    http(s) IRI (fetched driver-side, the temp file removed after the
+    read) and its ``read_checkpointed`` for a ``file://`` IRI or a
+    plain path; format dispatch and quarantine come from its registry.
+    Either parses the document once, into a checkpoint that outlives
+    the file. A document with ANY parse error fails the operation
+    (§3.1.4 — SILENT at the call site turns that into a no-op)."""
     import urllib.parse as _up
 
-    from argo_spark.cli import parse_http, read_source
+    from argo_spark.cli import parse_http, read_checkpointed
 
     if src.startswith(("http://", "https://")):
         df, errors = parse_http(spark, src)
@@ -4657,14 +4657,12 @@ def _load_document_frame(spark, src: str) -> DataFrame:
             if src.startswith("file://")
             else src
         )
-        df, errors = read_source(spark, path)
-    first = [] if errors is None else (
-        errors.select("error").limit(1).collect()
-    )
-    if first:
+        df, errors = read_checkpointed(spark, path)
+    first = None if errors is None else errors.select("error").first()
+    if first is not None:
         raise ValueError(
             f"LOAD <{src}>: document has parse errors "
-            f"(first: {first[0].error!r})"
+            f"(first: {first.error!r})"
         )
     return df
 

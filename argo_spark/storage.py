@@ -1,99 +1,18 @@
-"""Pluggable table-format layer (SURVEY §2.5 — the reference's custom
-``Store`` implementations, /root/reference/argo.go:40-61, mapped to
-table formats).
-
-Parquet directories are the default (this sandbox bundles no Iceberg
-runtime jar — BASELINE.md); the Iceberg backend activates when a
-catalog is configured, giving real snapshot isolation in place of the
-manifest emulation in ``argo_spark.manifest``.
+"""Bucketed managed tables (SURVEY §2.5 — the reference's keyed
+``Store`` layouts, argo.go:40-61, mapped to parquet
+tables): ``write_bucketed`` co-locates rows by key so later joins and
+aggregations on that key plan with no Exchange, ``read_table`` reads
+one back, and ``update_table`` applies a SPARQL Update to one and
+swaps it in. Snapshot isolation is the manifest's
+(``argo_spark.manifest``); no Iceberg runtime jar ships with this
+build (BASELINE.md).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-@dataclass
-class ParquetBackend:
-    """Directory-per-table parquet with dynamic partition overwrite —
-    the bucket-idempotent layout KgPipeline relies on."""
-
-    name: str = "parquet"
-
-    def write(
-        self,
-        df: DataFrame,
-        target: str,
-        mode: str = "overwrite",
-        partition_by: Sequence[str] = (),
-    ) -> None:
-        w = df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(target)
-
-    def read(self, spark: SparkSession, target: str) -> DataFrame:
-        return spark.read.parquet(target)
-
-
-@dataclass
-class IcebergBackend:
-    """Iceberg tables via a configured catalog. Requires the
-    iceberg-spark-runtime jar on the classpath; ``available`` reports
-    whether this session can use it."""
-
-    catalog: str = "local"
-    name: str = "iceberg"
-
-    @staticmethod
-    def available(spark: SparkSession, catalog: str = "local") -> bool:
-        impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-        if not impl:
-            return False
-        try:
-            spark._jvm.java.lang.Class.forName(impl)  # jar present?
-            return True
-        except Exception:
-            return False
-
-    def write(
-        self,
-        df: DataFrame,
-        target: str,
-        mode: str = "overwrite",
-        partition_by: Sequence[str] = (),
-    ) -> None:
-        w = df.writeTo(f"{self.catalog}.{target}")
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            w = w.partitionedBy(*[F.col(c) for c in partition_by])
-        if mode == "append":
-            w.append()
-        else:
-            w.createOrReplace()
-
-    def read(self, spark: SparkSession, target: str) -> DataFrame:
-        return spark.read.table(f"{self.catalog}.{target}")
-
-
-def get_backend(spark: SparkSession, prefer: Optional[str] = None):
-    """Auto-select: Iceberg when a catalog + jar are live, else parquet."""
-    if prefer == "parquet":
-        return ParquetBackend()
-    if prefer == "iceberg" or (
-        prefer is None and IcebergBackend.available(spark)
-    ):
-        if not IcebergBackend.available(spark):
-            raise RuntimeError(
-                "Iceberg requested but no spark.sql.catalog.local catalog/jar "
-                "is configured in this session"
-            )
-        return IcebergBackend()
-    return ParquetBackend()
 
 
 def _managed_location(spark: SparkSession, table: str) -> Optional[str]:
@@ -159,9 +78,8 @@ def write_bucketed(
     aggregation on those keys skips its Exchange entirely — the
     shuffle is paid once at ingest instead of once per query. This is
     the parquet analogue of the reference stores' keyed layouts
-    (redisstore.go composite keys / mysqlstore indexes); with the
-    Iceberg backend the same intent is expressed as a bucket(N, col)
-    partition transform.
+    (redisstore.go composite keys / mysqlstore indexes); with Iceberg
+    the same intent is a bucket(N, col) partition transform.
 
     At 100 TB: bucket the triples table by s_value (subject-keyed
     traversals + squish) and dimension tables by their join keys;

@@ -24,9 +24,12 @@ in whole-stage codegen, no Python in the hot path) are provided.
 
 from __future__ import annotations
 
+import functools
 import hashlib
-from typing import NamedTuple, Optional, Union
+import weakref
+from typing import Callable, NamedTuple, Optional, Union
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -167,7 +170,31 @@ def term_nt_col(
     )
 
 
-_DEFAULT_TRIPLE_NT: Optional[Column] = None
+def jvm_memo(build: Callable[..., Column]) -> Callable[..., Column]:
+    """Memoize a Column builder per live JVM. Building a term expression
+    costs tens of py4j round-trips, and a Column is an immutable
+    expression tree safe to reuse across plans and sessions — but it
+    is a handle into the JVM that built it, so the memo is keyed by
+    ``SparkContext._jvm`` (weakly): a session started after the driver
+    JVM was shut down builds its own, and a dead JVM's entries go."""
+    memo: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+    @functools.wraps(build)
+    def memoized(*args):
+        jvm = SparkContext._jvm
+        if jvm is None:
+            return build(*args)
+        cols = memo.setdefault(jvm, {})
+        if args not in cols:
+            cols[args] = build(*args)
+        return cols[args]
+
+    return memoized
+
+
+_TRIPLE_NT_DEFAULTS = (
+    "s_kind", "s_value", "p_value", "o_kind", "o_value", "o_lang", "o_dt"
+)
 
 
 def triple_nt_col(
@@ -184,21 +211,22 @@ def triple_nt_col(
     This expression is the dedup/equality key of the whole pipeline
     (the canonical string key the reference's stores index on,
     indexstore.go:40-47) and the N-Triples sink body (K1). The
-    all-defaults form (every serializer and squish call) is memoized:
-    building it costs ~60 py4j round-trips, and Column objects are
-    immutable expression trees safe to reuse across plans."""
+    all-defaults form (every serializer and squish call) is memoized
+    per JVM (:func:`jvm_memo`): building it costs ~60 py4j round-trips."""
     args = (s_kind, s_value, p_value, o_kind, o_value, o_lang, o_dt)
-    is_default = args == (
-        "s_kind", "s_value", "p_value", "o_kind", "o_value", "o_lang", "o_dt"
-    )
-    global _DEFAULT_TRIPLE_NT
-    if is_default and _DEFAULT_TRIPLE_NT is not None:
-        return _DEFAULT_TRIPLE_NT
+    if args == _TRIPLE_NT_DEFAULTS:
+        return _default_triple_nt()
+    return _triple_nt(*args)
+
+
+@jvm_memo
+def _default_triple_nt() -> Column:
+    return _triple_nt(*_TRIPLE_NT_DEFAULTS)
+
+
+def _triple_nt(s_kind, s_value, p_value, o_kind, o_value, o_lang, o_dt) -> Column:
     col = lambda c: F.col(c) if isinstance(c, str) else c  # noqa: E731
     s = term_nt_col(col(s_kind), col(s_value))
     p = F.concat(F.lit("<"), col(p_value), F.lit(">"))  # predicates always IRIs
     o = term_nt_col(col(o_kind), col(o_value), col(o_lang), col(o_dt))
-    out = F.concat(s, F.lit(" "), p, F.lit(" "), o, F.lit(" ."))
-    if is_default:
-        _DEFAULT_TRIPLE_NT = out
-    return out
+    return F.concat(s, F.lit(" "), p, F.lit(" "), o, F.lit(" ."))

@@ -66,7 +66,7 @@ def _warmup(spark, sf_dir: str, workdir: str) -> None:
     )
     tr = spark.read.parquet(f"{workdir}/warm_triples")
     m = entity_dedup_mapping(tr)
-    sq = apply_entity_mapping(tr, m, broadcast=True).dropDuplicates(TRIPLE_COLS)
+    sq = apply_entity_mapping(tr, m).dropDuplicates(TRIPLE_COLS)
     write_ntriples(sq, f"{workdir}/warm_nt")
     parse_ntriples_col(spark.read.text(f"{workdir}/warm_nt")).where(
         F.col("error").isNull()
@@ -168,7 +168,7 @@ def _kg_job(spark, sf_dir: str, workdir: str, n_pages: int,
     )
     triples = spark.read.parquet(f"{workdir}/triples")
     mapping = entity_dedup_mapping(triples)
-    squished = apply_entity_mapping(triples, mapping, broadcast=True).dropDuplicates(TRIPLE_COLS)
+    squished = apply_entity_mapping(triples, mapping).dropDuplicates(TRIPLE_COLS)
     # observe: emitted-line count rides along with the write — no
     # post-hoc re-read of the output
     from pyspark.sql import Observation

@@ -115,3 +115,53 @@ def test_bgp_random_graphs_vs_python_oracle(spark):
             if p1 == preds[0] and p2 == preds[1] and o1 == s2:
                 want.add((f"<{s1}>", f"<{o1}>", f"<{o2}>"))
         assert got == want, f"seed {seed}"
+
+
+_RESTART_SCRIPT = """
+from pyspark import SparkContext
+from argo_spark.ops.bgp import _nt_for_position
+from argo_spark.session import get_spark
+from argo_spark.terms import triple_nt_col
+
+def nt_lines():
+    spark = get_spark("memo-restart", master="local[1]")
+    df = spark.createDataFrame(
+        [(0, "http://e/s", "http://e/p", 0, "http://e/o", None, None)],
+        "s_kind tinyint, s_value string, p_value string, "
+        "o_kind tinyint, o_value string, o_lang string, o_dt string",
+    )
+    row = df.select(_nt_for_position("s"), triple_nt_col()).first()
+    gateway = spark.sparkContext._gateway
+    spark.stop()
+    gateway.shutdown()
+    SparkContext._gateway = None
+    SparkContext._jvm = None
+    return tuple(row)
+
+first = nt_lines()
+assert nt_lines() == first == ("<http://e/s>", "<http://e/s> <http://e/p> <http://e/o> ."), first
+print("ok")
+"""
+
+
+def test_column_memos_survive_jvm_restart():
+    """The memoized term columns belong to the JVM that built them: a
+    session started after the driver JVM was shut down, in the same
+    process, builds its own (a memo bound to the first JVM fails the
+    select with a NullPointerException). Run in a subprocess so the
+    suite's session is untouched."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")])),
+        SPARK_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0 and proc.stdout.strip().endswith("ok"), proc.stderr[-2000:]

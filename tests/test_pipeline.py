@@ -1,7 +1,7 @@
 """End-to-end pipeline: exactly-once resume, committed-only reads,
 fresh-directory reads, manifest lineage, driver-built local frames,
-P/R after materialize, one squish per materialize, skewed predicate
-stats."""
+job counts per call, P/R after materialize, one squish per
+materialize, skewed predicate stats."""
 
 from __future__ import annotations
 
@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from argo_spark.extract.rdfa import EXTRACT_SCHEMA
 from argo_spark.manifest import MANIFEST_SCHEMA, Manifest
 from argo_spark.ops.bgp import _TERM_STRUCT_PREFIX
+from argo_spark.ops.dedup import apply_entity_mapping, entity_dedup_mapping
 from argo_spark.pages import expected_triples, synthesize_pages
 from argo_spark.pipeline import KgPipeline, predicate_stats
 from argo_spark.schema import TRIPLE_COLS
@@ -214,6 +215,34 @@ def test_materialize_squishes_once(spark, outdir):
     assert both <= parquet_only + 1
     n_rows = spark.read.parquet(outdir + "/sq-b").count()
     assert 0 < n_rows == spark.read.text(outdir + "/nt").count()
+
+
+def test_build_job_counts(spark, outdir):
+    """A fresh build over more bucket directories than Spark's default
+    parallel-listing threshold (32): each bucket read lists its
+    directories on the driver. `run` starts 6 jobs (extract and bucket
+    write 2, per-bucket stats 3, manifest append 1) and
+    `materialize(nt, squished)` 7 (manifest read 1, entity mapping 2,
+    map broadcast 1, squish and parquet write 2, N-Triples write 1).
+    The entity rewrite starts none and broadcasts the map into both
+    joins."""
+    pages = synthesize_pages(spark, 400)
+    pipe = KgPipeline(spark, outdir, n_buckets=64)
+    stats, run_jobs = jobs_started(spark, "build-run", lambda: pipe.run(pages))
+    assert stats.n_buckets_processed > 32
+    _, materialize_jobs = jobs_started(
+        spark, "build-materialize", lambda: pipe.materialize(outdir + "/nt", outdir + "/sq")
+    )
+    assert (run_jobs, materialize_jobs) == (6, 7)
+
+    t = pipe.triples()
+    mapping = entity_dedup_mapping(t)
+    rewritten, n_jobs = jobs_started(
+        spark, "build-rewrite", lambda: apply_entity_mapping(t, mapping)
+    )
+    assert n_jobs == 0
+    plan = rewritten._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin") == 2 and "SortMergeJoin" not in plan
 
 
 def test_materialize_pr_and_squish(spark, outdir):

@@ -1,6 +1,6 @@
 """Scale-path guarantees: star-edge LSH (O(k) per bucket, identical
 connected components), bucket-size caps with logged drops, shingle
-DF-capping, and the broadcast guard in apply_entity_mapping.
+DF-capping, and the distributed entity map's broadcast cap.
 
 These pin the 100-TB story: a giant duplicate cluster must cost O(k)
 edges, never C(k,2) pairs."""
@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from argo_spark.namespaces import DBP, SCHEMA
 from argo_spark.ops.dedup import (
     apply_entity_mapping,
     connected_components,
@@ -19,8 +20,9 @@ from argo_spark.ops.dedup import (
     simhash_candidate_edges,
     simhash_candidate_pairs,
 )
+from argo_spark.ops.graph import TripleGraph
 from argo_spark.ops.similarity import embedding_neardup_pairs
-from argo_spark.terms import KIND_IRI
+from argo_spark.terms import TripleT, iri, literal
 
 
 def _components(edges_df):
@@ -149,29 +151,38 @@ def test_max_shingle_df_drops_stop_shingles(spark):
     assert capped.count() <= uncapped.count()
 
 
-def test_apply_entity_mapping_shuffle_fallback(spark, caplog):
-    triples = spark.createDataFrame(
+def test_apply_entity_mapping_shuffle_fallback(spark, monkeypatch, caplog):
+    """The distributed entity map decides its own join strategy: it
+    counts itself and carries a broadcast hint up to
+    ``BROADCAST_MAX_ROWS`` rows; above the cap it carries none (a plain
+    join that AQE plans) and the rewrite is the same."""
+    from argo_spark.ops import dedup
+
+    ada1 = DBP + "Ada_Lovelace"
+    ada2 = DBP + "Ada_Lovelace_(mathematician)"
+    triples = TripleGraph.of(
+        spark,
         [
-            (KIND_IRI, "http://e/a", "http://p/x", KIND_IRI, "http://e/b", None, None),
-            (KIND_IRI, "http://e/c", "http://p/x", KIND_IRI, "http://e/a", None, None),
+            TripleT(iri(ada1), iri(SCHEMA + "name"), literal("Ada Lovelace")),
+            TripleT(iri(ada2), iri(SCHEMA + "name"), literal("Ada Lovelace")),
+            TripleT(iri("http://e/doc"), iri(SCHEMA + "mentions"), iri(ada2)),
         ],
-        "s_kind tinyint, s_value string, p_value string, "
-        "o_kind tinyint, o_value string, o_lang string, o_dt string",
-    )
-    mapping = spark.createDataFrame(
-        [("http://e/a", "http://e/A")], "entity string, canonical string"
-    )
-    expected = {
-        ("http://e/A", "http://e/b"),
-        ("http://e/c", "http://e/A"),
-    }
-    broad = apply_entity_mapping(triples, mapping)
-    assert {(r.s_value, r.o_value) for r in broad.collect()} == expected
+    ).df
+
+    def rewrite():
+        mapping = dedup.entity_dedup_mapping(triples, driver_max_entities=None)
+        hinted = "ResolvedHint" in mapping._jdf.queryExecution().analyzed().toString()
+        out = apply_entity_mapping(triples, mapping)
+        return hinted, sorted((r.s_value, r.o_value) for r in out.collect())
+
+    hinted, broad = rewrite()
+    assert hinted
+    assert ada2 not in {v for row in broad for v in row}
+    monkeypatch.setattr(dedup, "BROADCAST_MAX_ROWS", 0)
     with caplog.at_level("WARNING", logger="argo_spark.dedup"):
-        shuffled = apply_entity_mapping(triples, mapping, max_broadcast_rows=0)
-    assert {(r.s_value, r.o_value) for r in shuffled.collect()} == expected
-    # the guard fired (the optimizer may still pick broadcast on tiny
-    # stats — the point is the hint is no longer FORCED)
+        hinted, shuffled = rewrite()
+    assert not hinted
+    assert shuffled == broad
     assert any("shuffle join" in m for m in caplog.messages)
 
 

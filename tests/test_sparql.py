@@ -2636,6 +2636,36 @@ def test_sparql_update_load(spark, tmp_path):
     ).count() == 1
 
 
+def test_sparql_update_load_parses_once(spark, tmp_path):
+    # LOAD of a file parses it once, during the update: the result
+    # reads no file, so it survives the document's removal; two LOADs
+    # (each a checkpoint, the second anti-joined against a frame
+    # holding the first) return the union
+    from argo_spark.ops.sparql import sparql_update
+
+    a, b = tmp_path / "a.nt", tmp_path / "b.nt"
+    a.write_text('<http://e/c> <http://e/name> "Cee" .\n')
+    b.write_text(
+        '<http://e/d> <http://e/name> "Dee" .\n'
+        '<http://e/c> <http://e/name> "Cee" .\n'
+    )
+    g = TripleGraph.of(
+        spark,
+        [TripleT(iri("http://e/a"), iri("http://e/name"),
+                 literal("Ada"))],
+    ).df
+    out = sparql_update(g, f"LOAD <{a}>")
+    a.unlink()
+    assert sorted(r.s_value for r in out.collect()) == \
+        ["http://e/a", "http://e/c"]
+    a.write_text('<http://e/c> <http://e/name> "Cee" .\n')
+    out = sparql_update(g, f"LOAD <{a}> ; LOAD <file://{b}>")
+    a.unlink()
+    b.unlink()
+    assert sorted(r.s_value for r in out.collect()) == \
+        ["http://e/a", "http://e/c", "http://e/d"]
+
+
 def test_sparql_update_load_http(spark, tmp_path):
     # an http(s) document IRI is fetched through cli.parse_http: the
     # loaded triples outlive the temp file, which is removed

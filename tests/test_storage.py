@@ -1,24 +1,5 @@
 from __future__ import annotations
 
-from argo_spark.storage import IcebergBackend, ParquetBackend, get_backend
-
-
-def test_parquet_backend_roundtrip(spark, tmp_path):
-    b = get_backend(spark)
-    assert isinstance(b, ParquetBackend)  # no iceberg jar in sandbox
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    b.write(df, str(tmp_path / "t"), partition_by=["v"])
-    got = b.read(spark, str(tmp_path / "t"))
-    assert {(r.id, r.v) for r in got.collect()} == {(1, "a"), (2, "b")}
-
-
-def test_iceberg_unavailable_is_detected(spark):
-    assert not IcebergBackend.available(spark)
-    import pytest
-
-    with pytest.raises(RuntimeError):
-        get_backend(spark, prefer="iceberg")
-
 
 def test_bucketed_join_and_agg_skip_exchange(spark, tmp_path):
     """write_bucketed co-locates rows so equi-joins AND aggregations
