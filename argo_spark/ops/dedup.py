@@ -53,7 +53,7 @@ def _warn_uncapped_pairs(tag: str, remedy: str = "set max_bucket or use star-edg
 
 from argo_spark.namespaces import DBP, FOAF, SCHEMA
 from argo_spark.session import local_frame
-from argo_spark.terms import KIND_IRI
+from argo_spark.terms import KIND_IRI, jvm_memo
 
 
 # ---------------------------------------------------------------------------
@@ -76,8 +76,11 @@ def exact_dedup(df: DataFrame, content_cols: Sequence[str], id_col: str) -> Data
 # Shingles + MinHash signatures
 # ---------------------------------------------------------------------------
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles as an array column (JVM-side)."""
+@jvm_memo
+def char_shingles(text_col: str, k: int = 5) -> Column:
+    """Distinct character k-shingles of the string column ``text_col``
+    as an array column (JVM-side); memoized per JVM."""
+    col = F.col(text_col)
     n = F.greatest(F.length(col) - F.lit(k - 1), F.lit(1))
     return F.array_distinct(
         F.transform(
@@ -111,36 +114,25 @@ def _minhash_coeffs(n_hashes: int) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 64) -> Column:
-    """Array of n_hashes minima over the shingle set, as one column
-    expression: one xxhash64 per shingle, then n_hashes affine
-    permutations ``(a_i * h + b_i) mod 2^31-1`` folded in a single
-    aggregate pass. Fine for SMALL shingle sets (entity surface
-    forms); for documents use ``minhash_signatures_df`` — higher-order
-    lambdas are interpreted, not codegen'd, so this form is CPU-bound
-    at n_shingles × n_hashes boxed ops per row."""
+@jvm_memo
+def minhash_signature(shingles_col: str, n_hashes: int = 64) -> Column:
+    """Array of n_hashes minima over the shingle-set column
+    ``shingles_col``, as one column expression: one xxhash64 per
+    shingle, then per affine permutation ``(a_i * h + b_i) mod 2^31-1``
+    the minimum over the hashed shingles — the same signature as
+    ``minhash_signatures_df``. Serves SMALL shingle sets (the driver
+    path of :func:`entity_dedup_mapping`); for documents use
+    ``minhash_signatures_df`` — higher-order lambdas are interpreted,
+    not codegen'd, so this form is CPU-bound at n_shingles × n_hashes
+    boxed ops per row. Memoized per JVM: building it costs ~0.1s of
+    py4j round-trips."""
     a, b = _minhash_coeffs(n_hashes)
-    a_arr = F.array(*[F.lit(x).cast("long") for x in a])
-    b_arr = F.array(*[F.lit(x).cast("long") for x in b])
-    idx = F.sequence(F.lit(1), F.lit(n_hashes))
-    hs = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
-    init = F.array_repeat(F.lit(_MERSENNE).cast("long"), n_hashes)
-    return F.aggregate(
-        hs,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            idx,
-            lambda m, i: F.least(
-                m,
-                F.pmod(
-                    F.element_at(a_arr, i.cast("int")) * h
-                    + F.element_at(b_arr, i.cast("int")),
-                    F.lit(_MERSENNE),
-                ),
-            ),
-        ),
-    )
+    hs = F.transform(shingles_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
+
+    def permuted(a_i: int, b_i: int):
+        return lambda h: F.pmod(F.lit(a_i) * h + F.lit(b_i), F.lit(_MERSENNE))
+
+    return F.array(*[F.array_min(F.transform(hs, permuted(a[i], b[i]))) for i in range(n_hashes)])
 
 
 def minhash_signatures_df(
@@ -171,6 +163,25 @@ def minhash_signatures_df(
     )
 
 
+@jvm_memo
+def band_keys(sig_col: str, n_bands: int, rows_per_band: int) -> Column:
+    """Array of the n_bands LSH band keys of the signature column
+    ``sig_col``: key b is xxhash64 of the band number chained over that
+    band's ``rows_per_band`` signature slots. The one definition of a
+    band key, for the LSH joins and both entity-dedup paths; memoized
+    per JVM like :func:`minhash_signature`."""
+    sig = F.col(sig_col)
+    return F.array(
+        *[
+            F.xxhash64(
+                F.lit(b),
+                *[F.element_at(sig, b * rows_per_band + r + 1) for r in range(rows_per_band)],
+            )
+            for b in range(n_bands)
+        ]
+    )
+
+
 def _band_keys(
     df: DataFrame,
     id_col: str,
@@ -182,20 +193,7 @@ def _band_keys(
     downstream self-joins/windows don't recompute the signature."""
     return df.select(
         F.col(id_col).alias("_id"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.element_at(F.col(sig_col), b * rows_per_band + r + 1)
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band", "bucket"),
+        F.posexplode(band_keys(sig_col, n_bands, rows_per_band)).alias("band", "bucket"),
     )
 
 
@@ -417,7 +415,7 @@ def minhash_dedup_pairs(
         # jobs dominates any duplicate-compute risk at this size, and
         # the flagship's serial fraction is exactly these small jobs
         shingled = df.select(
-            F.col(id_col), char_shingles(F.col(text_col), shingle_k).alias("shingles")
+            F.col(id_col), char_shingles(text_col, shingle_k).alias("shingles")
         ).where(F.size("shingles") > 0).persist()
         sigs = minhash_signatures_df(shingled, id_col, n_hashes=n_hashes).persist()
         return jaccard_verify(candidates(sigs), shingled, id_col, threshold=threshold)
@@ -754,39 +752,22 @@ def entity_surface_forms(triples: DataFrame, iri_prefix: str = DBP) -> DataFrame
     )
 
 
-def _driver_entity_mapping(
-    rows, shingle_k: int, threshold: float,
-    n_hashes: int = 16, n_bands: int = 8,
-) -> list[tuple[str, str]]:
-    """Driver-side replica of the char-mode MinHash-LSH star pipeline
-    for SMALL entity sets, BIT-IDENTICAL to the distributed path: the
-    same xxhash64 (argo_spark.xxhash, parity-tested against Spark's
-    expression), the same affine permutations, the same band-key
-    chaining, hub = min id per (band, bucket), exact Jaccard verify,
-    union-find min-label components. Exists because the distributed
-    form costs ~20 tiny Spark jobs whose scheduling latency is pure
-    serial fraction on the flagship (measured 8.4s at local[1] for a
-    few-dozen-entity map)."""
-    from argo_spark.xxhash import xxh64_int, xxh64_long, xxh64_string
-
-    a_co, b_co = _minhash_coeffs(n_hashes)
-    rpb = n_hashes // n_bands
+def _driver_entity_mapping(rows, threshold: float) -> list[tuple[str, str]]:
+    """The driver steps of the char-mode MinHash-LSH star pipeline over
+    collected ``(entity, shingles, band keys)`` rows: group by (band,
+    key), hub = min member, exact Jaccard verify of hub → member over
+    the shingle sets, union-find min-label components. No hashing
+    happens here: Spark computed the rows with ``char_shingles``,
+    ``minhash_signature`` and ``band_keys``. Exists because the
+    distributed form costs ~20 tiny Spark jobs whose scheduling latency
+    is pure serial fraction on the flagship (measured 8.4s at local[1]
+    for a few-dozen-entity map)."""
     sh: dict[str, frozenset] = {}
-    for entity, surface in rows:
-        n = max(len(surface) - shingle_k + 1, 1)
-        sh[entity] = frozenset(surface[i:i + shingle_k] for i in range(n))
     buckets: dict[tuple[int, int], list[str]] = {}
-    for e, s in sh.items():
-        hs = [xxh64_string(x) % _MERSENNE for x in s]
-        sig = [
-            min((a_co[i] * h + b_co[i]) % _MERSENNE for h in hs)
-            for i in range(n_hashes)
-        ]
-        for band in range(n_bands):
-            key = xxh64_int(band)
-            for r in range(rpb):
-                key = xxh64_long(sig[band * rpb + r], key)
-            buckets.setdefault((band, key), []).append(e)
+    for entity, shingles, keys in rows:
+        sh[entity] = frozenset(shingles)
+        for band_key in enumerate(keys):
+            buckets.setdefault(band_key, []).append(entity)
     verified: list[tuple[str, str]] = []
     seen = set()
     for members in buckets.values():
@@ -821,6 +802,9 @@ def _driver_entity_mapping(
     return sorted((e, find(e)) for e in parent if find(e) != e)
 
 
+# the entity-dedup LSH shape, shared by the driver and distributed paths
+_ENTITY_HASHES, _ENTITY_BANDS = 16, 8
+
 # an entity map of up to this many rows (a few hundred MB of IRIs) is
 # broadcast; at 100 TB a dup map can exceed the executors' and the
 # driver's broadcast limits, so a larger one is a plain join that AQE
@@ -846,8 +830,10 @@ def entity_dedup_mapping(
 
     When the distinct-entity set fits ``driver_max_entities`` (a
     broadcast-sized map by definition — default 100k surface forms),
-    the LSH/CC pipeline runs DRIVER-SIDE over one collect of the
-    (entity, surface) list with bit-identical hashing
+    one collect brings back each entity's shingles and band keys,
+    computed by Spark with the distributed path's ``char_shingles`` and
+    ``band_keys`` over the column-form ``minhash_signature``, and the
+    grouping, Jaccard verify and components run DRIVER-SIDE
     (:func:`_driver_entity_mapping`): one Spark job instead of ~20
     tiny ones, removing ~8s of pure scheduling serial fraction from
     the flagship (pinned equal to the distributed path by
@@ -882,11 +868,17 @@ def entity_dedup_mapping(
         # driver path collects exactly once — no checkpoint needed
         # (converting the plan to a checkpointed RDD costs a full
         # analysis pass of ~0.3s of py4j/driver time per call)
-        head = keyed_of(surf).limit(driver_max_entities + 1).collect()
+        keys = band_keys("sig", _ENTITY_BANDS, _ENTITY_HASHES // _ENTITY_BANDS)
+        head = (
+            keyed_of(surf)
+            .select("entity", char_shingles("surface", shingle_k).alias("shingles"))
+            .withColumn("sig", minhash_signature("shingles", _ENTITY_HASHES))
+            .select("entity", "shingles", keys.alias("keys"))
+            .limit(driver_max_entities + 1)
+            .collect()
+        )
         if len(head) <= driver_max_entities:
-            mapping = _driver_entity_mapping(
-                [(r.entity, r.surface) for r in head], shingle_k, threshold
-            )
+            mapping = _driver_entity_mapping(head, threshold)
             return _broadcast_if_small(
                 local_frame(
                     triples.sparkSession, mapping, "entity string, canonical string"
@@ -903,8 +895,8 @@ def entity_dedup_mapping(
     keyed = keyed_of(surf.localCheckpoint(eager=False))
     pairs = minhash_dedup_pairs(
         keyed, "entity", "surface", shingle_k=shingle_k,
-        n_hashes=16, n_bands=8, threshold=threshold, mode="char",
-        pair_mode="star",
+        n_hashes=_ENTITY_HASHES, n_bands=_ENTITY_BANDS, threshold=threshold,
+        mode="char", pair_mode="star",
     )
     comps = connected_components(pairs.select("a", "b"))
     mapping = comps.where(F.col("id") != F.col("comp")).select(

@@ -464,11 +464,12 @@ def kmeans_centroids(
     broadcast relations this module already builds), the Lloyd
     iterations run DRIVER-SIDE over one collect: one Spark job instead
     of 1 + n_iter tiny ones whose scheduling latency is pure serial
-    fraction (same rationale and guard shape as
-    dedup._driver_entity_mapping; measured 2.6s -> ~0.3s for the
-    sf0.1 bench quantizer). Seed selection is identical (the hash is
-    computed Spark-side); iteration arithmetic is the same numpy
-    expression the Arrow quantizer runs, summed in hash order — the
+    fraction (same rationale and guard shape as the driver path of
+    dedup.entity_dedup_mapping, which also hashes Spark-side;
+    measured 2.6s -> ~0.3s for the sf0.1 bench quantizer). Seed
+    selection is identical (the hash is computed Spark-side);
+    iteration arithmetic is the same numpy expression the Arrow
+    quantizer runs, summed in hash order — the
     quantizer is an approximation either way, and each path is
     deterministic. Pass ``None`` to force the distributed path; above
     the cap it is taken automatically."""

@@ -145,12 +145,18 @@ class KgPipeline:
         dedup_entities: bool = True,
     ) -> DataFrame:
         """Squish + entity dedup: committed triples → winner-IRI rewrite →
-        global dropDuplicates over the canonical key → squished parquet
-        (read back, so the squish runs once) → N-Triples; either optional."""
+        global group by the canonical key, keeping the least (url,
+        warc_ts) as the triple's provenance so a rebuild writes the
+        same rows → squished parquet (read back, so the squish runs
+        once) → N-Triples; either optional."""
         t = self.triples()
         if dedup_entities:
             t = apply_entity_mapping(t, entity_dedup_mapping(t))
-        squished = t.dropDuplicates(TRIPLE_COLS).drop("bucket")
+        squished = (
+            t.groupBy(*TRIPLE_COLS)
+            .agg(F.min(F.struct("url", "warc_ts")).alias("_prov"))
+            .select(*TRIPLE_COLS, "_prov.url", "_prov.warc_ts")
+        )
         if squished_path:
             squished.write.mode("overwrite").parquet(squished_path)
             squished = self.spark.read.schema(squished.schema).parquet(squished_path)

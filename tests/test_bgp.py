@@ -120,6 +120,7 @@ def test_bgp_random_graphs_vs_python_oracle(spark):
 _RESTART_SCRIPT = """
 from pyspark import SparkContext
 from argo_spark.ops.bgp import _nt_for_position
+from argo_spark.ops.dedup import band_keys, char_shingles, minhash_signature
 from argo_spark.session import get_spark
 from argo_spark.terms import triple_nt_col
 
@@ -131,24 +132,33 @@ def nt_lines():
         "o_kind tinyint, o_value string, o_lang string, o_dt string",
     )
     row = df.select(_nt_for_position("s"), triple_nt_col()).first()
+    keys = (
+        spark.createDataFrame([("ada lovelace",)], "surface string")
+        .select(char_shingles("surface", 3).alias("shingles"))
+        .select(minhash_signature("shingles", 4).alias("sig"))
+        .select(band_keys("sig", 2, 2))
+        .first()[0]
+    )
     gateway = spark.sparkContext._gateway
     spark.stop()
     gateway.shutdown()
     SparkContext._gateway = None
     SparkContext._jvm = None
-    return tuple(row)
+    return (*row, len(keys), keys)
 
 first = nt_lines()
-assert nt_lines() == first == ("<http://e/s>", "<http://e/s> <http://e/p> <http://e/o> ."), first
+assert nt_lines() == first, first
+assert first[:3] == ("<http://e/s>", "<http://e/s> <http://e/p> <http://e/o> .", 2), first
 print("ok")
 """
 
 
 def test_column_memos_survive_jvm_restart():
-    """The memoized term columns belong to the JVM that built them: a
-    session started after the driver JVM was shut down, in the same
-    process, builds its own (a memo bound to the first JVM fails the
-    select with a NullPointerException). Run in a subprocess so the
+    """The memoized term, shingle, MinHash-signature and band-key
+    columns belong to the JVM that built them: a session started after
+    the driver JVM was shut down, in the same process, builds its own
+    (a memo bound to the first JVM fails the select with a
+    NullPointerException). Run in a subprocess so the
     suite's session is untouched."""
     import os
     import subprocess

@@ -3,6 +3,7 @@ and the north-star entity dedup + winner rewrite."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from argo_spark.namespaces import DBP, RDF_TYPE, SCHEMA
@@ -160,58 +161,52 @@ def test_minhash_exact_duplicate_recall_random(spark):
                 )
 
 
-def test_driver_entity_mapping_equals_distributed(spark):
-    """The driver-side fast path must reproduce the distributed
-    entity-dedup mapping EXACTLY (same xxhash64, permutations, band
-    keys, hubs, Jaccard, min-label components) on the real synthetic
-    corpus triples."""
+# Hand-built surfaces the synthetic corpus lacks: non-ASCII and astral
+# characters, names shorter than the shingle size (and one surface
+# shorter than it, under a trailing-slash IRI), an empty name, and a
+# chain whose ends are not similar to each other (Jaccard 0.31) but
+# each is to the middle (0.58, 0.59), so it merges only transitively.
+CHAIN = (DBP + "Zola_(writer_of_Nana)", DBP + "Émile_Zola", DBP + "Émile_Zola_(writer)")
+HAND_NAMES = (
+    (CHAIN[0], "Émile Zola writer"),
+    (CHAIN[1], "Émile Zola"),
+    (CHAIN[2], "Émile Zola"),
+    (DBP + "Λambda_中文", "λambda 中文"),
+    (DBP + "Λambda_中文_𝔸", "λambda 中文 𝔸"),
+    (DBP + "𝔸", "𝔸"),
+    (DBP + "中/", "中"),
+    (DBP + "Empty", ""),
+)
+
+
+def _corpus_triples(spark):
     from argo_spark.extract.rdfa import extract_triples_df
-    from argo_spark.ops.dedup import entity_dedup_mapping
     from argo_spark.pages import synthesize_pages
     from argo_spark.schema import TRIPLE_COLS
 
-    triples = extract_triples_df(synthesize_pages(spark, 400)).select(
-        *TRIPLE_COLS
-    ).persist()
+    return extract_triples_df(synthesize_pages(spark, 400)).select(*TRIPLE_COLS)
+
+
+def _hand_triples(spark):
+    return TripleGraph.of(
+        spark,
+        [TripleT(iri(e), iri(SCHEMA + "name"), literal(n)) for e, n in HAND_NAMES],
+    ).df
+
+
+@pytest.mark.parametrize("build", [_corpus_triples, _hand_triples], ids=["corpus", "hand"])
+def test_driver_entity_mapping_equals_distributed(spark, build):
+    """The driver path (Spark-computed shingles and band keys, driver
+    grouping, Jaccard and union-find) must reproduce the distributed
+    entity-dedup mapping EXACTLY (same hubs, Jaccard, min-label
+    components) on the real synthetic corpus triples and on the
+    hand-built edge cases."""
+    triples = build(spark).persist()
     fast = entity_dedup_mapping(triples)  # default: driver path
     slow = entity_dedup_mapping(triples, driver_max_entities=None)
     f = {(r.entity, r.canonical) for r in fast.collect()}
     s = {(r.entity, r.canonical) for r in slow.collect()}
     assert f == s and len(f) > 0, (sorted(f - s)[:3], sorted(s - f)[:3])
+    if build is _hand_triples:
+        assert {(e, CHAIN[0]) for e in CHAIN[1:]} <= f, sorted(f)
     triples.unpersist()
-
-
-def test_python_xxhash_matches_spark(spark):
-    """Bit-parity of argo_spark.xxhash with F.xxhash64 for the three
-    paths the driver fast path uses (string / long / int-literal
-    chain)."""
-    import random
-    import string as _string
-
-    from pyspark.sql import functions as F
-
-    from argo_spark.xxhash import (
-        spark_xxhash64,
-        xxh64_int,
-        xxh64_long,
-        xxh64_string,
-    )
-
-    rnd = random.Random(13)
-    strs = ["", "a", "é中λ", "x" * 32,
-            *("".join(rnd.choices(_string.printable, k=rnd.randint(0, 48)))
-              for _ in range(25))]
-    df = spark.createDataFrame([(s,) for s in strs], "s string")
-    for r in df.select("s", F.xxhash64("s").alias("h")).collect():
-        assert xxh64_string(r.s) == r.h
-    longs = [0, -1, 2**62, *(rnd.randint(-2**63, 2**63 - 1) for _ in range(15))]
-    df = spark.createDataFrame([(v,) for v in longs], "v long")
-    for r in df.select("v", F.xxhash64("v").alias("h")).collect():
-        assert xxh64_long(r.v) == r.h
-    rows = [(rnd.randint(0, 7), rnd.randint(0, 2**31 - 1), rnd.randint(0, 2**31 - 1))
-            for _ in range(15)]
-    df = spark.createDataFrame(rows, "b int, m1 long, m2 long")
-    for r in df.select("*", F.xxhash64("b", "m1", "m2").alias("h")).collect():
-        assert spark_xxhash64(r.b, r.m1, r.m2,
-                              int_width=("int", "long", "long")) == r.h
-    assert xxh64_int(7) != xxh64_long(7)  # width matters, like Spark

@@ -85,3 +85,34 @@ def test_entry_smoke(spark):
     assert df.columns == [
         "s_kind", "s_value", "p_value", "o_kind", "o_value", "o_lang", "o_dt"
     ]
+
+
+def test_plan_cache_drops_with_its_session():
+    """The plan memo holds a session's frames only while the session
+    lives: a stub session's entry goes once the session is dropped,
+    and a hit returns the memoized plan without building it again."""
+    import gc
+
+    class Reader:
+        def __init__(self):
+            self.reads = []
+
+        def parquet(self, path):
+            self.reads.append(path)
+            return type("Frame", (), {"_jdf": object()})()
+
+    class StubSession:
+        _sc = None
+
+        def __init__(self):
+            self.read = Reader()
+
+    session = StubSession()
+    first = entry_mod._docs(session, "/sf")
+    assert entry_mod._docs(session, "/sf")._jdf is first._jdf
+    assert session.read.reads == ["/sf/documents.parquet"]
+    assert session in entry_mod._PLAN_CACHE
+    n_sessions = len(entry_mod._PLAN_CACHE)
+    del session, first
+    gc.collect()
+    assert len(entry_mod._PLAN_CACHE) == n_sessions - 1

@@ -217,6 +217,23 @@ def test_materialize_squishes_once(spark, outdir):
     assert 0 < n_rows == spark.read.text(outdir + "/nt").count()
 
 
+def test_squished_provenance_is_deterministic(spark, tmp_path):
+    """A triple that several pages state keeps one provenance pick, the
+    least (url, warc_ts), whatever the bucket layout: the same pages
+    built under 4 and under 16 buckets squish to the same full rows."""
+    pages = synthesize_pages(spark, N)
+    rows = []
+    for n_buckets in (4, 16):
+        out = str(tmp_path / f"kg{n_buckets}")
+        pipe = KgPipeline(spark, out, n_buckets=n_buckets)
+        pipe.run(pages)
+        squished = pipe.materialize(squished_path=out + "/sq")
+        assert squished.columns == [*TRIPLE_COLS, "url", "warc_ts"]
+        rows.append(sorted(squished.collect(), key=repr))
+    assert len(rows[0]) > len({r.url for r in rows[0]})  # pages share triples
+    assert rows[0] == rows[1]
+
+
 def test_build_job_counts(spark, outdir):
     """A fresh build over more bucket directories than Spark's default
     parallel-listing threshold (32): each bucket read lists its
