@@ -2,17 +2,16 @@
 §4 item 3).
 
 No Iceberg runtime jar is bundled in this sandbox (BASELINE.md), so
-transactional semantics are emulated the classic way: the triples
-table is hash-bucketed by url into ``bucket=N`` directories written
-with dynamic partition overwrite (re-running a bucket is idempotent —
-overwrite, not append), and a bucket becomes visible ONLY when its row
-is appended to the manifest parquet after the data commit. A crash
-between data write and manifest append re-runs that bucket from
-scratch; readers read the manifest's bucket list and open only those
-buckets, so half-written ones are never observed. Each commit appends
-one part file to the manifest: its rows are a driver-built local frame
-(``session.local_frame``), written as one partition. With an Iceberg
-catalog the same layout maps 1:1 onto a partitioned table + snapshots.
+commits are emulated the way Iceberg and Delta make them: immutable
+data files plus a metadata append. Each ``KgPipeline.run`` writes its
+triples (``bucket`` a column) into a new ``triples/run=<run_id>``
+directory, then appends one row per bucket to the manifest parquet:
+that append is the only commit. Readers take each bucket from the run
+of its newest row (``live_runs``), so a run that crashed before its
+append is never read and a re-run never touches committed files.
+Each append is one part file written from a driver-built local frame
+(``session.local_frame``). With an Iceberg catalog the run directories
+map onto data files and each append onto a snapshot.
 """
 
 from __future__ import annotations
@@ -52,7 +51,14 @@ class Manifest:
 
     def done_buckets(self) -> list[int]:
         """Committed buckets; no Spark job before the first commit."""
-        return sorted({r.bucket for r in self.read().select("bucket").collect()})
+        return sorted(self.live_runs())
+
+    def live_runs(self) -> dict[int, str]:
+        """The committed snapshot, ``{bucket: run_id}``: the run of each
+        bucket's newest row (greatest ``committed_at``)."""
+        rows = self.read().select("bucket", "run_id", "committed_at").collect()
+        rows.sort(key=lambda r: (r.committed_at, r.run_id))
+        return {r.bucket: r.run_id for r in rows}
 
     def record(self, stats: DataFrame, run_id: str) -> None:
         """Append per-bucket lineage rows as one part file. stats:

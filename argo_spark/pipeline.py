@@ -1,17 +1,16 @@
 """End-to-end KG-construction pipeline (SURVEY §3 "our lifecycle").
 
     pages ──bucket by url hash──▶ extract (one Arrow stage)
-          ──▶ triples parquet, bucket-partitioned, manifest-committed
+          ──▶ immutable ``triples/run=<id>/`` parquet ──▶ manifest append
           ──▶ [materialize] entity-dedup rewrite ─▶ squish ─▶
               squished parquet ─▶ N-Triples
 
 Scale design:
-* the extract stage is embarrassingly parallel — no shuffle between
-  the page scan and the triples write except the bucket repartition,
-  which doubles as the resume unit and the join/bucketing layout of
-  the output table;
-* readers read the manifest's bucket list and open only those
-  ``bucket=N`` directories, with a fixed schema (no inference job);
+* the extract stage is embarrassingly parallel — no shuffle before
+  the triples write: each task writes one file, sorted by the
+  ``bucket`` column so parquet row-group stats prune on it;
+* readers take each bucket from the run of its newest manifest row
+  and read only those run directories, with a fixed schema;
 * the squish (G14) is a global dropDuplicates over the 7-column
   canonical key — AQE coalesces post-shuffle partitions; the key is
   diverse (objects included) so no skew;
@@ -32,11 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from argo_spark.extract.rdfa import EXTRACT_SCHEMA, extract_triples_df
-from argo_spark.manifest import Manifest, hadoop_fs, new_run_id
+from argo_spark.manifest import Manifest, new_run_id
 from argo_spark.ntriples import write_ntriples
 from argo_spark.ops.dedup import apply_entity_mapping, entity_dedup_mapping
 from argo_spark.schema import TRIPLE_COLS
 from argo_spark.session import local_frame
+
+TABLE_SCHEMA = EXTRACT_SCHEMA + ", bucket int"
 
 
 def bucket_col(n_buckets: int):
@@ -70,10 +71,10 @@ class KgPipeline:
         max_buckets: Optional[int] = None,
         with_mentions: bool = True,
     ) -> RunStats:
-        """Extract all (or the next ``max_buckets``) pending buckets and
-        commit them to the triples table + manifest. Idempotent per
-        bucket; re-running after a crash resumes exactly where the
-        manifest says."""
+        """Extract all (or the next ``max_buckets``) pending buckets into
+        a new run directory and commit them with one manifest append.
+        Committed files are never touched; re-running after a crash
+        resumes exactly where the manifest says."""
         run_id = new_run_id()
         t0 = time.time()
 
@@ -84,23 +85,20 @@ class KgPipeline:
         if not pending:
             return RunStats(run_id, 0, 0, 0, 0.0, 0.0, 0.0)
 
+        run_path = f"{self.triples_path}/run={run_id}"
         src = pages.where(bucket_col(self.n_buckets).isin(pending))
-        triples = extract_triples_df(src, with_mentions=with_mentions).withColumn(
-            "bucket", bucket_col(self.n_buckets)
-        )
-
-        # idempotent bucket overwrite (dynamic partition overwrite)
         (
-            triples.repartition("bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.triples_path)
+            extract_triples_df(src, with_mentions=with_mentions)
+            .withColumn("bucket", bucket_col(self.n_buckets))
+            .sortWithinPartitions("bucket")
+            .write.parquet(run_path)
         )
 
-        # lineage: per-bucket counts from the COMMITTED files (read back,
-        # so the manifest row attests exactly what landed on disk)
-        stats = self._read_buckets(pending).groupBy("bucket").agg(
+        # lineage read back from this run's files, so the manifest attests
+        # what landed; hashing on bucket serves both aggregates at once
+        written = self.spark.read.schema(TABLE_SCHEMA).parquet(run_path)
+        by_bucket = written.select("bucket", "url").repartition("bucket").groupBy("bucket")
+        stats = by_bucket.agg(
             F.countDistinct("url").alias("n_pages"),
             F.count(F.lit(1)).alias("n_triples"),
             F.min("url").alias("min_url"),
@@ -118,25 +116,25 @@ class KgPipeline:
         )
 
     # ------------------------------------------------------------------
-    def _read_buckets(self, buckets: list[int]) -> DataFrame:
-        """The existing ``bucket=N`` dirs of ``buckets`` (an empty bucket has
-        none) with the table's fixed schema; ``basePath`` keeps ``bucket``."""
-        glob = f"{self.triples_path}/bucket={{{','.join(map(str, buckets))}}}"
-        fs, pattern = hadoop_fs(self.spark, glob)
-        found = fs.globStatus(pattern) if buckets else None
-        schema = EXTRACT_SCHEMA + ", bucket int"
-        if not found:
-            return local_frame(self.spark, [], schema)
-        return (
-            self.spark.read.schema(schema)
-            .option("basePath", self.triples_path)
-            .parquet(*[st.getPath().toString() for st in found])
-        )
-
     def triples(self) -> DataFrame:
-        """Committed triples only: the buckets the manifest lists, so
-        never-committed (crashed) buckets are invisible."""
-        return self._read_buckets(self.manifest.done_buckets())
+        """Committed triples only: each bucket from the run of its newest
+        manifest row, so a crashed run's files and a re-run bucket's
+        older copy are never read."""
+        newest = self.manifest.live_runs()
+        if not newest:
+            return local_frame(self.spark, [], TABLE_SCHEMA)
+        runs = sorted(set(newest.values()))
+        live = F.lit(False)
+        for run_id in runs:
+            buckets = [b for b, r in newest.items() if r == run_id]
+            live |= (F.col("run") == run_id) & F.col("bucket").isin(buckets)
+        return (
+            self.spark.read.schema(TABLE_SCHEMA + ", run string")
+            .option("basePath", self.triples_path)
+            .parquet(*(f"{self.triples_path}/run={r}" for r in runs))
+            .where(live)
+            .drop("run")
+        )
 
     def materialize(
         self,

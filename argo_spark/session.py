@@ -44,10 +44,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # A read of up to 1000 explicit paths (KgPipeline's bucket
-        # directories) lists them on the driver instead of starting a
-        # Spark listing job; above it the listing is a distributed job.
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -1,7 +1,7 @@
 """End-to-end pipeline: exactly-once resume, committed-only reads,
-fresh-directory reads, manifest lineage, driver-built local frames,
-job counts per call, P/R after materialize, one squish per
-materialize, skewed predicate stats."""
+crashed and committed re-runs, fresh-directory reads, manifest
+lineage, driver-built local frames, job counts per call, P/R after
+materialize, one squish per materialize, skewed predicate stats."""
 
 from __future__ import annotations
 
@@ -60,10 +60,13 @@ def test_rerun_bucket_is_idempotent(spark, outdir):
     pages = synthesize_pages(spark, N)
     pipe = KgPipeline(spark, outdir, n_buckets=4)
     pipe.run(pages, max_buckets=2)
-    before = pipe.spark.read.parquet(pipe.triples_path).count()
+    before = pipe.triples().count()
     # crash AFTER the data write but BEFORE the manifest commit of
-    # bucket 2: its files landed, yet readers must not see them
+    # bucket 2: its run directory landed, yet readers must not see it
+    crashed = []
+
     def crash(stats, run_id):
+        crashed.append(run_id)
         raise RuntimeError("crash before manifest append")
 
     pipe.manifest.record = crash
@@ -71,15 +74,63 @@ def test_rerun_bucket_is_idempotent(spark, outdir):
         pipe.run(pages, max_buckets=1)
     del pipe.manifest.record
     assert set(pipe.manifest.done_buckets()) == {0, 1}
-    assert pipe.spark.read.parquet(pipe.triples_path).count() > before
+    crashed_dir = f"{pipe.triples_path}/run={crashed[0]}"
+    assert spark.read.parquet(crashed_dir).count() > 0
     assert pipe.triples().count() == before
     # write it again with resume (manifest says pending)
     pipe.run(pages, max_buckets=1)  # processes bucket 2 fresh
     pipe.run(pages)  # finish
-    total = pipe.spark.read.parquet(pipe.triples_path).count()
+    # the crashed run's files stay on disk, never read
+    assert os.path.isdir(crashed_dir)
+    assert crashed[0] not in pipe.manifest.live_runs().values()
     committed = pipe.triples().count()
-    assert committed == total  # dynamic overwrite left no duplicates
-    assert total > before
+    assert committed == _attested(pipe) and committed > before
+
+
+def _attested(pipe) -> int:
+    """The triples the manifest rows count, summed over all buckets."""
+    return pipe.manifest.read().agg(F.sum("n_triples")).collect()[0][0]
+
+
+def test_crashed_rerun_keeps_committed_view(spark, outdir):
+    """A resume=False re-run over another page source that crashes
+    before its manifest append leaves the committed view as it was,
+    still the triples the manifest attests."""
+    pipe = KgPipeline(spark, outdir, n_buckets=4)
+    pipe.run(synthesize_pages(spark, 60, 1))
+    before = sorted(pipe.triples().collect(), key=repr)
+
+    def crash(stats, run_id):
+        raise RuntimeError("crash before manifest append")
+
+    pipe.manifest.record = crash
+    with pytest.raises(RuntimeError):
+        pipe.run(synthesize_pages(spark, 90, 2), resume=False)
+    del pipe.manifest.record
+    assert sorted(pipe.triples().collect(), key=repr) == before
+    assert len(before) == _attested(pipe)
+
+
+def test_committed_rerun_yields_one_copy(spark, outdir):
+    """Re-running committed buckets with resume=False supersedes them:
+    the committed view holds one copy, from the second run, and
+    materializes to the same rows."""
+    pages = synthesize_pages(spark, N)
+    pipe = KgPipeline(spark, outdir, n_buckets=4)
+    first = pipe.run(pages)
+    n_triples = pipe.triples().count()
+    squished = sorted(pipe.materialize().collect(), key=repr)
+    second = pipe.run(pages, resume=False)
+    assert second.n_buckets_processed == first.n_buckets_processed == 4
+    assert pipe.triples().count() == n_triples == second.n_triples
+    newest = (
+        pipe.manifest.read()
+        .groupBy("bucket")
+        .agg(F.max_by("run_id", "committed_at").alias("run_id"))
+        .collect()
+    )
+    assert len(newest) == 4 and {r.run_id for r in newest} == {second.run_id}
+    assert sorted(pipe.materialize().collect(), key=repr) == squished
 
 
 def test_fresh_directory_reads(spark, outdir):
@@ -88,6 +139,7 @@ def test_fresh_directory_reads(spark, outdir):
     buckets and collecting the committed view start no Spark job.
     Buckets that extract no triples are never committed."""
     empty_manifest = spark.createDataFrame([], MANIFEST_SCHEMA).schema
+    table_schema = spark.createDataFrame([], EXTRACT_SCHEMA + ", bucket int").schema
     m, n_jobs = jobs_started(spark, "fresh-manifest", Manifest(spark, outdir).read)
     assert n_jobs == 0
     assert m.schema == empty_manifest and m.count() == 0
@@ -101,12 +153,11 @@ def test_fresh_directory_reads(spark, outdir):
     # 5 pages over 16 buckets: most buckets stay empty
     stats = pipe.run(synthesize_pages(spark, 5))
     assert stats.n_pages == 5 and 0 < stats.n_buckets_processed < 16
-    table = spark.read.parquet(pipe.triples_path)
-    assert fresh.schema == table.schema
+    assert fresh.schema == table_schema
     assert pipe.manifest.read().schema == empty_manifest
     committed = pipe.triples()
-    assert committed.schema == table.schema
-    assert committed.count() == table.count() == stats.n_triples
+    assert committed.schema == table_schema
+    assert committed.count() == stats.n_triples
 
 
 def test_manifest_attests_committed_files(spark, outdir):
@@ -235,14 +286,12 @@ def test_squished_provenance_is_deterministic(spark, tmp_path):
 
 
 def test_build_job_counts(spark, outdir):
-    """A fresh build over more bucket directories than Spark's default
-    parallel-listing threshold (32): each bucket read lists its
-    directories on the driver. `run` starts 6 jobs (extract and bucket
-    write 2, per-bucket stats 3, manifest append 1) and
-    `materialize(nt, squished)` 7 (manifest read 1, entity mapping 2,
-    map broadcast 1, squish and parquet write 2, N-Triples write 1).
-    The entity rewrite starts none and broadcasts the map into both
-    joins."""
+    """A fresh 64-bucket build: `run` starts 4 jobs (extract and run
+    directory write 1, per-bucket stats 2 over one exchange, manifest
+    append 1) and `materialize(nt, squished)` 7 (manifest read 1,
+    entity mapping 2, map broadcast 1, squish and parquet write 2,
+    N-Triples write 1). The entity rewrite starts none and broadcasts
+    the map into both joins."""
     pages = synthesize_pages(spark, 400)
     pipe = KgPipeline(spark, outdir, n_buckets=64)
     stats, run_jobs = jobs_started(spark, "build-run", lambda: pipe.run(pages))
@@ -250,7 +299,7 @@ def test_build_job_counts(spark, outdir):
     _, materialize_jobs = jobs_started(
         spark, "build-materialize", lambda: pipe.materialize(outdir + "/nt", outdir + "/sq")
     )
-    assert (run_jobs, materialize_jobs) == (6, 7)
+    assert (run_jobs, materialize_jobs) == (4, 7)
 
     t = pipe.triples()
     mapping = entity_dedup_mapping(t)
