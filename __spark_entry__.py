@@ -44,26 +44,7 @@ def entry(spark: SparkSession) -> DataFrame:
     triples = extract_triples_df(pages).select(*TRIPLE_COLS).persist()
     mapping = entity_dedup_mapping(triples)
     rewritten = apply_entity_mapping(triples, mapping)
-    # Materialize the rewritten triples BUCKETED BY SUBJECT before the
-    # squish (storage.write_bucketed, PLANS.md §8): the shuffle is
-    # paid once at ingest, and the squish's dropDuplicates over the
-    # 7-col canonical key then rides the bucket layout with ZERO
-    # Exchange — HashPartitioning(s_value) satisfies the dedup's
-    # ClusteredDistribution because s_value is part of the key
-    # (pinned by tests/test_storage.py::test_entry_squish_rides_buckets).
-    # Falls back to the direct one-shuffle plan if the driver
-    # environment has no writable warehouse dir.
-    try:
-        from argo_spark.storage import read_table, write_bucketed
-
-        write_bucketed(
-            rewritten, "entry_triples_bucketed", ["s_value"], n_buckets=8
-        )
-        squished = read_table(spark, "entry_triples_bucketed").dropDuplicates(
-            TRIPLE_COLS
-        )
-    except Exception:
-        squished = rewritten.dropDuplicates(TRIPLE_COLS)
+    squished = rewritten.dropDuplicates(TRIPLE_COLS)
     doc_triples = _doc_triples(spark, SF0001).select(*TRIPLE_COLS)
     return squished.unionByName(doc_triples)
 
@@ -593,12 +574,9 @@ def q_salted_predicate_counts(spark, sf_dir):
     """Skew-aware two-phase aggregation (SURVEY §4 item 1) checked
     against a naive oracle: groupBy(p, salt) partials then merge —
     same answer, hot keys fanned over 16 reducers."""
-    tr = _doc_triples(spark, sf_dir)
-    salted = tr.withColumn("_salt", F.pmod(F.xxhash64("s_value"), F.lit(16)))
-    partial = salted.groupBy("p_value", "_salt").agg(
-        F.count(F.lit(1)).alias("_n")
-    )
-    return partial.groupBy("p_value").agg(F.sum("_n").cast("long").alias("n"))
+    from argo_spark.pipeline import predicate_stats
+
+    return predicate_stats(_doc_triples(spark, sf_dir)).select("p_value", "n")
 
 
 def q_bgp_join(spark, sf_dir):

@@ -737,14 +737,32 @@ def connected_components(
 
 NAME_PREDICATES = (SCHEMA + "name", FOAF + "name")
 
+# the entity-dedup shape, shared by the driver and distributed paths
+_ENTITY_IRI_PREFIX = DBP
+_ENTITY_SHINGLE_K = 3
+_ENTITY_HASHES, _ENTITY_BANDS = 16, 8
+_ENTITY_THRESHOLD = 0.45
 
-def entity_surface_forms(triples: DataFrame, iri_prefix: str = DBP) -> DataFrame:
-    """(entity, name) pairs: entity IRIs under ``iri_prefix`` with
-    their name literals — the dedup keying surface."""
+# up to this many distinct entities (a broadcast-sized map by
+# definition) the map is built on the driver from one collect; above
+# it, by the distributed path — at web scale the entity vocabulary can
+# exceed any driver
+DRIVER_MAX_ENTITIES = 100_000
+
+# an entity map of up to this many rows (a few hundred MB of IRIs) is
+# broadcast; at 100 TB a dup map can exceed the executors' and the
+# driver's broadcast limits, so a larger one is a plain join that AQE
+# plans
+BROADCAST_MAX_ROWS = 5_000_000
+
+
+def entity_surface_forms(triples: DataFrame) -> DataFrame:
+    """(entity, name) pairs: entity IRIs under ``_ENTITY_IRI_PREFIX``
+    with their name literals — the dedup keying surface."""
     return (
         triples.where(
             (F.col("s_kind") == KIND_IRI)
-            & F.col("s_value").startswith(iri_prefix)
+            & F.col("s_value").startswith(_ENTITY_IRI_PREFIX)
             & F.col("p_value").isin(list(NAME_PREDICATES))
         )
         .select(F.col("s_value").alias("entity"), F.col("o_value").alias("name"))
@@ -752,7 +770,7 @@ def entity_surface_forms(triples: DataFrame, iri_prefix: str = DBP) -> DataFrame
     )
 
 
-def _driver_entity_mapping(rows, threshold: float) -> list[tuple[str, str]]:
+def _driver_entity_mapping(rows) -> list[tuple[str, str]]:
     """The driver steps of the char-mode MinHash-LSH star pipeline over
     collected ``(entity, shingles, band keys)`` rows: group by (band,
     key), hub = min member, exact Jaccard verify of hub → member over
@@ -780,7 +798,7 @@ def _driver_entity_mapping(rows, threshold: float) -> list[tuple[str, str]]:
             seen.add((hub, m))
             inter = len(sh[hub] & sh[m])
             union = len(sh[hub] | sh[m])
-            if inter / union >= threshold:
+            if inter / union >= _ENTITY_THRESHOLD:
                 verified.append((hub, m))
     parent: dict[str, str] = {}
 
@@ -802,23 +820,7 @@ def _driver_entity_mapping(rows, threshold: float) -> list[tuple[str, str]]:
     return sorted((e, find(e)) for e in parent if find(e) != e)
 
 
-# the entity-dedup LSH shape, shared by the driver and distributed paths
-_ENTITY_HASHES, _ENTITY_BANDS = 16, 8
-
-# an entity map of up to this many rows (a few hundred MB of IRIs) is
-# broadcast; at 100 TB a dup map can exceed the executors' and the
-# driver's broadcast limits, so a larger one is a plain join that AQE
-# plans
-BROADCAST_MAX_ROWS = 5_000_000
-
-
-def entity_dedup_mapping(
-    triples: DataFrame,
-    iri_prefix: str = DBP,
-    shingle_k: int = 3,
-    threshold: float = 0.45,
-    driver_max_entities: Optional[int] = 100_000,
-) -> DataFrame:
+def entity_dedup_mapping(triples: DataFrame) -> DataFrame:
     """(entity, canonical) rewrite map via MinHash-LSH on the combined
     surface form 'name + IRI local tail', verified by Jaccard, merged
     by connected components; canonical = min IRI of the component.
@@ -828,9 +830,8 @@ def entity_dedup_mapping(
     its own join strategy: a broadcast hint up to
     ``BROADCAST_MAX_ROWS`` rows, none above.
 
-    When the distinct-entity set fits ``driver_max_entities`` (a
-    broadcast-sized map by definition — default 100k surface forms),
-    one collect brings back each entity's shingles and band keys,
+    When the distinct-entity set fits ``DRIVER_MAX_ENTITIES``, one
+    collect brings back each entity's shingles and band keys,
     computed by Spark with the distributed path's ``char_shingles`` and
     ``band_keys`` over the column-form ``minhash_signature``, and the
     grouping, Jaccard verify and components run DRIVER-SIDE
@@ -839,12 +840,11 @@ def entity_dedup_mapping(
     the flagship (pinned equal to the distributed path by
     test_dedup's equivalence test); the map comes back as a local
     frame of known length, so deciding and running its broadcast
-    starts no job and forks no Python worker. Pass ``None`` to force
-    the distributed path; above the cap it is taken automatically — at
-    web scale the entity vocabulary can exceed any driver — and counts
-    its map (up to ``BROADCAST_MAX_ROWS + 1`` rows) to decide."""
+    starts no job and forks no Python worker. Above the cap the
+    distributed path runs, and counts its map (up to
+    ``BROADCAST_MAX_ROWS + 1`` rows) to decide."""
     surf = (
-        entity_surface_forms(triples, iri_prefix)
+        entity_surface_forms(triples)
         .groupBy("entity")
         .agg(F.min("name").alias("name"))
     )
@@ -864,38 +864,37 @@ def entity_dedup_mapping(
             ).alias("surface"),
         )
 
-    if driver_max_entities is not None:
-        # driver path collects exactly once — no checkpoint needed
-        # (converting the plan to a checkpointed RDD costs a full
-        # analysis pass of ~0.3s of py4j/driver time per call)
-        keys = band_keys("sig", _ENTITY_BANDS, _ENTITY_HASHES // _ENTITY_BANDS)
-        head = (
-            keyed_of(surf)
-            .select("entity", char_shingles("surface", shingle_k).alias("shingles"))
-            .withColumn("sig", minhash_signature("shingles", _ENTITY_HASHES))
-            .select("entity", "shingles", keys.alias("keys"))
-            .limit(driver_max_entities + 1)
-            .collect()
+    # driver path collects exactly once — no checkpoint needed
+    # (converting the plan to a checkpointed RDD costs a full analysis
+    # pass of ~0.3s of py4j/driver time per call)
+    keys = band_keys("sig", _ENTITY_BANDS, _ENTITY_HASHES // _ENTITY_BANDS)
+    head = (
+        keyed_of(surf)
+        .select("entity", char_shingles("surface", _ENTITY_SHINGLE_K).alias("shingles"))
+        .withColumn("sig", minhash_signature("shingles", _ENTITY_HASHES))
+        .select("entity", "shingles", keys.alias("keys"))
+        .limit(DRIVER_MAX_ENTITIES + 1)
+        .collect()
+    )
+    if len(head) <= DRIVER_MAX_ENTITIES:
+        mapping = _driver_entity_mapping(head)
+        return _broadcast_if_small(
+            local_frame(
+                triples.sparkSession, mapping, "entity string, canonical string"
+            ),
+            len(mapping),
         )
-        if len(head) <= driver_max_entities:
-            mapping = _driver_entity_mapping(head, threshold)
-            return _broadcast_if_small(
-                local_frame(
-                    triples.sparkSession, mapping, "entity string, canonical string"
-                ),
-                len(mapping),
-            )
-        log.info(
-            "entity_dedup_mapping: > %d entities — distributed path",
-            driver_max_entities,
-        )
+    log.info(
+        "entity_dedup_mapping: > %d entities — distributed path",
+        DRIVER_MAX_ENTITIES,
+    )
     # distributed path: checkpoint so the LSH + connected-components
     # actions don't re-scan the triples (lazy: the first downstream
     # job materializes it — no extra job)
     keyed = keyed_of(surf.localCheckpoint(eager=False))
     pairs = minhash_dedup_pairs(
-        keyed, "entity", "surface", shingle_k=shingle_k,
-        n_hashes=_ENTITY_HASHES, n_bands=_ENTITY_BANDS, threshold=threshold,
+        keyed, "entity", "surface", shingle_k=_ENTITY_SHINGLE_K,
+        n_hashes=_ENTITY_HASHES, n_bands=_ENTITY_BANDS, threshold=_ENTITY_THRESHOLD,
         mode="char", pair_mode="star",
     )
     comps = connected_components(pairs.select("a", "b"))

@@ -3,66 +3,17 @@ graph traversal").
 
 The reference chases pointers one list cell at a time
 (/root/reference/graph.go:255-271); the scale shape is the inverse:
-ALL traversals advance one hop per iteration via a single join over
-the triples table, so k-hop reachability over any number of seeds
-costs k shuffles total (not k per seed).
+each traversal advances every walk at once per round via a single
+join, so the round count depends on path length (or, for the
+closure, its logarithm), never on how many walks run.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from argo_spark.namespaces import RDF_FIRST, RDF_NIL, RDF_REST
-from argo_spark.terms import KIND_LITERAL
-
-
-def reachable(
-    triples: DataFrame,
-    seeds: DataFrame,
-    max_hops: int = 6,
-) -> DataFrame:
-    """All (kind, value, hop) nodes reachable from seeds(kind, value)
-    along subject→object edges in ≤ max_hops. Literals terminate paths
-    (they can't be subjects). BFS: one edge join per hop; lineage cut
-    with localCheckpoint each round; stops early when the frontier is
-    empty."""
-    edges = triples.select(
-        F.col("s_kind").alias("src_kind"),
-        F.col("s_value").alias("src_value"),
-        F.col("o_kind").alias("dst_kind"),
-        F.col("o_value").alias("dst_value"),
-    ).where(F.col("o_kind") != KIND_LITERAL)
-
-    visited = (
-        seeds.select(F.col("kind"), F.col("value"))
-        .dropDuplicates()
-        .withColumn("hop", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            edges.join(
-                frontier,
-                (edges.src_kind == frontier.kind)
-                & (edges.src_value == frontier.value),
-            )
-            .select(
-                F.col("dst_kind").alias("kind"),
-                F.col("dst_value").alias("value"),
-            )
-            .dropDuplicates()
-        )
-        new = nxt.join(
-            visited.select("kind", "value"), ["kind", "value"], "left_anti"
-        ).withColumn("hop", F.lit(hop))
-        new = new.localCheckpoint(eager=True)
-        if not new.take(1):
-            break
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    return visited
 
 
 def transitive_closure(edges: DataFrame, max_rounds: int = 10) -> DataFrame:

@@ -4,18 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# Input: Common-Crawl-style web pages (BASELINE.json input_hint).
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("lang", T.StringType(), False),
-    ]
-)
-
-# Output: flattened triples with provenance (lineage + skolem key).
+# Flattened triples: the seven term columns.
 TRIPLES_FIELDS = [
     T.StructField("s_kind", T.ByteType(), False),
     T.StructField("s_value", T.StringType(), False),

@@ -195,15 +195,19 @@ def _hand_triples(spark):
 
 
 @pytest.mark.parametrize("build", [_corpus_triples, _hand_triples], ids=["corpus", "hand"])
-def test_driver_entity_mapping_equals_distributed(spark, build):
+def test_driver_entity_mapping_equals_distributed(spark, build, monkeypatch):
     """The driver path (Spark-computed shingles and band keys, driver
     grouping, Jaccard and union-find) must reproduce the distributed
     entity-dedup mapping EXACTLY (same hubs, Jaccard, min-label
     components) on the real synthetic corpus triples and on the
     hand-built edge cases."""
+    from argo_spark.ops import dedup
+
     triples = build(spark).persist()
     fast = entity_dedup_mapping(triples)  # default: driver path
-    slow = entity_dedup_mapping(triples, driver_max_entities=None)
+    # a cap of 0 sends every non-empty entity set down the distributed path
+    monkeypatch.setattr(dedup, "DRIVER_MAX_ENTITIES", 0)
+    slow = entity_dedup_mapping(triples)
     f = {(r.entity, r.canonical) for r in fast.collect()}
     s = {(r.entity, r.canonical) for r in slow.collect()}
     assert f == s and len(f) > 0, (sorted(f - s)[:3], sorted(s - f)[:3])

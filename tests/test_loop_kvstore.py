@@ -1,5 +1,4 @@
-"""loop interpreter (loop.go:66-207) + KV triple store
-(redisstore.go:29-90) semantics."""
+"""loop interpreter (loop.go:66-207) semantics."""
 
 from __future__ import annotations
 
@@ -12,13 +11,6 @@ from argo_spark.ops.loop import (
     LoopInterpreter,
     Resource,
     run_loop,
-)
-from argo_spark.sinks.kvstore import (
-    InMemoryKV,
-    KVTripleStore,
-    bulk_add_dataframe,
-    fnv1_64,
-    hash_term,
 )
 from argo_spark.terms import Term, TripleT, blank, iri, literal
 
@@ -197,109 +189,3 @@ def test_run_loop_from_rdfxml(spark, tmp_path):
     f = tmp_path / "prog.rdf"
     f.write_text(doc)
     assert run_loop(spark, str(f), "http://example.org/add") == pytest.approx(9.1)
-
-
-# ---------------------------------------------------------------------------
-# KV triple store
-# ---------------------------------------------------------------------------
-
-def test_fnv1_64_reference_vectors():
-    # FNV-1 (multiply-then-xor): offset basis for "", published vectors
-    assert fnv1_64(b"") == 0xCBF29CE484222325
-    assert fnv1_64(b"a") == 0xAF63BD4C8601B7BE
-    assert fnv1_64(b"foobar") == 0x340D8765A4DDA9C2
-
-
-def test_store_add_remove_num_filter():
-    s = KVTripleStore()
-    t1 = TripleT(iri("http://e/s"), iri("http://e/p"), literal("v1"))
-    t2 = TripleT(iri("http://e/s"), iri("http://e/p"), literal("v2"))
-    t3 = TripleT(blank("b"), iri("http://e/q"), iri("http://e/s"))
-    for t in (t1, t2, t3):
-        s.add(t)
-    assert s.num() == 3
-    # sp composite set: objects for (s, p)
-    got = {t.o for t in s.filter(s=iri("http://e/s"), p=iri("http://e/p"))}
-    assert got == {literal("v1"), literal("v2")}
-    # po composite: subjects for (q, s)
-    subs = {t.s for t in s.filter(p=iri("http://e/q"), o=iri("http://e/s"))}
-    assert subs == {blank("b")}
-    # full iteration round-trips through NT lines
-    assert set(s.iter_triples()) == {t1, t2, t3}
-    s.remove(t2)
-    assert s.num() == 2
-    got = {t.o for t in s.filter(s=iri("http://e/s"), p=iri("http://e/p"))}
-    assert got == {literal("v1")}
-    s.clear()
-    assert s.num() == 0
-
-
-def test_bulk_add_dataframe(spark, tmp_path):
-    """Executor-side bulk load: per-partition clients journal their
-    commands to disk; the union equals a driver-side load."""
-    import glob
-    import json
-    import os
-
-    jdir = str(tmp_path / "journal")
-    os.makedirs(jdir)
-
-    class JournalKV(InMemoryKV):
-        def __init__(self, d):
-            super().__init__()
-            self.f = open(f"{d}/{os.getpid()}_{id(self)}.jsonl", "a")
-
-        def rpush(self, key, value):
-            super().rpush(key, value)
-            self.f.write(json.dumps(["rpush", key, value]) + "\n")
-            self.f.flush()
-
-    df = spark.createDataFrame(
-        [
-            (0, "http://e/s1", "http://e/p", 2, "x", None, None),
-            (0, "http://e/s2", "http://e/p", 2, "y", None, None),
-        ],
-        "s_kind tinyint, s_value string, p_value string, o_kind tinyint, "
-        "o_value string, o_lang string, o_dt string",
-    ).repartition(2)
-    bulk_add_dataframe(df, lambda: JournalKV(jdir))
-    lines = []
-    for f in glob.glob(f"{jdir}/*.jsonl"):
-        lines += [json.loads(ln) for ln in open(f)]
-    pushed = {ln[2] for ln in lines if ln[0] == "rpush"}
-    assert pushed == {
-        '<http://e/s1> <http://e/p> "x" .',
-        '<http://e/s2> <http://e/p> "y" .',
-    }
-
-
-def test_kvstore_random_ops_vs_dict_model():
-    """Random add/remove sequences: the KV store's sp-composite filter
-    and triple list match a plain dict/multiset model."""
-    import random
-
-    from argo_spark.terms import format_triple
-
-    for seed in range(3):
-        rng = random.Random(seed)
-        store = KVTripleStore()
-        model: list = []  # list of TripleT (bag, like the RPUSH list)
-        subjects = [iri(f"http://e/s{i}") for i in range(3)]
-        preds = [iri(f"http://e/p{i}") for i in range(2)]
-        objs = [literal(f"v{i}") for i in range(4)] + [blank("b0")]
-        for _ in range(60):
-            t = TripleT(rng.choice(subjects), rng.choice(preds), rng.choice(objs))
-            if rng.random() < 0.7 or t not in model:
-                store.add(t)
-                model.append(t)
-            else:
-                store.remove(t)
-                model = [m for m in model if m != t]  # LREM count=0: all
-        assert store.num() == len(model)
-        for s in subjects:
-            for p in preds:
-                got = {x.o for x in store.filter(s=s, p=p)}
-                want = {m.o for m in model if m.s == s and m.p == p}
-                assert got == want, f"seed {seed}"
-        assert sorted(format_triple(*t) for t in set(store.iter_triples())) == \
-               sorted(format_triple(*t) for t in set(model))

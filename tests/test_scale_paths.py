@@ -169,8 +169,10 @@ def test_apply_entity_mapping_shuffle_fallback(spark, monkeypatch, caplog):
         ],
     ).df
 
+    monkeypatch.setattr(dedup, "DRIVER_MAX_ENTITIES", 0)  # distributed path
+
     def rewrite():
-        mapping = dedup.entity_dedup_mapping(triples, driver_max_entities=None)
+        mapping = dedup.entity_dedup_mapping(triples)
         hinted = "ResolvedHint" in mapping._jdf.queryExecution().analyzed().toString()
         out = apply_entity_mapping(triples, mapping)
         return hinted, sorted((r.s_value, r.o_value) for r in out.collect())

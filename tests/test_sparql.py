@@ -2570,6 +2570,11 @@ def test_sparql_update_graph_management(spark):
         == {"http://g/1"}
     assert sparql_update(q, 'DROP ALL').count() == 0
     assert {r[3] for r in _quads(sparql_update(q, 'DROP NAMED'))} == {""}
+    # DROP GRAPH on the promoted frame empties that graph and the
+    # frame stays quad
+    out = sparql_update(q, 'DROP GRAPH <http://g/1>')
+    assert "g_value" in out.columns
+    assert [r.g_value for r in out.collect()] == [None]
     # missing graph: error without SILENT, no-op with
     with pytest.raises(ValueError, match="does not exist"):
         sparql_update(q, 'DROP GRAPH <http://g/404>').count()

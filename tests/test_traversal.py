@@ -2,33 +2,9 @@
 
 from __future__ import annotations
 
-from argo_spark.ops.graph import TripleGraph, encode_list
-from argo_spark.ops.traversal import iter_lists_distributed, reachable
-from argo_spark.terms import KIND_BLANK, KIND_IRI, TripleT, blank, iri, literal
-
-P = iri("http://e/p")
-
-
-def test_reachable_bfs(spark):
-    gr = TripleGraph.of(
-        spark,
-        [
-            TripleT(iri("http://e/a"), P, iri("http://e/b")),
-            TripleT(iri("http://e/b"), P, iri("http://e/c")),
-            TripleT(iri("http://e/c"), P, blank("d")),
-            TripleT(iri("http://e/b"), P, literal("leaf")),  # literal: no path
-            TripleT(iri("http://e/x"), P, iri("http://e/y")),  # disconnected
-            TripleT(iri("http://e/c"), P, iri("http://e/a")),  # cycle back
-        ],
-    )
-    seeds = spark.createDataFrame([(0, "http://e/a")], "kind tinyint, value string")
-    got = {(r.kind, r.value): r.hop for r in reachable(gr.df, seeds).collect()}
-    assert got == {
-        (KIND_IRI, "http://e/a"): 0,
-        (KIND_IRI, "http://e/b"): 1,
-        (KIND_IRI, "http://e/c"): 2,
-        (KIND_BLANK, "d"): 3,
-    }  # cycle doesn't loop, literals and disconnected nodes excluded
+from argo_spark.ops.graph import encode_list
+from argo_spark.ops.traversal import iter_lists_distributed
+from argo_spark.terms import blank, iri, literal
 
 
 def test_iter_lists_distributed(spark):
@@ -52,43 +28,6 @@ def test_iter_lists_distributed(spark):
         (2, 0, "http://e/z", None, None),
     ]
     assert got["h2"] == [(0, 2, "only", None, None)]
-
-
-def test_reachable_random_graphs_vs_python_bfs(spark):
-    """BFS reachability (+ hop distances) equals a Python BFS oracle
-    on seeded random IRI graphs."""
-    import random
-    from collections import deque
-
-    for seed in range(4):
-        rng = random.Random(seed)
-        nodes = [f"http://e/n{i}" for i in range(12)]
-        edges = sorted({
-            (rng.choice(nodes), rng.choice(nodes))
-            for _ in range(rng.randrange(6, 30))
-        })
-        gr = TripleGraph.of(
-            spark,
-            [TripleT(iri(s), iri("http://e/p"), iri(o)) for s, o in edges],
-        )
-        seeds = spark.createDataFrame(
-            [(0, nodes[0])], "kind tinyint, value string"
-        )
-        got = {(r.value, r.hop) for r in reachable(gr.df, seeds, max_hops=12).collect()}
-
-        adj: dict = {}
-        for s, o in edges:
-            adj.setdefault(s, set()).add(o)
-        dist = {nodes[0]: 0}
-        q = deque([nodes[0]])
-        while q:
-            u = q.popleft()
-            for v in sorted(adj.get(u, ())):
-                if v not in dist:
-                    dist[v] = dist[u] + 1
-                    q.append(v)
-        want = set(dist.items())
-        assert got == want, f"seed {seed}"
 
 
 def test_transitive_closure_chain_and_cycle(spark):
