@@ -17,6 +17,8 @@ pandas/Arrow UDFs only where Spark lacks the semantics (HTML parsing).
 
 __version__ = "0.1.0"
 
+# installs the zip-directory guard in every worker that unpickles a UDF
+from argo_spark import _zipcache  # noqa: F401
 from argo_spark.terms import (  # noqa: F401
     KIND_IRI,
     KIND_BLANK,

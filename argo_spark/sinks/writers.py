@@ -32,6 +32,7 @@ from argo_spark.terms import (
     KIND_IRI,
     KIND_LITERAL,
     escape_literal_col,
+    jvm_memo,
     term_nt_col,
 )
 
@@ -133,6 +134,25 @@ _TURTLE_BLOCK = ("\n", " ;", "\n  .\n")
 _SQUIRTLE_BLOCK = (" {\n", "", "\n}\n")
 
 
+@jvm_memo
+def _block_cols(
+    prefixes: Optional[tuple], syntax: tuple, local_ok, iriref
+) -> tuple[Column, Column]:
+    """The encoded subject and p-o line Columns of _subject_blocks, once
+    per JVM: one build costs about 1,000 py4j round-trips."""
+    pmap = _prefix_map_col(dict(prefixes) if prefixes is not None else NAMESPACES)
+    s_enc = _turtle_term(
+        F.col("s_kind"), F.col("s_value"), None, None, pmap, local_ok, iriref
+    )
+    p_enc = _qname_or_iri(F.col("p_value"), pmap, local_ok, iriref)
+    o_enc = _turtle_term(
+        F.col("o_kind"), F.col("o_value"), F.col("o_lang"), F.col("o_dt"), pmap,
+        local_ok, iriref,
+    )
+    line = F.concat(F.lit("  "), p_enc, F.lit(" "), o_enc, F.lit(syntax[1]))
+    return s_enc, line
+
+
 def _subject_blocks(
     df: DataFrame, prefixes: Optional[dict[str, str]], syntax: tuple,
     local_ok=_turtle_local_ok, iriref=_turtle_iriref,
@@ -142,17 +162,9 @@ def _subject_blocks(
     ``graph`` is given, kept as a column): the encoded subject, then
     its sorted p-o lines, in the ``syntax`` of _TURTLE_BLOCK or
     _SQUIRTLE_BLOCK."""
-    head, line_end, tail = syntax
-    pmap = _prefix_map_col(prefixes if prefixes is not None else NAMESPACES)
-    s_enc = _turtle_term(
-        F.col("s_kind"), F.col("s_value"), None, None, pmap, local_ok, iriref
-    )
-    p_enc = _qname_or_iri(F.col("p_value"), pmap, local_ok, iriref)
-    o_enc = _turtle_term(
-        F.col("o_kind"), F.col("o_value"), F.col("o_lang"), F.col("o_dt"), pmap,
-        local_ok, iriref,
-    )
-    line = F.concat(F.lit("  "), p_enc, F.lit(" "), o_enc, F.lit(line_end))
+    head, _, tail = syntax
+    key = None if prefixes is None else tuple(sorted(prefixes.items()))
+    s_enc, line = _block_cols(key, syntax, local_ok, iriref)
     keys = ["s_enc"] if graph is None else ["g_value", "s_enc"]
     cols = [s_enc.alias("s_enc"), line.alias("line")]
     if graph is not None:

@@ -453,3 +453,20 @@ def test_writer_part_files_golden(spark, tmp_path):
         for name in GOLDEN_WRITE_DIGESTS
     }
     assert got == GOLDEN_WRITE_DIGESTS
+
+
+def test_block_columns_memoized_per_prefixes(spark):
+    from argo_spark.sinks import writers as W
+
+    args = (None, W._TURTLE_BLOCK, W._turtle_local_ok, W._turtle_iriref)
+    first, again = W._block_cols(*args), W._block_cols(*args)
+    assert all(a is b for a, b in zip(first, again))
+    custom = W._block_cols(tuple(sorted(PREFIXES.items())), *args[1:])
+    assert custom[0] is not first[0]
+
+    df = small_graph(spark).df
+    assert "\nex:s\n" in turtle_string(df, PREFIXES)
+    # the default prefix table has no binding for http://e/, so the
+    # next default call writes the full IRI, not the custom qname
+    default = turtle_string(df)
+    assert "<http://e/s>\n" in default and "ex:s" not in default
