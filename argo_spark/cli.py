@@ -159,6 +159,17 @@ def run_pipeline(
                 pass
 
 
+def _squish(df: DataFrame, block_key: tuple[str, ...] = ()) -> DataFrame:
+    """``--squish``: the exact dedup on the canonical key, after a hash
+    partitioning on the writer's ``block_key`` columns that ``df`` has
+    (one exchange for both; a fixed count, which AQE never coalesces)."""
+    key = [c for c in block_key if c in df.columns]
+    if key:
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        df = df.repartition(n, *key)
+    return df.dropDuplicates(TRIPLE_COLS + (["g_value"] if "g_value" in df.columns else []))
+
+
 def _run_pipeline_on(
     spark, dfs, output, out_format, rewrites, subject_rewrites,
     predicate_rewrites, object_rewrites, squish, t0, err_frames=(),
@@ -238,14 +249,11 @@ def _run_pipeline_on(
         from argo_spark.ops.sparql import sparql_describe
 
         df = sparql_describe(df.select(*canon), describe)
-    if squish:
-        df = df.dropDuplicates(
-            canon if "g_value" in df.columns else TRIPLE_COLS
-        )
-
     ofmt = FORMATS.get(out_format) if out_format else format_from_filename(output)
     if ofmt is None or ofmt.writer is None:
         raise SystemExit(f"no writer for output {output!r}")
+    if squish:
+        df = _squish(df, ofmt.block_key)
     # triple count rides along with the write via the Observation API —
     # no second full pass over the sink (reference counts in-stream,
     # rdf.go:414-424)

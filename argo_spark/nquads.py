@@ -16,8 +16,8 @@ source boundary (terms.py skolem_id), so a dataset that needs
 anonymous graphs should skolemize the labels upstream.
 
 Scale shape: the N-Triples line parser itself (ntriples.py) in quad
-mode — one Arrow-batched ``mapInPandas`` stage over the text scan, the
-vectorized regex fast path with an optional graph group, and the
+mode — one ``mapInArrow`` stage over the text scan, the RE2 fast
+path with an optional graph group, and the
 per-row parser with an optional graph term for escaped-literal
 stragglers. The writer is pure column expressions (whole-stage
 codegen), one text line per row.

@@ -29,6 +29,9 @@ class Format:
     # share one parse stage and quarantine split (sources/documents.py)
     reader: Optional[Callable] = None
     writer: Optional[Callable] = None  # (df, path, ...) -> None
+    # a subject-block writer's grouping columns: --squish hashes on
+    # those the frame has, so dedup and blocks share one exchange
+    block_key: tuple[str, ...] = ()
 
 
 def _read_rdfa(spark, path):
@@ -73,11 +76,13 @@ FORMATS: dict[str, Format] = {
         "turtle", "Turtle", "text/turtle", ".ttl",
         other_mimes=["application/x-turtle"],
         reader=turtle.read_turtle, writer=writers.write_turtle,
+        block_key=writers.SUBJECT_KEY,
     ),
     "trig": Format(
         # Turtle analogue for the quad model; reader round 5c
         "trig", "TriG", "application/trig", ".trig",
         reader=turtle.read_trig, writer=writers.write_trig,
+        block_key=writers.TRIG_KEY,
     ),
     "json": Format(
         # reader round 5c: accepts both the writer's NT-keyed
@@ -104,6 +109,7 @@ FORMATS: dict[str, Format] = {
     "squirtle": Format(
         "squirtle", "Squirtle", "text/x-squirtle", ".squirtle",
         reader=squirtle.read_squirtle, writer=writers.write_squirtle,
+        block_key=writers.SUBJECT_KEY,
     ),
     "warc": Format(
         # crawl ingestion (read-only by nature, like rdfa): WARC

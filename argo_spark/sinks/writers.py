@@ -11,7 +11,9 @@ subject key; Turtle and RDF/JSON stay entirely in column expressions
 (whole-stage codegen), RDF/XML uses one applyInPandas stage for the
 nested element layout. Turtle, TriG and Squirtle blocks come from one
 builder (_subject_blocks) and one term encoder (_turtle_term); only
-the block syntax and the IRI-abbreviation rule differ.
+the block syntax and the IRI-abbreviation rule differ. Blocks group on
+the subject's columns, so a frame hash-partitioned on them (the rdf
+tool's ``--squish``) reaches them with no second exchange.
 """
 
 from __future__ import annotations
@@ -133,6 +135,9 @@ def _turtle_term(
 _TURTLE_BLOCK = ("\n", " ;", "\n  .\n")
 _SQUIRTLE_BLOCK = (" {\n", "", "\n}\n")
 
+# the columns subject blocks group on, without and with graphs
+SUBJECT_KEY, TRIG_KEY = ("s_kind", "s_value"), ("g_value", "s_kind", "s_value")
+
 
 @jvm_memo
 def _block_cols(
@@ -161,12 +166,12 @@ def _subject_blocks(
     """One ``block`` row per subject (per (``g_value``, subject) when
     ``graph`` is given, kept as a column): the encoded subject, then
     its sorted p-o lines, in the ``syntax`` of _TURTLE_BLOCK or
-    _SQUIRTLE_BLOCK."""
+    _SQUIRTLE_BLOCK. The subject is encoded once, after the grouping."""
     head, _, tail = syntax
     key = None if prefixes is None else tuple(sorted(prefixes.items()))
     s_enc, line = _block_cols(key, syntax, local_ok, iriref)
-    keys = ["s_enc"] if graph is None else ["g_value", "s_enc"]
-    cols = [s_enc.alias("s_enc"), line.alias("line")]
+    keys = list(SUBJECT_KEY if graph is None else TRIG_KEY)
+    cols = [*SUBJECT_KEY, line.alias("line")]
     if graph is not None:
         cols.insert(0, graph.alias("g_value"))
     return (
@@ -174,10 +179,9 @@ def _subject_blocks(
         .groupBy(*keys)
         .agg(F.array_sort(F.collect_list("line")).alias("lines"))
         .select(
-            *keys[:-1],
+            *keys[:-2],
             F.concat(
-                F.col("s_enc"), F.lit(head), F.array_join("lines", "\n"),
-                F.lit(tail),
+                s_enc, F.lit(head), F.array_join("lines", "\n"), F.lit(tail),
             ).alias("block"),
         )
     )
@@ -536,7 +540,7 @@ def _local_is_safe(local: str) -> bool:
 
 def _squirtle_local_ok(local: Column) -> Column:
     """_local_is_safe as a column expression."""
-    return local.rlike(f"^{_SQUIRTLE_LOCAL}\\z") & ~F.lower(local).isin(*_UNSAFE_WORDS)
+    return local.rlike(f"^{_SQUIRTLE_LOCAL}\\z") & ~F.lower(local).isin(*sorted(_UNSAFE_WORDS))
 
 
 def _squirtle_iriref(value: Column) -> Column:
@@ -645,8 +649,6 @@ def select_tsv_lines(bindings: DataFrame) -> DataFrame:
     terms joined by tabs, unbound as the empty string. The variable
     header lives in the ``_VARS`` sidecar (see write_select_tsv) —
     a distributed write cannot guarantee which part file is first."""
-    from pyspark.sql import functions as F
-
     cols = [
         F.coalesce(F.col(c), F.lit("")) for c in bindings.columns
     ]

@@ -5,15 +5,21 @@
 ntriples_test.go:95-119 — each as (input, expected error category from
 ntriples.go:44-51). The test *data* is authoritative even though the
 reference's own suite has drifted from its implementation (SURVEY §5).
-Also the job counter the per-call Spark job tests share.
+Also the job counter the per-call Spark job tests share, and
+parse_document, the sequential whole-document N-Triples parse the
+tests read written output back with.
 """
 
 from __future__ import annotations
+
+from typing import Optional
 
 from argo_spark.ntriples import (
     ERR_UNEXPECTED_CHARACTER,
     ERR_UNEXPECTED_EOF,
     ERR_UNTERMINATED_TRIPLE,
+    NTParseError,
+    parse_line,
 )
 from argo_spark.terms import TripleT, blank, iri, literal
 
@@ -127,3 +133,26 @@ def jobs_started(spark, group, fn):
         for prop in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(prop, None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def parse_document(text: str) -> tuple[list[TripleT], Optional[NTParseError]]:
+    """Sequential parse of a whole document, stopping at the first error —
+    the reference's ParseNTriples driver behavior (ntriples.go:474-492).
+
+    Comment lines are consumed together with the following triple, so
+    line numbers match the reference's per-Read() counting closely
+    enough for fixtures; used in tests, not in the distributed path.
+    """
+    triples: list[TripleT] = []
+    lines = text.split("\n")
+    for idx, ln in enumerate(lines):
+        has_nl = idx < len(lines) - 1
+        if ln == "" and not has_nl:
+            break
+        try:
+            t = parse_line(ln, idx + 1, final_newline=has_nl)
+        except NTParseError as e:
+            return triples, e
+        if t is not None:
+            triples.append(t)
+    return triples, None

@@ -108,7 +108,7 @@ def test_read_rdfxml_distributed_and_writer_roundtrip(spark, tmp_path):
 
 def test_cli_pipeline(spark, tmp_path):
     from argo_spark.cli import run_pipeline
-    from argo_spark.ntriples import parse_document
+    from tests.fixtures import parse_document
 
     src = tmp_path / "in.nt"
     src.write_text(
@@ -168,7 +168,7 @@ def test_cli_html_to_rdfxml_roundtrip(spark, tmp_path):
 def test_rdfaparse_tool(spark, tmp_path, monkeypatch):
     """rdfaparse equivalent: HTML -> N-Triples file."""
     from argo_spark import cli
-    from argo_spark.ntriples import parse_document
+    from tests.fixtures import parse_document
 
     page = tmp_path / "p.html"
     page.write_text(
@@ -268,9 +268,10 @@ def _convert(spark, capsys, tag, inputs, out, **kw):
 
 
 def test_cli_clean_convert_parses_once(spark, tmp_path, capsys):
-    """A clean N-Triples -> squished Turtle conversion starts 3 Spark
-    jobs (parse and squish, subject blocks, write): the parse pass
-    counted no errors, so the report does not parse the source again."""
+    """A clean N-Triples -> squished Turtle conversion starts 2 Spark
+    jobs (the parse up to the subject-keyed exchange; the squish,
+    subject blocks and write after it): the parse pass counted no
+    errors, so the report does not parse the source again."""
     src = tmp_path / "clean.nt"
     src.write_text("\n".join(GOOD_LINES) + "\n")
     n, n_jobs, report = _convert(
@@ -279,7 +280,79 @@ def test_cli_clean_convert_parses_once(spark, tmp_path, capsys):
     )
     assert n == len(GOOD_LINES)
     assert report == []
-    assert n_jobs == 3
+    assert n_jobs == 2
+
+
+def _exchanges(df) -> list[str]:
+    """The Exchange nodes of ``df``'s physical plan, expression ids
+    stripped."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        re.sub(r"#\d+|, \[plan_id=\d+\]", "", ln.strip().lstrip(":+- "))
+        for ln in plan.splitlines() if "Exchange" in ln
+    ]
+
+
+def test_squish_shares_the_block_exchange(spark, tmp_path):
+    """``--squish`` to Turtle, TriG or Squirtle plans one Exchange,
+    hash-partitioned on the writer's block key, for the dedup and the
+    subject blocks together; the N-Triples squish keeps its
+    canonical-key exchange."""
+    from argo_spark.cli import _squish
+    from argo_spark.nquads import read_nquads
+    from argo_spark.ntriples import nt_lines, read_ntriples
+    from argo_spark.sinks import writers
+    from argo_spark.sinks.registry import FORMATS
+
+    nt, nq = tmp_path / "g.nt", tmp_path / "g.nq"
+    nt.write_text("\n".join(GOOD_LINES) + "\n")
+    nq.write_text('<http://e/s> <http://e/p> <http://e/o> <http://e/g> .\n')
+    triples, quads = read_ntriples(spark, str(nt))[0], read_nquads(spark, str(nq))[0]
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    subject = f"Exchange hashpartitioning(s_kind, s_value, {n}), REPARTITION_BY_NUM"
+    for blocks, df, fmt, want in [
+        (writers.turtle_blocks, triples, "turtle", subject),
+        (writers.squirtle_blocks, triples, "squirtle", subject),
+        (writers.trig_blocks, triples, "trig", subject),
+        (writers.trig_blocks, quads, "trig", subject.replace("(s_kind", "(g_value, s_kind")),
+    ]:
+        assert _exchanges(blocks(_squish(df, FORMATS[fmt].block_key))) == [want], fmt
+    assert FORMATS["ntriples"].block_key == ()
+    assert _exchanges(nt_lines(_squish(triples))) == [
+        "Exchange hashpartitioning(o_dt, p_value, o_kind, o_lang, s_value, "
+        f"o_value, s_kind, {n}), ENSURE_REQUIREMENTS"
+    ]
+
+
+def test_squish_keeps_the_canonical_key(spark, tmp_path):
+    """Rows that print the same Turtle line but differ on the canonical
+    key (a literal with both ``o_lang`` and ``o_dt``, as RDF/XML reads
+    it, against the same literal without ``o_dt``; ``o_lang`` ``""``
+    against NULL) all survive the squish: it deduplicates rows, not
+    encoded lines."""
+    from argo_spark.cli import _run_pipeline_on
+    from argo_spark.schema import TRIPLE_COLS
+    from argo_spark.sinks.writers import turtle_string
+
+    s, p, xsd = "http://e/s", "http://e/p", "http://www.w3.org/2001/XMLSchema#string"
+    rows = [
+        (KIND_IRI, s, p, KIND_LITERAL, "v", "en", xsd),
+        (KIND_IRI, s, p, KIND_LITERAL, "v", "en", None),
+        (KIND_IRI, s, p, KIND_LITERAL, "w", "", None),
+        (KIND_IRI, s, p, KIND_LITERAL, "w", None, None),
+        (KIND_IRI, s, p, KIND_LITERAL, "w", None, None),
+    ]
+    df = spark.createDataFrame(rows, ", ".join(
+        f"{c} {'tinyint' if c.endswith('kind') else 'string'}" for c in TRIPLE_COLS
+    ))
+    assert turtle_string(df.where("o_value = 'v'")).count('"v"@en ;') == 2
+    n = _run_pipeline_on(
+        spark, [df], str(tmp_path / "out.ttl"), None, None, None, None, None,
+        squish=True, t0=0.0,
+    )
+    assert n == df.dropDuplicates(TRIPLE_COLS).count() == 4
 
 
 def test_cli_reports_dirty_source_next_to_clean(spark, tmp_path, capsys):
@@ -358,7 +431,7 @@ def test_cli_construct_transform(spark, tmp_path):
     """--construct transforms the merged graph with a SPARQL CONSTRUCT
     query before serialization (after rewrites, set-semantic)."""
     from argo_spark.cli import run_pipeline
-    from argo_spark.ntriples import parse_document
+    from tests.fixtures import parse_document
 
     src = tmp_path / "in.nt"
     src.write_text(
@@ -393,7 +466,7 @@ def test_cli_select_and_update(spark, tmp_path):
     import glob
 
     from argo_spark.cli import run_pipeline
-    from argo_spark.ntriples import parse_document
+    from tests.fixtures import parse_document
 
     src = tmp_path / "in.nt"
     src.write_text(
@@ -491,7 +564,7 @@ def test_cli_ask_and_describe(spark, tmp_path, capsys):
     import glob
 
     from argo_spark.cli import main, run_pipeline
-    from argo_spark.ntriples import parse_document
+    from tests.fixtures import parse_document
 
     src = tmp_path / "in.nt"
     src.write_text(

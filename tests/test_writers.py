@@ -470,3 +470,38 @@ def test_block_columns_memoized_per_prefixes(spark):
     # next default call writes the full IRI, not the custom qname
     default = turtle_string(df)
     assert "<http://e/s>\n" in default and "ex:s" not in default
+
+
+def test_squirtle_plan_ignores_string_hash_seed(tmp_path):
+    """The executed plan of ``squirtle_blocks`` (expression ids
+    stripped) is the same under two string-hash seeds: the unsafe-word
+    IN list is built in sorted order, not set order."""
+    import os
+    import subprocess
+    import sys
+
+    script = tmp_path / "plan.py"
+    script.write_text(
+        "import re\n"
+        "from argo_spark.session import get_spark\n"
+        "from argo_spark.sinks.writers import squirtle_blocks\n"
+        "spark = get_spark('hashseed', master='local[1]')\n"
+        "df = spark.createDataFrame([(0, 'http://e/s', 'http://e/p', 0, 'http://e/o', None, None)],\n"
+        "    's_kind tinyint, s_value string, p_value string, o_kind tinyint, '\n"
+        "    'o_value string, o_lang string, o_dt string')\n"
+        "plan = squirtle_blocks(df)._jdf.queryExecution().executedPlan().toString()\n"
+        "print(re.sub(r'#\\d+|plan_id=\\d+', '', plan))\n"
+        "spark.stop()\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    runs = [
+        subprocess.Popen(
+            [sys.executable, str(script)], stdout=subprocess.PIPE,
+            stderr=subprocess.DEVNULL, text=True, cwd=str(tmp_path),
+            env={**os.environ, "PYTHONHASHSEED": seed, "PYTHONPATH": root},
+        )
+        for seed in ("0", "1")
+    ]
+    plans = [p.communicate(timeout=300)[0] for p in runs]
+    assert all(p.returncode == 0 for p in runs)
+    assert "include" in plans[0] and plans[0] == plans[1]
